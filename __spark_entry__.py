@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from littletable_spark import Table
 from littletable_spark.session import small_df
+from littletable_spark.sources.parquet_io import read_parquet
 
 
 _TABLE_CACHE: dict[tuple[str, str], Table] = {}
@@ -596,7 +597,7 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             bands,
             collect_stats=False,
         )
-    out = spark.read.parquet(corpus)
+    out = read_parquet(spark, corpus)
     return out.select("doc_id", F.col("batch_id").cast("int").alias("batch_id"))
 
 
@@ -647,7 +648,7 @@ def q_stream_ingest_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.where(F.pmod(F.col("doc_id"), F.lit(3)) == 2),
         2, corpus, bands, collect_stats=False,
     )
-    out = spark.read.parquet(corpus)
+    out = read_parquet(spark, corpus)
     return out.select("doc_id", F.col("batch_id").cast("int").alias("batch_id"))
 
 

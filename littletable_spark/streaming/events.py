@@ -19,6 +19,7 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.parquet_io import read_parquet
 from ..table import Table
 
 TS_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -105,11 +106,9 @@ def load_events(spark: SparkSession, path: str, name: str = "events") -> Table:
     actually arrives (see :func:`epoch_seconds`).
     """
     with _nanos_conf(spark):
-        df = spark.read.parquet(path)
-        # force the scan's schema resolution while the conf is active:
-        # DataFrame reads are lazy and the conf must not leak into later
-        # unrelated spark.read calls in the session
-        df.schema
+        # the footer is converted while the conf is active; the conf
+        # must not leak into later unrelated spark.read calls
+        df = read_parquet(spark, path)
     return Table(name=name, df=_with_event_time(df), spark=spark)
 
 
@@ -217,7 +216,7 @@ def streaming_session_demo(
         shutil.copy(path, stage)
         path = stage
     with _nanos_conf(spark):
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         stream = spark.readStream.schema(schema).parquet(path)
         events = _with_event_time(stream).drop("ts_sec")
         agg = (
@@ -259,8 +258,7 @@ def streaming_tumbling_demo(
     import uuid
 
     with _nanos_conf(spark):
-        static = spark.read.parquet(path)
-        schema = static.schema
+        schema = read_parquet(spark, path).schema
         stream = spark.readStream.schema(schema).parquet(path)
         events = _with_event_time(stream).drop("ts_sec")
         agg = (
@@ -302,7 +300,7 @@ def streaming_dedup_demo(
         shutil.copy(path, stage)
         path = stage
     with _nanos_conf(spark):
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         stream = spark.readStream.schema(schema).parquet(path)
         events = _with_event_time(stream).drop("ts_sec")
         deduped = events.withWatermark("ts", "1 hour").dropDuplicates(list(keys))
@@ -422,7 +420,7 @@ def streaming_followup_join_demo(
         shutil.copy(path, stage)
         path = stage
     with _nanos_conf(spark):
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         stream = _with_event_time(
             spark.readStream.schema(schema).parquet(path)
         ).drop("ts_sec")

@@ -32,41 +32,12 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 from pyspark.errors import AnalysisException
 
+from ..sources.parquet_io import read_parquet
 from ..table import Table
 
 
 def _as_df(obj: Any) -> DataFrame:
     return obj.df if isinstance(obj, Table) else obj
-
-
-# Session-lifetime metadata caches for the per-batch driver floor
-# (guide §1.2): the sink is the SINGLE WRITER of its assets (the
-# foreachBatch contract — micro-batches are strictly sequential), so
-# after the first batch every parquet footer it re-reads is one it
-# wrote itself. Caching the asset schema turns the per-batch
-# ``spark.read.parquet`` into ``spark.read.schema(...).parquet`` (no
-# footer read — measured 0.097 s -> 0.019 s per probe) and the
-# schema-drift guard into a dict compare (no listStatus + footer read —
-# measured ~0.09 s/batch). Invalidated whenever the metadata could
-# change under us: a compaction swap (compact_asset), a recovery that
-# healed an interrupted swap, or an allow_schema_drift write.
-_ASSET_SCHEMA_CACHE: dict[str, Any] = {}  # path -> StructType (probes)
-_GUARD_SCHEMA_CACHE: dict[str, dict] = {}  # corpus_path -> {col: dtype}
-# Bound the metadata caches: a long-lived service cycling through many
-# asset roots (bench passes mkdtemp a fresh root per invocation) must
-# not accrete schema entries forever. Eviction just re-reads a footer.
-_METADATA_CACHE_CAP = 256
-
-
-def _drop_asset_metadata(path: str) -> None:
-    _ASSET_SCHEMA_CACHE.pop(path, None)
-    _GUARD_SCHEMA_CACHE.pop(path, None)
-
-
-def _cap_metadata_caches() -> None:
-    for store in (_ASSET_SCHEMA_CACHE, _GUARD_SCHEMA_CACHE):
-        if len(store) > _METADATA_CACHE_CAP:
-            store.clear()
 
 
 def ingest_batch(
@@ -165,22 +136,6 @@ def ingest_batch(
     )
     from ..operators.textops import term_stats_table
 
-    # opt-in phase telemetry (guide §1 measure-first): one JSON line per
-    # batch with driver-side phase durations; no behavior change
-    import os as _os
-    import time as _time
-
-    _timing = _os.environ.get("SPARK_GRAFT_INGEST_TIMING") == "1"
-    _phases: dict[str, float] = {}
-    _t0 = _time.perf_counter()
-
-    def _mark(phase: str) -> None:
-        nonlocal _t0
-        if _timing:
-            now = _time.perf_counter()
-            _phases[phase] = _phases.get(phase, 0.0) + (now - _t0)
-            _t0 = now
-
     if sigs_path is not None and emb_col is None:
         raise ValueError("sigs_path requires emb_col (the embedding column)")
     if ivf_path is not None and (emb_col is None or ivf_centroids is None):
@@ -201,20 +156,12 @@ def ingest_batch(
     # Cost when nothing is pending: one fs.exists per enabled path.
     from .maintenance import recover_asset
 
-    # NOTE: the per-batch recovery probe is deliberately NOT cached in
-    # _ASSET_SCHEMA_CACHE-style session state: a compaction can run (and
-    # crash mid-swap) in a DIFFERENT process than this sink, so "no
-    # manifest last batch" proves nothing about this batch. The probe is
-    # a couple of fs.exists calls per asset; crash-safety is worth it.
     for p in (
         corpus_path, bands_path, lines_path, grams_path, sigs_path,
         ivf_path, stats_path,
     ):
-        if p is not None and recover_asset(spark, p):
-            # a healed swap changed the asset layout under the caches
-            _drop_asset_metadata(p)
-    _cap_metadata_caches()
-    _mark("recover")
+        if p is not None:
+            recover_asset(spark, p)
 
     # schema-drift guard: a plain partitioned-parquet read resolves its
     # schema from ONE footer, so a batch carrying a column (or a TYPE)
@@ -229,28 +176,19 @@ def ingest_batch(
     # listStatus + one footer read — the corpus data is never listed
     # recursively or scanned.
     if not allow_schema_drift:
-        # the guard's baseline is cached after each successful batch
-        # (the newest partition's footer IS the schema we just wrote —
-        # single-writer contract), so steady-state batches pay a dict
-        # compare instead of a listStatus + footer read per batch
-        stored = _GUARD_SCHEMA_CACHE.get(corpus_path)
-        if stored is None:
-            from .maintenance import _fs, _list_batch_dirs
+        from .maintenance import _fs, _list_batch_dirs
 
-            fs, _, jvm = _fs(spark, corpus_path)
-            dirs = (
-                _list_batch_dirs(fs, jvm, corpus_path)
-                if fs.exists(jvm.org.apache.hadoop.fs.Path(corpus_path))
-                else {}
-            )
-            if dirs:
-                positives = [b for b in dirs if b >= 0]
-                baseline = max(positives) if positives else min(dirs)
-                stored = {
-                    f.name: f.dataType.simpleString()
-                    for f in spark.read.parquet(dirs[baseline]).schema.fields
-                    if f.name != "batch_id"
-                }
+        fs, _, jvm = _fs(spark, corpus_path)
+        dirs = _list_batch_dirs(fs, jvm, corpus_path)
+        stored = None
+        if dirs:
+            positives = [b for b in dirs if b >= 0]
+            baseline = max(positives) if positives else min(dirs)
+            stored = {
+                f.name: f.dataType.simpleString()
+                for f in read_parquet(spark, dirs[baseline]).schema.fields
+                if f.name != "batch_id"
+            }
         if stored is not None:
             batch = {
                 f.name: f.dataType.simpleString()
@@ -275,7 +213,6 @@ def ingest_batch(
                     "to unify the layout so plain reads see the union "
                     "schema."
                 )
-    _mark("schema_guard")
 
     def _stored(path: str) -> DataFrame | None:
         """The stored index MINUS this batch's own partition: a
@@ -283,18 +220,11 @@ def ingest_batch(
         probing them would match every doc against itself and
         overwrite the partition with nothing. The exclusion is on the
         partition column, so it prunes at scan. None if the index
-        doesn't exist yet (first batch). The asset schema is cached
-        per session (we wrote it — see _ASSET_SCHEMA_CACHE), so
-        steady-state probes skip the footer read."""
-        sch = _ASSET_SCHEMA_CACHE.get(path)
-        if sch is not None:
-            df = spark.read.schema(sch).parquet(path)
-        else:
-            try:
-                df = spark.read.parquet(path)
-            except AnalysisException:
-                return None
-            _ASSET_SCHEMA_CACHE[path] = df.schema
+        doesn't exist yet (first batch)."""
+        try:
+            df = read_parquet(spark, path)
+        except AnalysisException:
+            return None
         return df.where(F.col("batch_id") != F.lit(bid))
 
     counts: dict[str, int] = {"batch_id": bid}
@@ -402,7 +332,6 @@ def ingest_batch(
             )
             drops = drops.unionByName(cross)
         kept = cur.join(drops, on=id_col, how="left_anti")
-        _mark("pipeline_build")
         if collect_stats:
             counts["after_minhash"] = kept.count()
 
@@ -441,7 +370,6 @@ def ingest_batch(
 
         kept = kept.persist()
         try:
-            _mark("stage_counts")
             # ONE parallel action fills the survivor cache (and the band
             # cache its plan reads twice) so every asset write below is
             # a read of memory, not a re-materialization of the curation
@@ -569,27 +497,20 @@ def ingest_batch(
                     )
                 )
             from concurrent.futures import ThreadPoolExecutor
+            from pyspark.util import inheritable_thread_target
 
-            _mark("write_build")
             with ThreadPoolExecutor(
                 max_workers=min(3, len(writes))
             ) as pool:
-                futures = [pool.submit(w) for w in writes]
+                # each write thread gets its own copy of the caller's
+                # local properties (job group, description, scheduler
+                # pool): its jobs stay attributable and cancellable
+                futures = [
+                    pool.submit(inheritable_thread_target(spark)(w))
+                    for w in writes
+                ]
                 for f in futures:
                     f.result()  # propagate the first failure
-            _mark("write_pool")
-            if allow_schema_drift:
-                # the write may have changed the corpus layout under
-                # the cached guard baseline — drop it, the next guarded
-                # batch re-reads the newest footer
-                _GUARD_SCHEMA_CACHE.pop(corpus_path, None)
-            else:
-                # guard passed and the batch is now the newest
-                # partition: its schema IS the next batch's baseline
-                _GUARD_SCHEMA_CACHE[corpus_path] = {
-                    f.name: f.dataType.simpleString()
-                    for f in batch_df.schema.fields
-                }
         finally:
             kept.unpersist()
     finally:
@@ -599,16 +520,6 @@ def ingest_batch(
     counts["dropped"] = (
         (counts["received"] - counts["appended"]) if collect_stats else -1
     )
-    if _timing:
-        import json as _json
-
-        print(
-            "INGEST_TIMING "
-            + _json.dumps(
-                {"batch_id": bid, **{k: round(v, 3) for k, v in _phases.items()}}
-            ),
-            flush=True,
-        )
     return counts
 
 

@@ -44,6 +44,8 @@ import json
 
 from pyspark.sql import SparkSession
 
+from ..sources.parquet_io import read_parquet
+
 _TMP = ".compact_tmp"
 _MANIFEST = ".compact_manifest"
 
@@ -228,12 +230,6 @@ def compact_asset(
     """
     fs, _, jvm = _fs(spark, path)
     recover_asset(spark, path)
-    # the swap changes the asset layout under ingest's session-level
-    # metadata caches; conservatively drop them up front (lazy import —
-    # ingest imports this module)
-    from .ingest import _drop_asset_metadata
-
-    _drop_asset_metadata(path)
 
     dirs = _list_batch_dirs(fs, jvm, path)
     fresh = {
@@ -268,17 +264,20 @@ def compact_asset(
     # columns, and then delete the only copies — so heterogeneous
     # selections are refused outright (one footer read per selected
     # partition, driver-side, no data scan).
-    if not merge_schema:
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    else:
         schemas = {
-            bid: tuple(
-                (f.name, f.dataType.simpleString())
-                for f in spark.read.parquet(d).schema.fields
-            )
-            for bid, d in selected.items()
+            bid: read_parquet(spark, d).schema for bid, d in selected.items()
         }
-        if len(set(schemas.values())) > 1:
+        shapes = {
+            bid: tuple((f.name, f.dataType.simpleString()) for f in sch.fields)
+            for bid, sch in schemas.items()
+        }
+        if len(set(shapes.values())) > 1:
             by_schema: dict = {}
-            for bid, sch in schemas.items():
+            for bid, sch in shapes.items():
                 by_schema.setdefault(sch, []).append(bid)
             raise ValueError(
                 "compact_asset: the selected partitions carry DIFFERENT "
@@ -288,9 +287,8 @@ def compact_asset(
                 "Re-run with merge_schema=True to fold to the union "
                 "schema (missing columns NULL-filled)."
             )
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
+        # fold with the schema just verified: no second footer read
+        reader = reader.schema(next(iter(schemas.values())))
     df = reader.parquet(*selected.values())
     if dedup:
         df = df.distinct()
@@ -302,7 +300,13 @@ def compact_asset(
     tmp = _jp(jvm, tmp_path)
     if fs.exists(tmp):
         fs.delete(tmp, True)
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp_path)
+    # merging scan partitions needs no shuffle; a distinct, or fewer
+    # scan partitions than target files, still repartitions
+    if not dedup and df.rdd.getNumPartitions() >= n_files:
+        df = df.coalesce(n_files)
+    else:
+        df = df.repartition(n_files)
+    df.write.mode("overwrite").parquet(tmp_path)
     # publish: from this point the swap is replayable from the manifest
     # — the SAME dict drives both paths so replay can never diverge
     manifest = {

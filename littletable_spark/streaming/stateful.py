@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.parquet_io import read_parquet
 from .events import TS_NANOS_CONF
 
 
@@ -39,7 +40,7 @@ def running_totals_stream(
     prev = spark.conf.get(TS_NANOS_CONF, None)
     spark.conf.set(TS_NANOS_CONF, "true")
     try:
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
         stream = spark.readStream.schema(schema).parquet(path)
     finally:
         if prev is not None:

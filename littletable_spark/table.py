@@ -37,6 +37,7 @@ from .exceptions import (
 )
 from .functions.rows import to_row_dict
 from .plans.ordering import ROW_ORD, dense_index, ensure_row_ord
+from .sources.parquet_io import read_parquet
 
 EPOCH = "__epoch__"
 SORTKEY = "__sortkey__"
@@ -342,7 +343,7 @@ class Table:
     def parquet_import(
         cls, spark: SparkSession, path: str, name: str = ""
     ) -> "Table":
-        return cls(name=name or path, df=spark.read.parquet(path), spark=spark)
+        return cls(name=name or path, df=read_parquet(spark, path), spark=spark)
 
     @classmethod
     def orc_import(
