@@ -124,6 +124,29 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> Table:
     bench.py) base tables are persisted and reused across queries — the
     steady-state analogue of the reference engine holding its tables in
     memory; correctness runs load fresh."""
+    path = f"{sf_dir}/{name}.parquet"
+    return _load(
+        spark, (sf_dir, name), name, path,
+        lambda: Table.parquet_import(spark, path, name),
+    )
+
+
+def _ev(spark: SparkSession, sf_dir: str):
+    """events via the timestamp-adaptive loader, cached like _t under
+    SPARK_GRAFT_CACHE_TABLES so the events queries measure steady-state
+    like every other bench query instead of re-reading parquet."""
+    from littletable_spark.streaming import load_events
+
+    path = f"{sf_dir}/events.parquet"
+    return _load(
+        spark, (sf_dir, "__events__"), "events", path,
+        lambda: load_events(spark, path),
+    )
+
+
+def _load(spark: SparkSession, key, name: str, path: str, load) -> Table:
+    """``load()``, or under SPARK_GRAFT_CACHE_TABLES=1 one persisted
+    load per ``key``, held for the process (the bench's base tables)."""
     import os
 
     from littletable_spark.session import apply_runtime_confs
@@ -131,81 +154,47 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> Table:
     # the driver hands us ITS session; make sure the load-bearing Arrow
     # batching confs apply to it too (memoized — near-free per call)
     apply_runtime_confs(spark)
-
-    if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
-        key = (sf_dir, name)
-        if key not in _TABLE_CACHE:
-            t = Table.parquet_import(spark, f"{sf_dir}/{name}.parquet", name)
-            df = t._require_df()
-            # single-file parquet often scans as 1-3 splits; widen the
-            # cached layout so CPU-heavy stages get real fan-out — but
-            # only for PAYLOAD tables. Two measured regimes (cal-matched
-            # A/B/A brackets, 32 and 8 cores):
-            #  - wide rows (documents ~120 compressed B/row of text,
-            #    embeddings ~400 B/row of vectors) feed per-row-heavy
-            #    regex/BLAS/Arrow stages: cached as 1 partition they
-            #    serialize stage 1 of every consumer (guide §2.5), so
-            #    spread them — 512 rows/task is the sweet spot (a
-            #    64/256/512/1024 sweep: 64 rows/task made every
-            #    mapInPandas row 1.5-3x SLOWER — a Python-worker round
-            #    trip per ~65-row batch — dedup_semantic_incr
-            #    1.85->1.16 s, sim_f32_topk 0.54->0.35; plateau past
-            #    512).
-            #  - narrow relational rows (orders/customer/lineitem/
-            #    events, ~20 B/row) are consumed at codegen scan speed:
-            #    fanning them out only buys task overhead (asof_join
-            #    1.29->0.84, window_topk_per_group 0.55->0.27,
-            #    events_session 0.67->0.51 at the old 20k-rows layout
-            #    vs 512) — keep the 20k-rows-per-task heuristic.
-            # The regime split keys on compressed bytes/row (>= 64)
-            # from the parquet footprint — a data property, not a table
-            # whitelist, so it holds at any scale factor. ROW_ORD is
-            # already attached (computed map-side, pre-shuffle) so
-            # positional semantics are unchanged.
-            n_rows = df.count()
-            target = _cache_fanout(
-                spark, f"{sf_dir}/{name}.parquet", n_rows
-            )
-            if df.rdd.getNumPartitions() < target:
-                df = df.repartition(target)
-                t._df = df
-            df.persist()
-            _TABLE_CACHE[key] = t
-        # derive a fresh handle so per-query mutations (orderby, indexes)
-        # don't leak across queries through the shared cached table
-        cached = _TABLE_CACHE[key]
-        return cached._derive(cached._require_df(), name=name, keep_sort=False)
-    return Table.parquet_import(spark, f"{sf_dir}/{name}.parquet", name)
-
-
-def _ev(spark: SparkSession, sf_dir: str):
-    """events via the timestamp-adaptive loader, cached like _t under
-    SPARK_GRAFT_CACHE_TABLES so the events queries measure steady-state
-    like every other bench query instead of re-reading parquet."""
-    import os
-
-    from littletable_spark.session import apply_runtime_confs
-    from littletable_spark.streaming import load_events
-
-    apply_runtime_confs(spark)
-    if os.environ.get("SPARK_GRAFT_CACHE_TABLES") == "1":
-        key = (sf_dir, "__events__")
-        if key not in _TABLE_CACHE:
-            t = load_events(spark, f"{sf_dir}/events.parquet")
-            df = t._require_df()
-            n_rows = df.count()
-            # same width-keyed fan-out rule as _t (see above)
-            target = _cache_fanout(
-                spark, f"{sf_dir}/events.parquet", n_rows
-            )
-            if df.rdd.getNumPartitions() < target:
-                df = df.repartition(target)
-                t._df = df
-            df.persist()
-            _TABLE_CACHE[key] = t
-        cached = _TABLE_CACHE[key]
-        return cached._derive(cached._require_df(), name="events", keep_sort=False)
-    return load_events(spark, f"{sf_dir}/events.parquet")
+    if os.environ.get("SPARK_GRAFT_CACHE_TABLES") != "1":
+        return load()
+    if key not in _TABLE_CACHE:
+        t = load()
+        df = t._require_df()
+        # single-file parquet often scans as 1-3 splits; widen the
+        # cached layout so CPU-heavy stages get real fan-out — but
+        # only for PAYLOAD tables. Two measured regimes (cal-matched
+        # A/B/A brackets, 32 and 8 cores):
+        #  - wide rows (documents ~120 compressed B/row of text,
+        #    embeddings ~400 B/row of vectors) feed per-row-heavy
+        #    regex/BLAS/Arrow stages: cached as 1 partition they
+        #    serialize stage 1 of every consumer (guide §2.5), so
+        #    spread them — 512 rows/task is the sweet spot (a
+        #    64/256/512/1024 sweep: 64 rows/task made every
+        #    mapInPandas row 1.5-3x SLOWER — a Python-worker round
+        #    trip per ~65-row batch — dedup_semantic_incr
+        #    1.85->1.16 s, sim_f32_topk 0.54->0.35; plateau past
+        #    512).
+        #  - narrow relational rows (orders/customer/lineitem/
+        #    events, ~20 B/row) are consumed at codegen scan speed:
+        #    fanning them out only buys task overhead (asof_join
+        #    1.29->0.84, window_topk_per_group 0.55->0.27,
+        #    events_session 0.67->0.51 at the old 20k-rows layout
+        #    vs 512) — keep the 20k-rows-per-task heuristic.
+        # The regime split keys on compressed bytes/row (>= 64)
+        # from the parquet footprint — a data property, not a table
+        # whitelist, so it holds at any scale factor. ROW_ORD is
+        # already attached (computed map-side, pre-shuffle) so
+        # positional semantics are unchanged.
+        n_rows = df.count()
+        target = _cache_fanout(spark, path, n_rows)
+        if df.rdd.getNumPartitions() < target:
+            df = df.repartition(target)
+            t._df = df
+        df.persist()
+        _TABLE_CACHE[key] = t
+    # derive a fresh handle so per-query mutations (orderby, indexes)
+    # don't leak across queries through the shared cached table
+    cached = _TABLE_CACHE[key]
+    return cached._derive(cached._require_df(), name=name, keep_sort=False)
 
 
 # --------------------------------------------------------------------- #
@@ -635,12 +624,17 @@ def q_stream_ingest_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two assets are disjoint paths, so their folds are independent
     # jobs — overlap them (guide §2.6) instead of running the pair
     # sequentially; each fold is one read+write job plus driver-side fs
-    # work, and the second fold's tasks back-fill the first's tail
+    # work, and the second fold's tasks back-fill the first's tail. Each
+    # fold thread inherits the caller's local properties (job group,
+    # description, scheduler pool), as ingest_batch's write pool does.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    fold = inheritable_thread_target(spark)(compact_asset)
     with ThreadPoolExecutor(max_workers=2) as pool:
         for f in [
-            pool.submit(compact_asset, spark, p, max_generations=1)
+            pool.submit(fold, spark, p, max_generations=1)
             for p in (corpus, bands)
         ]:
             f.result()
@@ -777,20 +771,19 @@ def q_text_tfidf_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         term_stats_table,
         tfidf_top_terms,
     )
+    from littletable_spark.session import scoped_persist
     from littletable_spark.table import Table
 
     d = _t(spark, sf_dir, "documents")
     stats = term_stats_table(d, "text", "doc_id")
-    # persist the (vocab-bounded) stats asset: the scalar collect below
-    # fills the cache, so the scoring join reuses it instead of
-    # re-tokenizing the corpus a second time within one invocation —
-    # the deployment shape, where the stats table is a durable asset.
-    # Registered with the textops cache registry so repeated calls hold
-    # ONE stats cache, not one per invocation (guide §5).
-    stats.df.persist()
-    from littletable_spark.operators.textops import _own_caches
-
-    _own_caches("q_text_tfidf_incr", [stats.df])
+    # persist the (vocab-bounded) stats asset: the scalar collect in
+    # tfidf_top_terms fills the cache, so the scoring join reuses it
+    # instead of re-tokenizing the corpus a second time within one
+    # invocation — the deployment shape, where the stats table is a
+    # durable asset. Kept in the engine's cache registry so repeated
+    # calls hold ONE stats cache, not one per invocation (guide §5).
+    with scoped_persist("q_text_tfidf_incr") as scope:
+        scope.keep(scope.persist(stats.df))
     batch = Table.from_df(d.df.where(F.pmod(F.col("doc_id"), F.lit(9)) == 0))
     return tfidf_top_terms(
         batch, "text", "doc_id", k=3, against_stats=stats
@@ -3145,7 +3138,11 @@ def q_text_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # isNotNull filter reproduces the inner join's only row effect
     # (a NULL id never matches itself), keeping results identical by
     # construction, not by data. Row-identity verified at sf0.001/0.01/
-    # 0.1 (see OPTIMIZATION_r15.md).
+    # 0.1 (see OPTIMIZATION_r15.md). Premise: doc_id is unique in the
+    # documents table. Under duplicate ids the old inner join fanned out
+    # to k² rows per id repeated k times (each of the k count rows
+    # matched all k documents), so the two shapes agree only while ids
+    # are unique.
     out = pack_sequences(
         Table.from_df(counts.df.where(F.col("doc_id").isNotNull())),
         "text", "doc_id", budget_tokens=512, n_shards=8,

@@ -26,7 +26,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import small_df
+from ..session import scoped_persist, small_df
 from ..table import Table
 
 # Self-join pair generators consume their signature/shingle intermediate
@@ -351,32 +351,27 @@ def minhash_lsh_pairs(
                 f"(a minhash_band_table result); got {against_bands.fields}"
             )
 
+    with scoped_persist("minhash_lsh_pairs") as scope:
+        # the returned plan reads both band tables; the registry keeps the
+        # corpus side (the asset reused across incremental batches) while
+        # its plan stays the same
+        a = scope.persist(_banded(table.df), _PAIRGEN_CACHE)
+        if against_bands is not None:
+            b = against_bands.df
+        elif against is not None:
+            b = scope.persist(_banded(against.df), _PAIRGEN_CACHE)
+        else:
+            b = a
+        scope.keep(a, b)
+    cond = [
+        F.col("a.band") == F.col("b.band"),
+        F.col("a.band_key") == F.col("b.band_key"),
+    ]
     if against is None and against_bands is None:
-        banded = _banded(table.df).persist(_PAIRGEN_CACHE)
-        a = banded.alias("a")
-        b = banded.alias("b")
-        cond = [
-            F.col("a.band") == F.col("b.band"),
-            F.col("a.band_key") == F.col("b.band_key"),
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-        ]
-    else:
-        # persist both band tables (same steady-state policy as the
-        # self-join path): the corpus side is the reused asset across
-        # successive incremental batches, the new side is tiny
-        a = _banded(table.df).persist(_PAIRGEN_CACHE).alias("a")
-        corpus_bands = (
-            against_bands.df
-            if against_bands is not None
-            else _banded(against.df).persist(_PAIRGEN_CACHE)
-        )
-        b = corpus_bands.alias("b")
-        cond = [
-            F.col("a.band") == F.col("b.band"),
-            F.col("a.band_key") == F.col("b.band_key"),
-        ]
+        cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     pairs = (
-        a.join(b, on=cond)
+        a.alias("a")
+        .join(b.alias("b"), on=cond)
         .select(
             F.col(f"a.{id_col}").alias("id1"), F.col(f"b.{id_col}").alias("id2")
         )
@@ -456,9 +451,11 @@ def ngram_jaccard_pairs(
             )
         )
     )
-    with_set = toked.select(F.col(id_col), gset.alias("__gs__")).persist(
-        _PAIRGEN_CACHE
-    )
+    with scoped_persist("ngram_jaccard_pairs") as scope:
+        with_set = scope.persist(
+            toked.select(F.col(id_col), gset.alias("__gs__")), _PAIRGEN_CACHE
+        )
+        scope.keep(with_set)  # the returned plan reads it
     sh = with_set.select(F.col(id_col), F.explode("__gs__").alias("s"))
     sizes = with_set.select(F.col(id_col), F.size("__gs__").alias("sz"))
     if prefix_filter is None:
@@ -648,9 +645,12 @@ def hamming_hash_pairs(
             for b in range(n_blocks)
         ]
     )
-    banded = sh.select(
-        F.col(id_col), F.col("sh"), F.explode(blocks).alias("blk")
-    ).persist(_PAIRGEN_CACHE)
+    with scoped_persist("hamming_hash_pairs") as scope:
+        banded = scope.persist(
+            sh.select(F.col(id_col), F.col("sh"), F.explode(blocks).alias("blk")),
+            _PAIRGEN_CACHE,
+        )
+        scope.keep(banded)  # the returned plan reads it
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -736,7 +736,8 @@ def embedding_dup_pairs(
     # exchange reuse does not dedupe the two aggregation subtrees (the
     # semantic_dup_pairs finding, guide §1.2) — persist so the
     # corpus-vector collect_list shuffle runs once, not once per side
-    packed = packed.persist(_PAIRGEN_CACHE)
+    with scoped_persist("embedding_dup_pairs") as scope:
+        scope.keep(scope.persist(packed, _PAIRGEN_CACHE))  # the plan reads it
     a = packed.select(F.col("__blk__").alias("b1"), F.col("items").alias("items1"))
     b = packed.select(F.col("__blk__").alias("b2"), F.col("items").alias("items2"))
     block_pairs = a.join(b, F.col("b1") <= F.col("b2"))
@@ -870,7 +871,9 @@ def embedding_lsh_dup_pairs(
             F.col(vec_col).cast("array<double>").alias("__vec__"),
         ).withColumn("sig", lsh_signature("__vec__", planes))
 
-    sided = _sig(table.df).persist(_PAIRGEN_CACHE)
+    with scoped_persist("embedding_lsh_dup_pairs") as scope:
+        sided = scope.persist(_sig(table.df), _PAIRGEN_CACHE)
+        scope.keep(sided)  # the returned plan reads it
     if probe_bits == 1:
         # original signature + every single-bit flip, all native string
         # ops (substring/concat) — distinct by construction
@@ -1094,16 +1097,24 @@ def semantic_dup_pairs(
             .agg(F.collect_list(F.struct("__id__", "__vec__")).alias("items"))
         )
 
-    packed_a = pack(attach(a_narrow, id_dtype_a).persist(_PAIRGEN_CACHE))
-    if against is None:
-        # the self-join consumes the packed frame TWICE (aa and bb) and
-        # exchange reuse does not dedupe the two aggregation subtrees
-        # (plan-verified: both ObjectHashAggregate pipelines execute) —
-        # persist the packed frame so the count-agg + broadcast +
-        # collect_list shuffles run once, not once per side (guide
-        # §1.2). Same bytes as the assigned cache: cluster-blocked
-        # structs of the corpus vectors.
-        packed_a = packed_a.persist(_PAIRGEN_CACHE)
+    with scoped_persist("semantic_dup_pairs") as scope:
+        assigned_a = scope.persist(attach(a_narrow, id_dtype_a), _PAIRGEN_CACHE)
+        if against is None:
+            # the self-join consumes the packed frame TWICE (aa and bb)
+            # and exchange reuse does not dedupe the two aggregation
+            # subtrees (plan-verified: both ObjectHashAggregate pipelines
+            # execute) — persist the packed frame so the count-agg +
+            # broadcast + collect_list shuffles run once, not once per
+            # side (guide §1.2). Same bytes as the assigned cache:
+            # cluster-blocked structs of the corpus vectors.
+            packed_a = scope.persist(pack(assigned_a), _PAIRGEN_CACHE)
+            scope.keep(assigned_a, packed_a)  # the returned plan reads them
+        else:
+            b_narrow = _narrow(against)
+            id_dtype_b = dict(b_narrow.dtypes)["__id__"]
+            assigned_b = scope.persist(attach(b_narrow, id_dtype_b), _PAIRGEN_CACHE)
+            packed_a = pack(assigned_a)
+            scope.keep(assigned_a, assigned_b)  # the returned plan reads them
     aa = packed_a.select(
         "cluster", F.col("__blk__").alias("b1"), F.col("items").alias("items1")
     )
@@ -1116,11 +1127,8 @@ def semantic_dup_pairs(
         block_pairs = aa.join(bb, on="cluster").where(F.col("b1") <= F.col("b2"))
     else:
         symmetric = False
-        b_narrow = _narrow(against)
-        id_dtype_b = dict(b_narrow.dtypes)["__id__"]
         int_b = id_dtype_b in _INTS
-        packed_b = pack(attach(b_narrow, id_dtype_b).persist(_PAIRGEN_CACHE))
-        bb = packed_b.select(
+        bb = pack(assigned_b).select(
             "cluster", F.col("__blk__").alias("b2"), F.col("items").alias("items2")
         )
         block_pairs = aa.join(bb, on="cluster")
@@ -1281,13 +1289,12 @@ def dup_clusters(
     # pipeline: the driver path's collect and the distributed path's
     # src/dst symmetrization both read the probe's cache instead of
     # re-running the candidate join + distinct (guide §1.2 — measured as
-    # a full second execution of the self-join stage per call). Persist
-    # only if the CALLER has not already persisted the same frame (their
-    # cache, their lifecycle), and release on every exit path.
-    we_cached = pairs.storageLevel == StorageLevel.NONE
-    if we_cached:
-        pairs = pairs.persist(_PAIRGEN_CACHE)
-    try:
+    # a full second execution of the self-join stage per call). A pair
+    # frame the CALLER already persisted stays theirs; each new label
+    # round's checkpoint releases the previous one, and the last round
+    # stays pinned because the returned plan reads it.
+    with scoped_persist("dup_clusters") as scope:
+        pairs = scope.persist(pairs, _PAIRGEN_CACHE)
         n_pairs = pairs.limit(driver_edges + 1).count()
         if n_pairs <= driver_edges:
             rows = pairs.select(a_col, b_col).collect()
@@ -1325,13 +1332,12 @@ def dup_clusters(
             return small_df(spark, out, schema)
         e1 = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         e2 = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-        edges = e1.union(e2).persist(_PAIRGEN_CACHE)
+        edges = scope.persist(e1.union(e2), _PAIRGEN_CACHE)
         # seed = one neighbour-pull round fused into label construction
-        labels = (
+        labels = scope.checkpoint(
             edges.groupBy("src")
             .agg(F.least(F.first("src"), F.min("dst")).alias("lbl"))
             .select(F.col("src").alias("id"), "lbl")
-            .localCheckpoint()
         )
         small = labels.count() <= broadcast_nodes  # cached: near-free job
         _b = F.broadcast if small else (lambda df: df)
@@ -1356,7 +1362,8 @@ def dup_clusters(
             # `stepped` itself: a stepped-vs-stepped self-join would
             # compute the edge join twice per round (no ReusedExchange
             # across AQE stages), while `labels` is checkpointed data
-            jumped = (
+            # eager lineage truncation: the O(1)-deep plan per round
+            jumped = scope.checkpoint(
                 stepped.alias("s")
                 .join(
                     _b(
@@ -1375,8 +1382,6 @@ def dup_clusters(
                         != F.col("s.olbl")
                     ).alias("chg"),
                 )
-                # eager lineage truncation: the O(1)-deep plan per round
-                .localCheckpoint()
             )
             converged = jumped.where(F.col("chg")).isEmpty()
             labels = jumped.select("id", "lbl")
@@ -1385,13 +1390,6 @@ def dup_clusters(
         return labels.select(
             F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id")
         )
-    finally:
-        # edges exists only on the distributed path; the driver path
-        # returns before it is built
-        if "edges" in locals():
-            edges.unpersist()
-        if we_cached:
-            pairs.unpersist()
 
 
 def keep_canonical(
@@ -1594,53 +1592,36 @@ def duplicate_spans(
             k,
             f"{table.table_name}_dup_spans",
         )
-    # two consumers (dup-gram aggregation + mark-back semi-join): an
-    # unpersisted pos would re-run tokenize + gram hashing — the
-    # measured majority of pipeline cost — once per consumer
+    # the corpus gram table (against=) is the asset reused across
+    # incremental batches; in self mode it has two consumers (dup-gram
+    # aggregation + mark-back semi-join), which would each re-run
+    # tokenize + gram hashing, the measured majority of pipeline cost
     # (1.0s -> 0.33s steady-state at sf0.1)
-    if against is not None:
-        pos = _positioned_gram_rows(df, id_col, text_col, k, hash_keys)
-        # the corpus gram table is the asset reused across successive
-        # incremental batches — same steady-state persist policy as the
-        # pair generators
-        cpos = _positioned_gram_rows(
-            against._require_df(), id_col, text_col, k, hash_keys
-        ).persist(_PAIRGEN_CACHE)
-        if min_docs <= 1:
-            dup = cpos.select("g").distinct()
-        elif min_docs == 2:
-            dup = (
-                cpos.groupBy("g")
-                .agg(F.min(id_col).alias("__a__"), F.max(id_col).alias("__b__"))
-                .where(F.col("__a__") != F.col("__b__"))
-                .select("g")
-            )
-        else:
-            dup = (
-                cpos.groupBy("g")
-                .agg(F.count_distinct(F.col(id_col)).alias("__nd__"))
-                .where(F.col("__nd__") >= min_docs)
-                .select("g")
-            )
-        return _merge_marked_spans(
-            pos.join(dup, on="g", how="left_semi").select(id_col, "p"),
-            id_col,
-            k,
-            f"{table.table_name}_dup_spans",
+    with scoped_persist("duplicate_spans") as scope:
+        cpos = scope.persist(
+            _positioned_gram_rows(
+                df if against is None else against._require_df(),
+                id_col, text_col, k, hash_keys,
+            ),
+            _PAIRGEN_CACHE,
         )
-    pos = _positioned_gram_rows(df, id_col, text_col, k, hash_keys).persist(
-        _PAIRGEN_CACHE
+        scope.keep(cpos)
+    pos = (
+        cpos if against is None
+        else _positioned_gram_rows(df, id_col, text_col, k, hash_keys)
     )
-    if min_docs <= 2:
+    if against is not None and min_docs <= 1:
+        dup = cpos.select("g").distinct()
+    elif min_docs <= 2:
         dup = (
-            pos.groupBy("g")
+            cpos.groupBy("g")
             .agg(F.min(id_col).alias("__a__"), F.max(id_col).alias("__b__"))
             .where(F.col("__a__") != F.col("__b__"))
             .select("g")
         )
     else:
         dup = (
-            pos.groupBy("g")
+            cpos.groupBy("g")
             .agg(F.count_distinct(F.col(id_col)).alias("__nd__"))
             .where(F.col("__nd__") >= min_docs)
             .select("g")
@@ -1847,17 +1828,15 @@ def line_dedup(
             )
         lines = _lines(df)
         bad = against_lines.df.select(F.col("line").alias("__line__"))
-    elif against is not None:
-        lines = _lines(df)
-        bad = _bad(
-            _lines(against._require_df()).persist(_PAIRGEN_CACHE), min_docs
-        )
     else:
-        # two consumers (frequency aggregation + anti-join probe):
-        # persist so the split+explode runs once, same policy as the
-        # pair generators
-        lines = _lines(df).persist(_PAIRGEN_CACHE)
-        bad = _bad(lines, max(min_docs, 2))
+        # the corpus side, or self-deduping the two consumers (frequency
+        # aggregation + anti-join probe) of one frame: persist so the
+        # split+explode runs once, same policy as the pair generators
+        with scoped_persist("line_dedup") as scope:
+            src = _lines(df if against is None else against._require_df())
+            scope.keep(scope.persist(src, _PAIRGEN_CACHE))
+        lines = src if against is None else _lines(df)
+        bad = _bad(src, max(min_docs, 2) if against is None else min_docs)
     kept = lines.join(bad, on="__line__", how="left_anti")
     out = kept.groupBy(id_col).agg(
         F.array_join(

@@ -102,7 +102,8 @@ def _with_run_ids(df, keys: list[str], order_cols: list[Column]):
     """
     key_struct = F.struct(*[F.col(k) for k in keys])
     # persist before the summary collect: both the collect and the
-    # downstream consumer must observe the same partition assignment
+    # downstream consumer must observe the same partition assignment, so
+    # the cache is never released (a layout pin, as in dense_index)
     df_sorted = (
         df.orderBy(*order_cols)
         .withColumn(_RUNPID, F.spark_partition_id())

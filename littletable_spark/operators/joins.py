@@ -36,6 +36,11 @@ def _parse_attrlist(attrlist: Any) -> list[Any] | None:
     return list(attrlist)
 
 
+def _q(name: str) -> str:
+    # a quoted reference: column names may hold backticks, spaces or dots
+    return "`" + name.replace("`", "``") + "`"
+
+
 def join_tables(
     left: Table,
     right: Table,
@@ -95,7 +100,7 @@ def join_tables(
         rdf2 = F.broadcast(rdf2)
     cond = None
     for lk, rk in key_map.items():
-        c = ldf[lk] == rdf2[_RPREFIX + rk]
+        c = ldf[_q(lk)] == rdf2[_q(_RPREFIX + rk)]
         cond = c if cond is None else cond & c
     joined = ldf.join(rdf2, on=cond, how=how)
 
@@ -107,9 +112,6 @@ def join_tables(
     # with _RPREFIX (never produced by this engine, but user data is
     # user data) falls back to the dataframe-qualified Column path.
     fast = not any(c.startswith(_RPREFIX) for c in ldf.columns)
-
-    def _q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
 
     # default projection: left fields, then right fields minus name
     # collisions (reference collision-drop, littletable.py:2481-2486)
@@ -162,6 +164,9 @@ def join_tables(
             f"coalesce({_q(ROW_ORD)}, {_q(_RPREFIX + ROW_ORD)})"
             f" AS {_q(ROW_ORD)}"
         )
+        # the fast path's premise: after the rename no two joined
+        # columns share a name, so every plain-name reference resolves
+        assert len(set(joined.columns)) == len(joined.columns), joined.columns
         out = joined.selectExpr(*exprs)
     else:
         out_cols = []
@@ -169,41 +174,41 @@ def join_tables(
             for f in left.fields:
                 if f in key_map and how in ("right", "full"):
                     out_cols.append(
-                        F.coalesce(ldf[f], rdf2[_RPREFIX + key_map[f]]).alias(f)
+                        F.coalesce(ldf[_q(f)], rdf2[_q(_RPREFIX + key_map[f])]).alias(f)
                     )
                 else:
-                    out_cols.append(ldf[f].alias(f))
+                    out_cols.append(ldf[_q(f)].alias(f))
             for f in right.fields:
                 if f in left.fields:
                     continue
-                out_cols.append(rdf2[_RPREFIX + f].alias(f))
+                out_cols.append(rdf2[_q(_RPREFIX + f)].alias(f))
         else:
             for item in spec:
                 if isinstance(item, tuple):
                     tbl, attr, *alias = item
                     out_name = alias[0] if alias else attr
                     if tbl is left:
-                        out_cols.append(ldf[attr].alias(out_name))
+                        out_cols.append(ldf[_q(attr)].alias(out_name))
                     else:
-                        out_cols.append(rdf2[_RPREFIX + attr].alias(out_name))
+                        out_cols.append(rdf2[_q(_RPREFIX + attr)].alias(out_name))
                 else:
                     if item in left.fields:
                         if item in key_map and how in ("right", "full"):
                             out_cols.append(
-                                F.coalesce(ldf[item], rdf2[_RPREFIX + key_map[item]]).alias(item)
+                                F.coalesce(ldf[_q(item)], rdf2[_q(_RPREFIX + key_map[item])]).alias(item)
                             )
                         else:
-                            out_cols.append(ldf[item].alias(item))
+                            out_cols.append(ldf[_q(item)].alias(item))
                     elif item in right.fields:
-                        out_cols.append(rdf2[_RPREFIX + item].alias(item))
+                        out_cols.append(rdf2[_q(_RPREFIX + item)].alias(item))
                     else:
                         raise ValueError(f"join output attr {item!r} not found")
 
         # result order: left order, unmatched-right rows after (big epoch offset)
         out_cols.append(
-            F.coalesce(ldf[EPOCH], rdf2[_RPREFIX + EPOCH] + F.lit(1_000_000)).alias(EPOCH)
+            F.coalesce(ldf[_q(EPOCH)], rdf2[_q(_RPREFIX + EPOCH)] + F.lit(1_000_000)).alias(EPOCH)
         )
-        out_cols.append(F.coalesce(ldf[ROW_ORD], rdf2[_RPREFIX + ROW_ORD]).alias(ROW_ORD))
+        out_cols.append(F.coalesce(ldf[_q(ROW_ORD)], rdf2[_q(_RPREFIX + ROW_ORD)]).alias(ROW_ORD))
         out = joined.select(*out_cols)
     name = f"{left.table_name}:{right.table_name}"
     t = left._derive(out, name=name, keep_sort=False)

@@ -103,6 +103,8 @@ class SearchIndex:
             F.col(ROW_ORD),
             F.explode(words).alias("word"),
         )
+        # the index owns this cache for its lifetime; the public
+        # SearchIndex.unpersist (delete_search_index) releases it
         index_df = df.persist()
         idx = cls(attr, index_df, table._version, sw)
         idx.normalize = normalize

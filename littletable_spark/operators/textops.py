@@ -12,42 +12,13 @@ from __future__ import annotations
 from functools import lru_cache
 from typing import Mapping
 
+from pyspark import StorageLevel
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..session import small_df
+from ..session import scoped_persist, small_df
 from ..table import Table
 from .dedup import _ngram_rows, _tokens
-
-# ------------------------------------------------------------------ #
-# model-cache hygiene (guide §5): several operators persist model /
-# intermediate frames that must OUTLIVE their builder call because the
-# returned plan's lineage reads them (the scoring joins consume the
-# cache when the caller materializes). They cannot be unpersisted
-# eagerly, but leaving them forever accumulates a corpus-sized cache
-# per distinct input in a long-lived session. Each operator registers
-# its caches here; the NEXT call to the same operator releases the
-# previous call's frames unless they are the same plan (repeated
-# identical calls keep reusing one cache entry — Spark dedupes cached
-# plans, so unpersisting a semantically-equal old frame would drop the
-# new call's cache too). Unpersist is always correctness-safe: an
-# evicted frame recomputes from lineage.
-_OWNED_MODEL_CACHES: dict[str, list] = {}
-
-
-def _own_caches(op: str, frames: list) -> None:
-    old = _OWNED_MODEL_CACHES.get(op, [])
-    try:
-        new_hashes = {f.semanticHash() for f in frames}
-    except Exception:
-        new_hashes = set()
-    for f in old:
-        try:
-            if f.semanticHash() not in new_hashes:
-                f.unpersist()
-        except Exception:
-            pass
-    _OWNED_MODEL_CACHES[op] = list(frames)
 
 # deterministic marker-word lists per language; scoring is the count of
 # DISTINCT markers present (array_intersect semantics in both engines)
@@ -720,22 +691,23 @@ def contamination_check(
         # persist first so the guard job materializes the same set the
         # broadcast reuses (size bounded by the cap) instead of
         # computing the bench shingles twice
-        from pyspark import StorageLevel
-
-        bench_hashes = bench_hashes.persist(StorageLevel.MEMORY_AND_DISK)
-        # survives the call (the broadcast + final join read it);
-        # released on the operator's next call (guide §5)
-        _own_caches("contamination_check", [bench_hashes])
-        probed = bench_hashes.limit(max_bench_ngrams + 1).count()
-        if probed > max_bench_ngrams:
-            raise ValueError(
-                f"contamination_check: benchmark side has more than "
-                f"{max_bench_ngrams} distinct {n}-grams — too large to "
-                "broadcast. The bench side must be the (small) eval "
-                "set; check the argument order, shrink the eval set, "
-                "or raise max_bench_ngrams explicitly if the cluster "
-                "can hold the broadcast."
+        with scoped_persist("contamination_check") as scope:
+            bench_hashes = scope.persist(
+                bench_hashes, StorageLevel.MEMORY_AND_DISK
             )
+            probed = bench_hashes.limit(max_bench_ngrams + 1).count()
+            if probed > max_bench_ngrams:
+                raise ValueError(
+                    f"contamination_check: benchmark side has more than "
+                    f"{max_bench_ngrams} distinct {n}-grams — too large to "
+                    "broadcast. The bench side must be the (small) eval "
+                    "set; check the argument order, shrink the eval set, "
+                    "or raise max_bench_ngrams explicitly if the cluster "
+                    "can hold the broadcast."
+                )
+            # survives the call (the broadcast + final join read it);
+            # released on the operator's next call (guide §5)
+            scope.keep(bench_hashes)
     c_sh = _ngram_rows(
         corpus.df.select(corpus_id, corpus_text), corpus_id, corpus_text, n
     ).select(F.col("s").alias("h"))
@@ -824,8 +796,6 @@ def unigram_logprob(
     pattern) folded in as a literal — a scalar cross join would put a
     BroadcastNestedLoopJoin + single-partition exchange in every score
     plan."""
-    from pyspark import StorageLevel
-
     df = table._require_df()
     tok = df.select(F.col(id_col), F.explode(_tokens(text_col)).alias("__w__"))
     tdf = df if train_table is None else train_table._require_df()
@@ -837,14 +807,16 @@ def unigram_logprob(
     # joins below reuse the cached model instead of re-running the
     # frequency shuffle (guide §1.2 — was: one dedicated corpus scan
     # for N plus a recomputed aggregation in the score job).
-    freq_all = ttok.groupBy("__w__").agg(
-        F.count(F.lit(1)).alias("__c__")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_total = freq_all.agg(F.sum("__c__").alias("n")).collect()[0]["n"]
-    # cache lifecycle: the scoring join below reads this cache when the
-    # caller materializes, so it must survive the call — the registry
-    # releases it on the operator's NEXT call (guide §5)
-    _own_caches("unigram_logprob", [freq_all])
+    with scoped_persist("unigram_logprob") as scope:
+        freq_all = scope.persist(
+            ttok.groupBy("__w__").agg(F.count(F.lit(1)).alias("__c__")),
+            StorageLevel.MEMORY_AND_DISK,
+        )
+        n_total = freq_all.agg(F.sum("__c__").alias("n")).collect()[0]["n"]
+        # cache lifecycle: the scoring join below reads this cache when
+        # the caller materializes, so it must survive the call — the
+        # registry releases it on the operator's NEXT call (guide §5)
+        scope.keep(freq_all)
     freq = freq_all
     if vocab_size is not None:
         freq = freq_all.orderBy(
@@ -912,61 +884,60 @@ def bigram_logprob(
             F.col("__bg__.w2").alias("__w2__"),
         )
 
-    from pyspark import StorageLevel
-
     # tokenize the TRAINING corpus once: the unigram and bigram model
     # builds both read one cached token-array frame instead of each
     # re-running the regex split over the corpus (guide §1.2 — the
     # tokenize is the measured majority of each model pass). The cache
     # holds only the token arrays, no other columns.
-    ttok = tdf.select(_tokens(text_col).alias("__tk__")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # persist the unigram table and take N = sum of its counts (the
-    # exact training token total): the N collect folds into the unigram
-    # build instead of a second full corpus tokenize scan, and the two
-    # scoring joins below reuse the cached model (guide §1.2).
-    uni = (
-        ttok.select(F.explode("__tk__").alias("__w__"))
-        .groupBy("__w__")
-        .agg(F.count(F.lit(1)).alias("__cu__"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    tpairs = F.expr(
-        "transform(sequence(1, size(__tk__) - 1), "
-        "i -> struct(__tk__[i - 1] AS w1, __tk__[i] AS w2))"
-    )
-    big = (
-        ttok.where(F.size("__tk__") >= 2)
-        .select(F.explode(tpairs).alias("__bg__"))
-        .select(
-            F.col("__bg__.w1").alias("__w1__"),
-            F.col("__bg__.w2").alias("__w2__"),
+    with scoped_persist("bigram_logprob") as scope:
+        ttok = scope.persist(
+            tdf.select(_tokens(text_col).alias("__tk__")),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        .groupBy("__w1__", "__w2__")
-        .agg(F.count(F.lit(1)).alias("__c2__"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # ONE fused fill: a union of the two models' one-row aggregates
-    # executes both model builds in a single query, returning N while
-    # filling BOTH caches — so the tokenized-corpus cache (a full copy
-    # of the training text) can be released RIGHT HERE instead of
-    # living for the session; the vocab-bounded model caches are what
-    # survive, owned by the registry (guide §1.2 scan fusion + §5
-    # memory hygiene). Rows are keyed, not positional, so the union's
-    # partition order can never misattribute the scalars.
-    fill = dict(
-        uni.agg(F.lit(0).alias("k"), F.sum("__cu__").alias("n"))
-        .unionAll(
-            big.agg(
-                F.lit(1).alias("k"), F.count(F.lit(1)).cast("bigint").alias("n")
+        # persist the unigram table and take N = sum of its counts (the
+        # exact training token total): the N collect folds into the unigram
+        # build instead of a second full corpus tokenize scan, and the two
+        # scoring joins below reuse the cached model (guide §1.2).
+        uni = scope.persist(
+            ttok.select(F.explode("__tk__").alias("__w__"))
+            .groupBy("__w__")
+            .agg(F.count(F.lit(1)).alias("__cu__")),
+            StorageLevel.MEMORY_AND_DISK,
+        )
+        tpairs = F.expr(
+            "transform(sequence(1, size(__tk__) - 1), "
+            "i -> struct(__tk__[i - 1] AS w1, __tk__[i] AS w2))"
+        )
+        big = scope.persist(
+            ttok.where(F.size("__tk__") >= 2)
+            .select(F.explode(tpairs).alias("__bg__"))
+            .select(
+                F.col("__bg__.w1").alias("__w1__"),
+                F.col("__bg__.w2").alias("__w2__"),
             )
+            .groupBy("__w1__", "__w2__")
+            .agg(F.count(F.lit(1)).alias("__c2__")),
+            StorageLevel.MEMORY_AND_DISK,
         )
-        .collect()
-    )
-    n_total = fill.get(0)
-    ttok.unpersist()
-    _own_caches("bigram_logprob", [uni, big])
+        # ONE fused fill: a union of the two models' one-row aggregates
+        # executes both model builds in a single query, returning N while
+        # filling BOTH caches — so the tokenized-corpus cache (a full copy
+        # of the training text) is released when this scope exits instead
+        # of living for the session; the vocab-bounded model caches are
+        # what survive, owned by the registry (guide §1.2 scan fusion + §5
+        # memory hygiene). Rows are keyed, not positional, so the union's
+        # partition order can never misattribute the scalars.
+        fill = dict(
+            uni.agg(F.lit(0).alias("k"), F.sum("__cu__").alias("n"))
+            .unionAll(
+                big.agg(
+                    F.lit(1).alias("k"), F.count(F.lit(1)).cast("bigint").alias("n")
+                )
+            )
+            .collect()
+        )
+        n_total = fill.get(0)
+        scope.keep(uni, big)
     if model_size is not None:
         big = big.orderBy(
             F.col("__c2__").desc(), F.col("__w1__").asc(), F.col("__w2__").asc()
@@ -1169,17 +1140,14 @@ def tfidf_top_terms(
             "df", F.coalesce(F.col("df"), F.lit(0).cast("bigint"))
         )
     else:
-        from pyspark import StorageLevel
-
         # two consumers of the (doc, term) aggregate — the scored rows
         # and the docfreq reduction — would each re-run the tokenize +
         # explode + first shuffle without a persist (AQE's runtime
         # stage reuse does not always dedupe the broadcast-side copy);
         # the cached frame is (doc, distinct-term)-bounded (guide §1.2)
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-        # survives the call (the returned plan reads it); released on
-        # the operator's next call by the registry (guide §5)
-        _own_caches("tfidf_top_terms", [tf])
+        # the returned plan reads it: kept until the next call (guide §5)
+        with scoped_persist("tfidf_top_terms") as scope:
+            scope.keep(scope.persist(tf, StorageLevel.MEMORY_AND_DISK))
         d_count = float(len(table))
         docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         docfreq_joined = tf.join(docfreq, on="term")

@@ -67,7 +67,8 @@ def dense_index(
     # must see identical partition assignment, but range-partitioner
     # sample seeds are RDD-id-derived and AQE may re-plan between jobs —
     # the cache (filled by the counts job) pins one computed layout for
-    # both consumers
+    # both consumers, so it is never released: a recompute could number
+    # rows differently with no error (a layout pin)
     df_local = df_sorted.withColumn(_LOCAL, F.row_number().over(w)).persist()
     # 3. tiny per-partition counts -> cumulative offsets, broadcast-mapped
     counts = sorted(
@@ -80,7 +81,6 @@ def dense_index(
         offsets[row[_PID]] = acc
         acc += row["n"]
     if not offsets:
-        df_local.unpersist()
         return df.withColumn(tmp, F.lit(0).cast("long")).drop(out_col).withColumnRenamed(tmp, out_col)
     mapping = F.create_map(
         *[F.lit(x) for pid_off in offsets.items() for x in pid_off]

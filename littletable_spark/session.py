@@ -14,7 +14,9 @@ the same code scales to a multi-executor cluster:
 from __future__ import annotations
 
 import os
+import threading
 
+from pyspark import StorageLevel
 from pyspark.sql import SparkSession
 
 
@@ -121,3 +123,73 @@ def get_spark(app_name: str = "littletable_spark", cpus: int | None = None) -> S
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Cache ownership: every frame an operator persists has ONE owner — the
+# scoped_persist it was persisted in, released when the scope exits (a
+# raise included), or, for frames the returned lazy plan reads, this
+# registry, which releases an operator's frames on its NEXT call unless
+# a new frame is the same plan (Spark dedupes cached plans, so releasing
+# an equal old frame would drop the new call's cache). A released
+# persist recomputes from lineage; a released local checkpoint cannot,
+# so a scope's latest checkpoint outlives a normal exit. The lock covers
+# operators called from ingest's write-pool threads.
+_KEPT: dict[str, list] = {}
+_KEPT_LOCK = threading.Lock()
+
+
+class scoped_persist:
+    """``with scoped_persist(op) as scope``: ``persist`` records a frame
+    (never one whose ``storageLevel`` is already set — that cache is the
+    caller's), ``release`` drops one early, ``checkpoint`` supersedes the
+    scope's previous checkpoint and ``keep`` hands frames to the
+    registry under ``op``."""
+
+    def __init__(self, op: str):
+        self.op, self._owned, self._ckpt = op, [], None
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, exc_type, *exc):
+        for df in self._owned:
+            df.unpersist()
+        if exc_type is not None:
+            self._drop_checkpoint()
+
+    def _drop_checkpoint(self) -> None:
+        # DataFrame.unpersist() does not reach a local checkpoint's blocks
+        if self._ckpt is not None:
+            self._ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+    def persist(self, df, level=None):
+        if df.storageLevel == StorageLevel.NONE:
+            self._owned.append(df.persist() if level is None else df.persist(level))
+        return df
+
+    def release(self, df) -> None:
+        if any(f is df for f in self._owned):
+            self._owned = [f for f in self._owned if f is not df]
+            df.unpersist()
+
+    def checkpoint(self, df):
+        # eager: the new checkpoint is materialized before the old one,
+        # which its plan may read, goes
+        new = df.localCheckpoint()
+        self._drop_checkpoint()
+        self._ckpt = new
+        return new
+
+    def keep(self, *frames) -> None:
+        hashes = {f.semanticHash() for f in frames}
+        mine = [f for f in self._owned if any(f is k for k in frames)]
+        self._owned = [f for f in self._owned if all(f is not m for m in mine)]
+        with _KEPT_LOCK:
+            for f in _KEPT.get(self.op, []):
+                if f.sparkSession.sparkContext._jsc is None:
+                    continue  # its session stopped, and its cache with it
+                if f.semanticHash() in hashes:
+                    mine.append(f)
+                else:
+                    f.unpersist()
+            _KEPT[self.op] = mine

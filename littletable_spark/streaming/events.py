@@ -380,7 +380,8 @@ def enrich_stream(stream: Table, dim: Table, on: dict[str, str]) -> Table:
         # streaming UnsupportedOperationChecker rejects even when the
         # column is pruned; localCheckpoint rewrites the dim to a
         # plan-clean static relation — it is the small broadcast side,
-        # so the eager materialization is the cost of one dim scan
+        # so the eager materialization is the cost of one dim scan. The
+        # checkpoint is never released: the returned stream plan reads it
         ddf = ddf.localCheckpoint(eager=True)
     cond = None
     for l_col, r_col in on.items():

@@ -32,6 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 from pyspark.errors import AnalysisException
 
+from ..session import scoped_persist
 from ..sources.parquet_io import read_parquet
 from ..table import Table
 
@@ -228,9 +229,8 @@ def ingest_batch(
         return df.where(F.col("batch_id") != F.lit(bid))
 
     counts: dict[str, int] = {"batch_id": bid}
-    batch = batch_df.persist()
-    bands_cur = None
-    try:
+    with scoped_persist("ingest_batch") as scope:
+        batch = scope.persist(batch_df)
         counts["received"] = batch.count() if collect_stats else -1
         cur = batch
 
@@ -293,9 +293,10 @@ def ingest_batch(
         # keep-smaller-id policy.
         from ..operators.dedup import _PAIRGEN_CACHE, _band_table_df
 
-        bands_cur = _band_table_df(
-            cur, id_col, text_col, n, num_hashes, band_size
-        ).persist(_PAIRGEN_CACHE)
+        bands_cur = scope.persist(
+            _band_table_df(cur, id_col, text_col, n, num_hashes, band_size),
+            _PAIRGEN_CACHE,
+        )
         # within-batch near-dup drop as ONE window over the band key
         # (guide §2.4): a candidate pair (id1 < id2 sharing a band row)
         # drops id2 — equivalently, every id above its band group's
@@ -368,155 +369,148 @@ def ingest_batch(
             if collect_stats:
                 counts["after_embedding"] = kept.count()
 
-        kept = kept.persist()
-        try:
-            # ONE parallel action fills the survivor cache (and the band
-            # cache its plan reads twice) so every asset write below is
-            # a read of memory, not a re-materialization of the curation
-            # pipeline behind its own shuffle. The count doubles as the
-            # observability figure when collect_stats is on; when off it
-            # is still run as the cache fill — it REPLACES the per-write
-            # REBALANCE shuffles (measured ~0.4 s of pure AQE-stage
-            # overhead per tiny write), so the hot path runs strictly
-            # fewer jobs than before (guide §1.2, §2.6).
-            n_kept = kept.count()
-            counts["appended"] = n_kept if collect_stats else -1
-            kt = Table.from_df(kept, name=f"ingest_kept_{bid}")
+        kept = scope.persist(kept)
+        # ONE parallel action fills the survivor cache (and the band
+        # cache its plan reads twice) so every asset write below is
+        # a read of memory, not a re-materialization of the curation
+        # pipeline behind its own shuffle. The count doubles as the
+        # observability figure when collect_stats is on; when off it
+        # is still run as the cache fill — it REPLACES the per-write
+        # REBALANCE shuffles (measured ~0.4 s of pure AQE-stage
+        # overhead per tiny write), so the hot path runs strictly
+        # fewer jobs than before (guide §1.2, §2.6).
+        n_kept = kept.count()
+        counts["appended"] = n_kept if collect_stats else -1
+        kt = Table.from_df(kept, name=f"ingest_kept_{bid}")
 
-            # SIZE-ADAPTIVE asset writes (guide §6): output files are
-            # size-targeted, never partition-count-targeted. A frame
-            # whose (post-fill, cache-informed) plan stats fit in ONE
-            # target file coalesces — no shuffle, one output file; a
-            # bigger frame goes through the AQE REBALANCE shuffle, which
-            # splits by advisoryPartitionSize (parallel, skew-safe) —
-            # the decision is data-derived per asset per batch, so a
-            # few-hundred-KB nightly batch writes one file while a
-            # multi-GB backfill batch fans out to ~target-sized files.
-            _TARGET_FILE_BYTES = 256 * 1024 * 1024  # in-memory estimate
+        # SIZE-ADAPTIVE asset writes (guide §6): output files are
+        # size-targeted, never partition-count-targeted. A frame
+        # whose (post-fill, cache-informed) plan stats fit in ONE
+        # target file coalesces — no shuffle, one output file; a
+        # bigger frame goes through the AQE REBALANCE shuffle, which
+        # splits by advisoryPartitionSize (parallel, skew-safe) —
+        # the decision is data-derived per asset per batch, so a
+        # few-hundred-KB nightly batch writes one file while a
+        # multi-GB backfill batch fans out to ~target-sized files.
+        _TARGET_FILE_BYTES = 256 * 1024 * 1024  # in-memory estimate
 
-            def _append(df: DataFrame, root: str) -> None:
-                try:
-                    est = int(
-                        str(
-                            df._jdf.queryExecution()
-                            .optimizedPlan()
-                            .stats()
-                            .sizeInBytes()
-                        )
+        def _append(df: DataFrame, root: str) -> None:
+            try:
+                est = int(
+                    str(
+                        df._jdf.queryExecution()
+                        .optimizedPlan()
+                        .stats()
+                        .sizeInBytes()
                     )
-                except Exception:
-                    est = None
-                out = (
-                    df.coalesce(1)
-                    if est is not None and est <= _TARGET_FILE_BYTES
-                    else df.hint("rebalance")
                 )
-                out.write.mode("overwrite").parquet(
-                    f"{root}/batch_id={bid}"
-                )
+            except Exception:
+                est = None
+            out = (
+                df.coalesce(1)
+                if est is not None and est <= _TARGET_FILE_BYTES
+                else df.hint("rebalance")
+            )
+            out.write.mode("overwrite").parquet(
+                f"{root}/batch_id={bid}"
+            )
 
-            # Every enabled asset write consumes the SAME persisted
-            # survivor frame (plus the cached band table) and writes a
-            # disjoint path, so the writes are independent jobs — submit
-            # them from a small thread pool instead of sequentially
-            # (guide §2.6: overlap independent jobs so one write's task
-            # tail back-fills with the next write's tasks; concurrent
-            # first-fill of the kept cache is safe — the block manager
-            # serializes per-partition computes). 3 in flight is enough
-            # to fill the tail without the jobs fighting for executors.
-            writes: list = [
-                lambda: _append(kept, corpus_path),
-                # survivors' band rows from the SAME cached band table
-                # (the rows minhash_band_table(kt) would recompute)
-                lambda: _append(
-                    bands_cur.join(
-                        kept.select(id_col), on=id_col, how="left_semi"
-                    ),
-                    bands_path,
+        # Every enabled asset write consumes the SAME persisted
+        # survivor frame (plus the cached band table) and writes a
+        # disjoint path, so the writes are independent jobs — submit
+        # them from a small thread pool instead of sequentially
+        # (guide §2.6: overlap independent jobs so one write's task
+        # tail back-fills with the next write's tasks; concurrent
+        # first-fill of the kept cache is safe — the block manager
+        # serializes per-partition computes). 3 in flight is enough
+        # to fill the tail without the jobs fighting for executors.
+        writes: list = [
+            lambda: _append(kept, corpus_path),
+            # survivors' band rows from the SAME cached band table
+            # (the rows minhash_band_table(kt) would recompute)
+            lambda: _append(
+                bands_cur.join(
+                    kept.select(id_col), on=id_col, how="left_semi"
                 ),
+                bands_path,
+            ),
+        ]
+        if lines_path is not None:
+            writes.append(
+                lambda: _append(
+                    boilerplate_line_table(
+                        kt, text_col, id_col,
+                        min_docs=line_min_docs, sep=line_sep,
+                    ).df,
+                    lines_path,
+                )
+            )
+        if grams_path is not None:
+            writes.append(
+                lambda: _append(
+                    span_gram_table(
+                        kt, text_col, id_col,
+                        k=span_k, min_docs=span_min_docs,
+                    ).df,
+                    grams_path,
+                )
+            )
+        if sigs_path is not None:
+            writes.append(
+                lambda: _append(
+                    embedding_signature_table(
+                        kt, id_col, emb_col,
+                        n_planes=emb_planes, dim=emb_dim,
+                        seed=emb_seed,
+                    ).df,
+                    sigs_path,
+                )
+            )
+        if ivf_path is not None:
+            from ..operators.similarity import ivf_index_table
+
+            # ANN-index maintenance (frozen model, zero training):
+            # the batch's assignment + model rows land in their
+            # partition — the model rows are identical every batch
+            # and collapse in _load_ivf_index, so a plain parquet
+            # read of ivf_path is a searchable ivf_index_table
+            writes.append(
+                lambda: _append(
+                    ivf_index_table(
+                        kt, id_col, emb_col, centroids=ivf_centroids,
+                        pq_codebooks=ivf_codebooks,
+                    ).df,
+                    ivf_path,
+                )
+            )
+        if stats_path is not None:
+            # retrieval-stats maintenance (no probe — pure index
+            # upkeep): the batch's own term_stats_table rows land
+            # in their partition; batches hold DISJOINT survivor
+            # docs, so fold_term_stats over a parquet read of
+            # stats_path is exactly term_stats_table of the whole
+            # written corpus, without ever re-tokenizing it
+            writes.append(
+                lambda: _append(
+                    term_stats_table(kt, text_col, id_col).df,
+                    stats_path,
+                )
+            )
+        from concurrent.futures import ThreadPoolExecutor
+        from pyspark.util import inheritable_thread_target
+
+        with ThreadPoolExecutor(
+            max_workers=min(3, len(writes))
+        ) as pool:
+            # each write thread gets its own copy of the caller's
+            # local properties (job group, description, scheduler
+            # pool): its jobs stay attributable and cancellable
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(w))
+                for w in writes
             ]
-            if lines_path is not None:
-                writes.append(
-                    lambda: _append(
-                        boilerplate_line_table(
-                            kt, text_col, id_col,
-                            min_docs=line_min_docs, sep=line_sep,
-                        ).df,
-                        lines_path,
-                    )
-                )
-            if grams_path is not None:
-                writes.append(
-                    lambda: _append(
-                        span_gram_table(
-                            kt, text_col, id_col,
-                            k=span_k, min_docs=span_min_docs,
-                        ).df,
-                        grams_path,
-                    )
-                )
-            if sigs_path is not None:
-                writes.append(
-                    lambda: _append(
-                        embedding_signature_table(
-                            kt, id_col, emb_col,
-                            n_planes=emb_planes, dim=emb_dim,
-                            seed=emb_seed,
-                        ).df,
-                        sigs_path,
-                    )
-                )
-            if ivf_path is not None:
-                from ..operators.similarity import ivf_index_table
-
-                # ANN-index maintenance (frozen model, zero training):
-                # the batch's assignment + model rows land in their
-                # partition — the model rows are identical every batch
-                # and collapse in _load_ivf_index, so a plain parquet
-                # read of ivf_path is a searchable ivf_index_table
-                writes.append(
-                    lambda: _append(
-                        ivf_index_table(
-                            kt, id_col, emb_col, centroids=ivf_centroids,
-                            pq_codebooks=ivf_codebooks,
-                        ).df,
-                        ivf_path,
-                    )
-                )
-            if stats_path is not None:
-                # retrieval-stats maintenance (no probe — pure index
-                # upkeep): the batch's own term_stats_table rows land
-                # in their partition; batches hold DISJOINT survivor
-                # docs, so fold_term_stats over a parquet read of
-                # stats_path is exactly term_stats_table of the whole
-                # written corpus, without ever re-tokenizing it
-                writes.append(
-                    lambda: _append(
-                        term_stats_table(kt, text_col, id_col).df,
-                        stats_path,
-                    )
-                )
-            from concurrent.futures import ThreadPoolExecutor
-            from pyspark.util import inheritable_thread_target
-
-            with ThreadPoolExecutor(
-                max_workers=min(3, len(writes))
-            ) as pool:
-                # each write thread gets its own copy of the caller's
-                # local properties (job group, description, scheduler
-                # pool): its jobs stay attributable and cancellable
-                futures = [
-                    pool.submit(inheritable_thread_target(spark)(w))
-                    for w in writes
-                ]
-                for f in futures:
-                    f.result()  # propagate the first failure
-        finally:
-            kept.unpersist()
-    finally:
-        if bands_cur is not None:
-            bands_cur.unpersist()
-        batch.unpersist()
+            for f in futures:
+                f.result()  # propagate the first failure
     counts["dropped"] = (
         (counts["received"] - counts["appended"]) if collect_stats else -1
     )

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.parquet_io import read_parquet
-from .events import TS_NANOS_CONF
+from .events import _nanos_conf
 
 
 def running_totals_stream(
@@ -37,49 +37,46 @@ def running_totals_stream(
         stage_dir = tempfile.mkdtemp(prefix="lts_state_")
         shutil.copy(path, stage_dir)
         path = stage_dir
-    prev = spark.conf.get(TS_NANOS_CONF, None)
-    spark.conf.set(TS_NANOS_CONF, "true")
-    try:
+    # the conf must stay set while the stream runs (its micro-batches
+    # read the files), and is restored — unset when it had no value
+    with _nanos_conf(spark):
         schema = read_parquet(spark, path).schema
         stream = spark.readStream.schema(schema).parquet(path)
-    finally:
-        if prev is not None:
-            spark.conf.set(TS_NANOS_CONF, prev)
 
-    out_schema = f"{key} long, n_events long, total_value double"
-    state_schema = "n long, total double"
+        out_schema = f"{key} long, n_events long, total_value double"
+        state_schema = "n long, total double"
 
-    def update(key_tuple, pdfs, state: GroupState):
-        import pandas as pd
+        def update(key_tuple, pdfs, state: GroupState):
+            import pandas as pd
 
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf[value_col].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            [(key_tuple[0], n, total)], columns=[key, "n_events", "total_value"]
+            n, total = state.get if state.exists else (0, 0.0)
+            for pdf in pdfs:
+                n += len(pdf)
+                total += float(pdf[value_col].sum())
+            state.update((n, total))
+            yield pd.DataFrame(
+                [(key_tuple[0], n, total)], columns=[key, "n_events", "total_value"]
+            )
+
+        result = (
+            stream.groupBy(key)
+            .applyInPandasWithState(
+                update,
+                outputStructType=out_schema,
+                stateStructType=state_schema,
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
         )
-
-    result = (
-        stream.groupBy(key)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        qname = f"lts_state_{uuid.uuid4().hex[:8]}"
+        q = (
+            result.writeStream.outputMode("update")
+            .format("memory")
+            .queryName(qname)
+            .trigger(availableNow=True)
+            .start()
         )
-    )
-    qname = f"lts_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+        q.awaitTermination()
     return spark.sql(
         f"SELECT {key}, n_events, total_value FROM {qname}"
     )

@@ -121,6 +121,24 @@ def test_ingest_write_pool_keeps_callers_job_group(spark, root):
         assert ran and set(ran.values()) == {"g"}, ran
 
 
+def test_stream_ingest_compact_folds_keep_callers_job_group(spark, root):
+    """q_stream_ingest_compact folds its two assets on pool threads;
+    those compaction jobs must carry the caller's job group too."""
+    import __spark_entry__ as entry
+
+    docs = [(i, _BASE[i % 3] + f" doc{i // 3}") for i in range(9)]
+    _docs(spark, docs).write.parquet(f"{root}/documents.parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "compaction under a job group")
+    try:
+        _, ran = _run(spark, lambda: entry.q_stream_ingest_compact(spark, root))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert ran and set(ran.values()) == {"g"}, ran
+
+
 def test_compact_coalesce_keeps_rows_and_file_count(spark, root):
     """Folding without a shuffle keeps the row multiset and writes
     exactly the sized file count."""

@@ -271,3 +271,40 @@ def test_range_join_by_keys(spark):
     )
     out = range_join(pts, iv, "x", "lo", "hi", by={"g": "grp"}, bucket_width=10.0)
     assert sorted((r.g, r.x) for r in out) == [("a", 5.0)]
+
+
+def test_join_fast_path_matches_column_path_on_awkward_names(spark):
+    """After the __r__ rename every joined name is unique, so the
+    one-selectExpr fast path (taken when no LEFT name carries the
+    prefix) must yield exactly the Column path's rows (taken when one
+    does) — with backticks, spaces and prefix-named columns in play."""
+    left_rows = [{"k": i, "a`b": f"l{i}", "x y": i * 10} for i in range(4)]
+    right_rows = [
+        {"k": i, "a`b": f"r{i}", "p q": i * 100, "__r__w": -i} for i in (1, 2, 3, 5)
+    ]
+    fast_left = Table("fast_left", spark=spark)
+    fast_left.insert_many(left_rows)
+    col_left = Table("col_left", spark=spark)
+    col_left.insert_many([dict(r, **{"__r__z": 0}) for r in left_rows])
+    right = Table("awkward_right", spark=spark)
+    right.insert_many(right_rows)
+
+    def rows(t, fields):
+        # the raw frame: Table.df's name-string projection cannot parse
+        # a backtick inside a field name
+        return sorted(
+            (tuple(r.asDict()[f] for f in fields) for r in t._require_df().collect()),
+            key=repr,
+        )
+
+    for how in (None, Table.FULL_OUTER_JOIN):
+        if how is None:
+            fast = fast_left.join(right, k="k")
+            slow = col_left.join(right, k="k")
+        else:
+            fast = fast_left.outer_join(how, right, k="k")
+            slow = col_left.outer_join(how, right, k="k")
+        assert fast.fields == ["k", "a`b", "x y", "p q", "__r__w"]
+        assert [f for f in slow.fields if f != "__r__z"] == fast.fields
+        assert rows(fast, fast.fields) == rows(slow, fast.fields)
+        assert len(rows(fast, fast.fields)) == (3 if how is None else 5)

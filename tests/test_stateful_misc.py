@@ -27,6 +27,32 @@ def test_stateful_running_totals_matches_batch(spark):
     assert final == expect
 
 
+def test_running_totals_stream_leaves_nanos_conf_unset(spark, tmp_path):
+    """nanosAsLong is held only while the stream runs: a session that
+    never set it must not keep it afterwards."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from littletable_spark.streaming import running_totals_stream
+    from littletable_spark.streaming.events import TS_NANOS_CONF
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({
+            "user_id": [1, 2, 1],
+            "ts": pa.array([1_700_000_000_000_000, 1_700_000_060_000_000,
+                            1_700_000_120_000_000], pa.timestamp("us")),
+            "value": [1.0, 2.0, 4.0],
+        }),
+        path,
+    )
+    spark.conf.unset(TS_NANOS_CONF)
+    rows = running_totals_stream(spark, path).collect()
+    assert spark.conf.get(TS_NANOS_CONF, None) is None
+    final = {r["user_id"]: (r["n_events"], r["total_value"]) for r in rows}
+    assert final == {1: (2, 5.0), 2: (1, 2.0)}
+
+
 def test_unique_index_cache_point_lookup(spark):
     t = Table("c", spark=spark)
     t.insert_many([{"k": i, "v": f"row{i}"} for i in range(20)])

@@ -486,13 +486,13 @@ def test_term_stats_counts_empty_and_null_docs(spark):
 def test_model_caches_stable_across_repeated_scoring_calls(spark):
     """guide §5 hygiene: the model frames the scoring operators persist
     (unigram freq, bigram uni+big models, tfidf (doc,term) aggregate)
-    are owned by a per-operator registry — repeated calls must not
-    accumulate cache entries, and a changed corpus must release the
-    previous corpus's caches."""
-    from littletable_spark.operators.textops import (
-        _OWNED_MODEL_CACHES,
-        bigram_logprob,
-    )
+    are owned by the engine's per-operator registry — repeated calls
+    must not accumulate cache entries, and a changed corpus must release
+    the previous corpus's caches."""
+    from littletable_spark.operators.textops import bigram_logprob
+    from littletable_spark.session import _KEPT
+
+    ops = ("unigram_logprob", "bigram_logprob", "tfidf_top_terms")
 
     def n_persistent() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -517,31 +517,25 @@ def test_model_caches_stable_across_repeated_scoring_calls(spark):
     run_all(t2)
     assert n_persistent() <= base
     # registry holds exactly one cache set per operator
-    assert {k for k in _OWNED_MODEL_CACHES} >= {
-        "unigram_logprob",
-        "bigram_logprob",
-        "tfidf_top_terms",
-    }
-    for frames in _OWNED_MODEL_CACHES.values():
-        assert len(frames) <= 2
+    assert set(_KEPT) >= set(ops)
+    for op in ops:
+        assert len(_KEPT[op]) <= 2
     # cleanup so later tests see a quiet cache
-    for frames in _OWNED_MODEL_CACHES.values():
-        for f in frames:
+    for op in ops:
+        for f in _KEPT.pop(op):
             f.unpersist()
 
 
 def test_bigram_logprob_releases_tokenized_corpus_cache(spark):
     """the full tokenized-corpus frame must NOT outlive the builder —
     only the vocab-bounded model caches survive (guide §5)."""
-    from littletable_spark.operators.textops import (
-        _OWNED_MODEL_CACHES,
-        bigram_logprob,
-    )
+    from littletable_spark.operators.textops import bigram_logprob
+    from littletable_spark.session import _KEPT
 
     t = _mk(spark)
     out = bigram_logprob(t, "text", "doc_id")
-    owned = {f.semanticHash() for f in _OWNED_MODEL_CACHES["bigram_logprob"]}
+    owned = {f.semanticHash() for f in _KEPT["bigram_logprob"]}
     assert len(owned) == 2  # uni + big models, not ttok
     out.df.collect()  # scoring works off the surviving model caches
-    for f in _OWNED_MODEL_CACHES["bigram_logprob"]:
+    for f in _KEPT.pop("bigram_logprob"):
         f.unpersist()
