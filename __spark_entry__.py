@@ -81,12 +81,15 @@ def _earliest_match_sql(html_expr: str, pats) -> str:
     return f"list_sort(list_filter([{entries}], x -> x.m <> ''))[1].href"
 
 
+_PAYLOAD_ROWS_PER_TASK = 512
+
+
 def _cache_fanout(spark: SparkSession, path: str, n_rows: int) -> int:
     """Target partition count for a cached bench base table (see the
     regime comment in ``_t``): payload tables (>= 64 compressed
-    bytes/row) spread at SPARK_GRAFT_CACHE_ROWS_PER_TASK (default 512)
-    rows/task so per-row-heavy regex/BLAS/Arrow stages parallelize;
-    narrow relational tables keep the 20k-rows heuristic (codegen scans
+    bytes/row) spread at ``_PAYLOAD_ROWS_PER_TASK`` rows/task so
+    per-row-heavy regex/BLAS/Arrow stages parallelize; narrow
+    relational tables keep the 20k-rows heuristic (codegen scans
     them at memory speed — extra partitions are pure task overhead).
     Both cap at defaultParallelism, so the driver's lower-core bench
     scales proportionally."""
@@ -105,17 +108,7 @@ def _cache_fanout(spark: SparkSession, path: str, n_rows: int) -> int:
     except OSError:
         size = 0
     width = size / max(n_rows, 1)
-    if width >= 64:
-        # clamp the env override: 0 or garbage must not break table load
-        try:
-            rpt = max(
-                1,
-                int(os.environ.get("SPARK_GRAFT_CACHE_ROWS_PER_TASK", "512")),
-            )
-        except ValueError:
-            rpt = 512
-    else:
-        rpt = 20_000
+    rpt = _PAYLOAD_ROWS_PER_TASK if width >= 64 else 20_000
     return max(1, min(spark.sparkContext.defaultParallelism, n_rows // rpt))
 
 

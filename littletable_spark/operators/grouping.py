@@ -13,13 +13,12 @@ aggregate Columns to stay JVM-side.
 
 from __future__ import annotations
 
-from types import SimpleNamespace
 from typing import Any, Callable, Iterator
 
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
-from ..table import EPOCH, Table
+from ..table import EPOCH, Table, _q
 from ..plans.ordering import ROW_ORD
 
 
@@ -49,7 +48,7 @@ def groupby_with_summaries(
 
     aggs: list[Column] = []
     needs_rows = any(_as_callable(e) for e in outexprs.values())
-    rows_col = F.collect_list(F.struct(*[F.col(c) for c in fields])).alias("__rows__")
+    rows_col = F.collect_list(F.struct(*[F.col(_q(c)) for c in fields])).alias("__rows__")
     for name, expr in outexprs.items():
         if _as_callable(expr):
             continue  # second pass over __rows__
@@ -66,12 +65,9 @@ def groupby_with_summaries(
         spec = _as_callable(expr)
         if spec:
             fn, rtype = spec
-
-            def call(rows: Any, _fn=fn) -> Any:
-                return _fn([SimpleNamespace(**r.asDict()) for r in rows])
-
-            udf = F.udf(call, rtype) if rtype else F.udf(call)
-            grouped = grouped.withColumn(name, udf(F.col("__rows__")))
+            grouped = grouped.withColumn(
+                name, table._row_udf(fn, rtype, None, group=F.col("__rows__"))
+            )
     if needs_rows:
         grouped = grouped.drop("__rows__")
     t = Table.from_df(grouped, name=f"{table.table_name}_summary")

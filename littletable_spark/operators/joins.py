@@ -23,7 +23,7 @@ from typing import Any
 from pyspark.sql import functions as F
 
 from ..plans.ordering import ROW_ORD
-from ..table import EPOCH, Table
+from ..table import EPOCH, Table, _q
 
 _RPREFIX = "__r__"
 
@@ -34,11 +34,6 @@ def _parse_attrlist(attrlist: Any) -> list[Any] | None:
     if isinstance(attrlist, str):
         return attrlist.replace(",", " ").split()
     return list(attrlist)
-
-
-def _q(name: str) -> str:
-    # a quoted reference: column names may hold backticks, spaces or dots
-    return "`" + name.replace("`", "``") + "`"
 
 
 def join_tables(
@@ -89,127 +84,60 @@ def join_tables(
             raise ValueError("no join keys given and no common columns found")
         key_map = {c: c for c in common}
 
-    # disambiguate by renaming every right column. toDF is ONE py4j
-    # round trip for the whole rename where per-column
-    # F.col(c).alias(...) is two per column — measured 6 ms vs 51 ms on
-    # lineitem's 18 columns, and join construction sits on the timed
-    # path of every composite query (guide §1.2: driver-side plan
-    # construction is per-invocation work too).
-    rdf2 = rdf.toDF(*[_RPREFIX + c for c in rdf.columns])
+    # disambiguate by renaming every right column under a prefix no
+    # left name starts with: then every joined name is unique and the
+    # whole output projection is ONE selectExpr round trip (9 ms vs
+    # 61 ms measured on the 25-column orders x lineitem projection).
+    # toDF is likewise ONE py4j round trip for the whole rename where
+    # per-column F.col(c).alias(...) is two per column — measured 6 ms
+    # vs 51 ms on lineitem's 18 columns, and join construction sits on
+    # the timed path of every composite query (guide §1.2: driver-side
+    # plan construction is per-invocation work too).
+    rp = _RPREFIX
+    while any(c.startswith(rp) for c in ldf.columns):
+        rp += "_"
+    rdf2 = rdf.toDF(*[rp + c for c in rdf.columns])
     if broadcast:
         rdf2 = F.broadcast(rdf2)
     cond = None
     for lk, rk in key_map.items():
-        c = ldf[_q(lk)] == rdf2[_q(_RPREFIX + rk)]
+        c = ldf[_q(lk)] == rdf2[_q(rp + rk)]
         cond = c if cond is None else cond & c
     joined = ldf.join(rdf2, on=cond, how=how)
-
-    # After the rename every right column carries _RPREFIX, so as long
-    # as no LEFT column also starts with it, plain-name references are
-    # unambiguous and the whole output projection can be ONE
-    # selectExpr round trip (9 ms vs 61 ms measured on the 25-column
-    # orders x lineitem projection). A left column that itself starts
-    # with _RPREFIX (never produced by this engine, but user data is
-    # user data) falls back to the dataframe-qualified Column path.
-    fast = not any(c.startswith(_RPREFIX) for c in ldf.columns)
+    assert len(set(joined.columns)) == len(joined.columns), joined.columns
 
     # default projection: left fields, then right fields minus name
-    # collisions (reference collision-drop, littletable.py:2481-2486)
+    # collisions (reference collision-drop, littletable.py:2481-2486).
+    # The reference keeps every right attribute whose alias doesn't
+    # collide with a left alias — including differently-named join
+    # keys; only name collisions drop
+    lf, rf = left.fields, right.fields
     spec = _parse_attrlist(attrlist)
-    if fast:
-        exprs: list[str] = []
-        if spec is None:
-            for f in left.fields:
-                if f in key_map and how in ("right", "full"):
-                    exprs.append(
-                        f"coalesce({_q(f)}, {_q(_RPREFIX + key_map[f])})"
-                        f" AS {_q(f)}"
-                    )
-                else:
-                    exprs.append(_q(f))
-            # the reference keeps every right attribute whose alias
-            # doesn't collide with a left alias — including
-            # differently-named join keys (littletable.py:2481-2486);
-            # only name collisions drop
-            for f in right.fields:
-                if f in left.fields:
-                    continue
-                exprs.append(f"{_q(_RPREFIX + f)} AS {_q(f)}")
+    if spec is None:
+        spec = lf + [f for f in rf if f not in lf]
+    exprs: list[str] = []
+    for item in spec:
+        if isinstance(item, tuple):
+            tbl, attr, *alias = item
+            out_name = alias[0] if alias else attr
+            src = attr if tbl is left else rp + attr
+            exprs.append(f"{_q(src)} AS {_q(out_name)}")
+        elif item in lf:
+            if item in key_map and how in ("right", "full"):
+                exprs.append(
+                    f"coalesce({_q(item)}, {_q(rp + key_map[item])}) AS {_q(item)}"
+                )
+            else:
+                exprs.append(_q(item))
+        elif item in rf:
+            exprs.append(f"{_q(rp + item)} AS {_q(item)}")
         else:
-            for item in spec:
-                if isinstance(item, tuple):
-                    tbl, attr, *alias = item
-                    out_name = alias[0] if alias else attr
-                    src = attr if tbl is left else _RPREFIX + attr
-                    exprs.append(f"{_q(src)} AS {_q(out_name)}")
-                elif item in left.fields:
-                    if item in key_map and how in ("right", "full"):
-                        exprs.append(
-                            f"coalesce({_q(item)}, "
-                            f"{_q(_RPREFIX + key_map[item])}) AS {_q(item)}"
-                        )
-                    else:
-                        exprs.append(_q(item))
-                elif item in right.fields:
-                    exprs.append(f"{_q(_RPREFIX + item)} AS {_q(item)}")
-                else:
-                    raise ValueError(f"join output attr {item!r} not found")
-        # result order: left order, unmatched-right rows after (big
-        # epoch offset)
-        exprs.append(
-            f"coalesce({_q(EPOCH)}, {_q(_RPREFIX + EPOCH)} + 1000000)"
-            f" AS {_q(EPOCH)}"
-        )
-        exprs.append(
-            f"coalesce({_q(ROW_ORD)}, {_q(_RPREFIX + ROW_ORD)})"
-            f" AS {_q(ROW_ORD)}"
-        )
-        # the fast path's premise: after the rename no two joined
-        # columns share a name, so every plain-name reference resolves
-        assert len(set(joined.columns)) == len(joined.columns), joined.columns
-        out = joined.selectExpr(*exprs)
-    else:
-        out_cols = []
-        if spec is None:
-            for f in left.fields:
-                if f in key_map and how in ("right", "full"):
-                    out_cols.append(
-                        F.coalesce(ldf[_q(f)], rdf2[_q(_RPREFIX + key_map[f])]).alias(f)
-                    )
-                else:
-                    out_cols.append(ldf[_q(f)].alias(f))
-            for f in right.fields:
-                if f in left.fields:
-                    continue
-                out_cols.append(rdf2[_q(_RPREFIX + f)].alias(f))
-        else:
-            for item in spec:
-                if isinstance(item, tuple):
-                    tbl, attr, *alias = item
-                    out_name = alias[0] if alias else attr
-                    if tbl is left:
-                        out_cols.append(ldf[_q(attr)].alias(out_name))
-                    else:
-                        out_cols.append(rdf2[_q(_RPREFIX + attr)].alias(out_name))
-                else:
-                    if item in left.fields:
-                        if item in key_map and how in ("right", "full"):
-                            out_cols.append(
-                                F.coalesce(ldf[_q(item)], rdf2[_q(_RPREFIX + key_map[item])]).alias(item)
-                            )
-                        else:
-                            out_cols.append(ldf[_q(item)].alias(item))
-                    elif item in right.fields:
-                        out_cols.append(rdf2[_q(_RPREFIX + item)].alias(item))
-                    else:
-                        raise ValueError(f"join output attr {item!r} not found")
-
-        # result order: left order, unmatched-right rows after (big epoch offset)
-        out_cols.append(
-            F.coalesce(ldf[_q(EPOCH)], rdf2[_q(_RPREFIX + EPOCH)] + F.lit(1_000_000)).alias(EPOCH)
-        )
-        out_cols.append(F.coalesce(ldf[_q(ROW_ORD)], rdf2[_q(_RPREFIX + ROW_ORD)]).alias(ROW_ORD))
-        out = joined.select(*out_cols)
+            raise ValueError(f"join output attr {item!r} not found")
+    # result order: left order, unmatched-right rows after (big epoch
+    # offset)
+    exprs.append(f"coalesce({_q(EPOCH)}, {_q(rp + EPOCH)} + 1000000) AS {_q(EPOCH)}")
+    exprs.append(f"coalesce({_q(ROW_ORD)}, {_q(rp + ROW_ORD)}) AS {_q(ROW_ORD)}")
+    out = joined.selectExpr(*exprs)
     name = f"{left.table_name}:{right.table_name}"
     t = left._derive(out, name=name, keep_sort=False)
     t._clear_sort()

@@ -226,6 +226,22 @@ def _row_to_ns(row, row_class: type | None = None) -> Any:
     return (row_class or SimpleNamespace)(**d)
 
 
+def _slice_member(start: int, stop: int, step: int) -> Column:
+    """Whether a dense position (``ROW_ORD``) is in ``range(start, stop,
+    step)``, for a step of either sign (``slice.indices`` bounds)."""
+    pos = F.col(ROW_ORD)
+    if step > 0:
+        bounded = (pos >= F.lit(start)) & (pos < F.lit(stop))
+    else:
+        bounded = (pos <= F.lit(start)) & (pos > F.lit(stop))
+    return bounded & ((pos - F.lit(start)) % F.lit(step) == 0)
+
+
+def _q(name: str) -> str:
+    # a quoted reference: field names may hold backticks, spaces or dots
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _reconcile_cell_types(old: DataFrame, new: DataFrame):
     """Reconcile heterogeneous cell types across batches up front (a
     union would otherwise insert an implicit cast that fails at
@@ -318,6 +334,46 @@ class Table:
     def _make_row(self, row) -> Any:
         return _row_to_ns(row, self._row_class)
 
+    def _row_udf(
+        self,
+        fn: Callable,
+        rtype: str | None,
+        on_error: Any,
+        group: Column | None = None,
+    ) -> Column:
+        """The one path from a Python callable to a Column. ``fn`` runs
+        on the executors over each row, built by ``_row_to_ns`` exactly
+        as iteration yields it (this table's ``row_class``, nested
+        structs as dicts); with ``group`` (an array of this table's row
+        structs, e.g. a ``collect_list``) it gets the list of rows. An
+        exception returns ``on_error``; ``rtype`` None is string."""
+        row_class, many = self._row_class, group is not None
+
+        def call(v):  # no hints: pyspark would try to infer an Arrow UDF
+            try:
+                out = fn(
+                    [_row_to_ns(r, row_class) for r in v]
+                    if many
+                    else _row_to_ns(v, row_class)
+                )
+            except Exception:
+                return on_error
+            # a typed double UDF returning a Python int yields NULL
+            return float(out) if rtype == "double" and isinstance(out, int) else out
+
+        arg = group if many else F.struct(*[F.col(_q(c)) for c in self.fields])
+        return F.udf(call, rtype or "string")(arg)
+
+    def _probe(self, fn: Callable, default: Any = None) -> Any:
+        """``fn`` on this table's first row, built on the driver as
+        iteration builds it; ``default`` on an empty table or an
+        exception. Row-callable columns take their type from it."""
+        rows = self._ordered_df().limit(1).collect()
+        try:
+            return fn(self._make_row(rows[0])) if rows else default
+        except Exception:
+            return default
+
     @staticmethod
     def _with_internal(df: DataFrame) -> DataFrame:
         if df.isStreaming:
@@ -389,7 +445,7 @@ class Table:
     @property
     def df(self) -> DataFrame:
         """User-facing DataFrame view (internal order columns stripped)."""
-        return self._require_df().select(*self.fields)
+        return self._require_df().select(*[_q(c) for c in self.fields])
 
     @property
     def spark(self) -> SparkSession:
@@ -515,27 +571,13 @@ class Table:
                 n = len(self)
                 start, stop, step = key.indices(n)
                 dense = dense_index(self._require_df(), self._sort_cols())
-                old = F.col(ROW_ORD)
                 # arithmetic membership + explicit new ordinal (no driver-
                 # side position list): position start + i*step maps to
                 # ordinal i, so step<0 slices come back reversed like the
                 # reference's list slice
-                if step > 0:
-                    pred = (
-                        (old >= F.lit(start))
-                        & (old < F.lit(stop))
-                        & ((old - F.lit(start)) % F.lit(step) == 0)
-                    )
-                    new_ord = (old - F.lit(start)) / F.lit(step)
-                else:
-                    pred = (
-                        (old <= F.lit(start))
-                        & (old > F.lit(stop))
-                        & ((F.lit(start) - old) % F.lit(-step) == 0)
-                    )
-                    new_ord = (F.lit(start) - old) / F.lit(-step)
+                new_ord = (F.col(ROW_ORD) - F.lit(start)) / F.lit(step)
                 out = (
-                    dense.filter(pred)
+                    dense.filter(_slice_member(start, stop, step))
                     .withColumn(ROW_ORD, new_ord.cast("long"))
                     .withColumn(EPOCH, F.lit(0).cast("long"))
                 )
@@ -577,8 +619,8 @@ class Table:
         delete semantics incl. extended slices (reference
         littletable.py:1402-1412, exercised at littletable.py:4811 as
         ``del amfm[0:-1:2]``). Implemented as ONE filter keeping the
-        complement of the slice's arithmetic membership (the negation of
-        ``__getitem__``'s stepped-slice predicate) — no driver-side
+        complement of the slice's arithmetic membership
+        (``_slice_member``, shared with stepped ``__getitem__``) — no driver-side
         position list, no per-row pop loop."""
         if isinstance(key, slice):
             if self._df is None:
@@ -586,20 +628,7 @@ class Table:
             n = len(self)
             start, stop, step = key.indices(n)
             dense = dense_index(self._require_df(), self._sort_cols())
-            old = F.col(ROW_ORD)
-            if step > 0:
-                member = (
-                    (old >= F.lit(start))
-                    & (old < F.lit(stop))
-                    & ((old - F.lit(start)) % F.lit(step) == 0)
-                )
-            else:
-                member = (
-                    (old <= F.lit(start))
-                    & (old > F.lit(stop))
-                    & ((F.lit(start) - old) % F.lit(-step) == 0)
-                )
-            self._mutate(dense.filter(~member))
+            self._mutate(dense.filter(~_slice_member(start, stop, step)))
             return
         if isinstance(key, int):
             self.pop(key)
@@ -743,21 +772,15 @@ class Table:
     # where / delete / splitby / unique (littletable.py:2100-2190, 3630-3795)
 
     def _compile_criterion(self, attr: str, value: Any) -> Column:
-        col = F.col(attr)
+        col = F.col(_q(attr))
         if isinstance(value, Comparator):
             return value.to_column(col)
         if isinstance(value, Column):
             return value
         if callable(value):
-            ret = SQLT.BooleanType()
-
-            def safe(v: Any, _fn=value) -> bool | None:
-                try:
-                    return bool(_fn(v))
-                except Exception:
-                    return False
-
-            return F.udf(safe, ret)(col)
+            return self._row_udf(
+                lambda r: bool(value(getattr(r, attr))), "boolean", False
+            )
         if value is None:
             return col.isNull()
         return col == F.lit(value)
@@ -801,17 +824,7 @@ class Table:
             elif isinstance(wherefn, str):
                 fnpred = F.expr(wherefn)
             else:
-                user_fields = self.fields
-
-                def safe_fn(*vals: Any, _fn=wherefn, _names=tuple(user_fields)):
-                    try:
-                        return bool(_fn(SimpleNamespace(**dict(zip(_names, vals)))))
-                    except Exception:
-                        return False
-
-                fnpred = F.udf(safe_fn, SQLT.BooleanType())(
-                    *[F.col(c) for c in user_fields]
-                )
+                fnpred = self._compile_pred_any(wherefn)
             pred = fnpred if pred is None else (pred & fnpred)
         out = df.filter(pred) if pred is not None else df
         return self._derive(out)
@@ -852,18 +865,7 @@ class Table:
             return F.coalesce(where, F.lit(False))
         if isinstance(where, str):
             return F.coalesce(F.expr(where), F.lit(False))
-        user_fields = self.fields
-
-        def safe_fn(*vals: Any, _fn=where, _names=tuple(user_fields)):
-            try:
-                return bool(_fn(SimpleNamespace(**dict(zip(_names, vals)))))
-            except Exception:
-                return False
-
-        return F.coalesce(
-            F.udf(safe_fn, SQLT.BooleanType())(*[F.col(c) for c in user_fields]),
-            F.lit(False),
-        )
+        return self._row_udf(lambda r: bool(where(r)), "boolean", False)
 
     def update(self, where: Any = None, **sets: Any) -> int:
         """Conditional in-place column update; returns the matched-row
@@ -889,7 +891,6 @@ class Table:
         df = self._require_df()
         pred = self._compile_pred_any(where)
         matched = int(df.filter(pred).count())
-        user_fields = self.fields
         # materialize the match ONCE against the pre-update row: the
         # predicate Column would otherwise re-resolve by name against
         # new_df after each withColumn, so a where= referencing a
@@ -905,28 +906,8 @@ class Table:
             if isinstance(value, Column):
                 col = value
             elif callable(value):
-                first = next(
-                    iter(self._derive(df.filter(pred)).head(1)), None
-                )
-                probe: Any = None
-                if first is not None:
-                    try:
-                        probe = value(first)
-                    except Exception:
-                        probe = None
-                rtype = _pytype_to_spark(probe)
-
-                def call(*vals: Any, _fn=value, _names=tuple(user_fields), _t=rtype):
-                    try:
-                        out = _fn(SimpleNamespace(**dict(zip(_names, vals))))
-                    except Exception:
-                        return None
-                    if _t == "double" and isinstance(out, int):
-                        return float(out)
-                    return out
-
-                udf = F.udf(call, rtype) if rtype else F.udf(call)
-                col = udf(*[F.col(c) for c in user_fields])
+                probe = self._derive(df.filter(pred))._probe(value)
+                col = self._row_udf(value, _pytype_to_spark(probe), None)
             else:
                 col = F.lit(value)
             old = F.col(attr) if attr in new_df.columns else F.lit(None)
@@ -1065,15 +1046,7 @@ class Table:
             col_pred = pred
             use_errors = False
         else:
-            user_fields = self.fields
-
-            def status(*vals: Any, _fn=pred, _names=tuple(self.fields)):
-                try:
-                    return 1 if _fn(SimpleNamespace(**dict(zip(_names, vals)))) else 0
-                except Exception:
-                    return 2
-
-            scol = F.udf(status, SQLT.IntegerType())(*[F.col(c) for c in self.fields])
+            scol = self._row_udf(lambda r: 1 if pred(r) else 0, "int", 2)
             use_errors = errors is not None
             col_pred = None  # handled below
         df = self._require_df()
@@ -1101,16 +1074,8 @@ class Table:
         elif isinstance(key, str):
             part_cols = [F.col(key)]
         elif callable(key):
-            user_fields = self.fields
-
-            def keyfn(*vals: Any, _fn=key, _names=tuple(user_fields)):
-                try:
-                    return str(_fn(SimpleNamespace(**dict(zip(_names, vals)))))
-                except Exception:
-                    return None
-
             df = df.withColumn(
-                "__ukey__", F.udf(keyfn, SQLT.StringType())(*[F.col(c) for c in user_fields])
+                "__ukey__", self._row_udf(lambda r: str(key(r)), "string", None)
             )
             part_cols = [F.col("__ukey__")]
         else:
@@ -1153,35 +1118,19 @@ class Table:
             return expr
         if isinstance(expr, str):
             if "{" in expr:
-                user_fields = self.fields
-
-                def fmt(*vals: Any, _t=expr, _names=tuple(user_fields)):
-                    try:
-                        return _t.format(**dict(zip(_names, vals)))
-                    except Exception:
-                        return None
-
-                return F.udf(fmt, SQLT.StringType())(*[F.col(c) for c in user_fields])
+                return self._row_udf(
+                    lambda r: expr.format(**to_row_dict(r)), "string", None
+                )
             return F.expr(expr)
         if callable(expr):
-            user_fields = self.fields
-
-            def call(*vals: Any, _fn=expr, _names=tuple(user_fields)):
-                try:
-                    return _fn(SimpleNamespace(**dict(zip(_names, vals))))
-                except Exception:
-                    return None
-
-            return F.udf(call)(*[F.col(c) for c in user_fields])
+            return self._row_udf(expr, None, None)
         return F.lit(expr)
 
     def select(self, fields: Any = None, **exprs: Any) -> "Table":
-        # plain names go through as strings: DataFrame.select resolves
-        # them JVM-side in the one select call, where F.col(c) costs a
-        # py4j round trip per column — same resolution semantics, and
-        # select() sits on nearly every query's construction path
+        # names go through as quoted identifiers in the one select call:
+        # a field named "x.y" is that column, not field y of a struct x
         base = self._parse_fields_string(fields)
-        cols: list[Any] = list(base)
+        cols: list[Any] = [_q(c) for c in base]
         for name, expr in exprs.items():
             cols.append(self._computed_column(expr).alias(name))
         df = self._require_df()
@@ -1198,40 +1147,13 @@ class Table:
         string via an untyped UDF."""
         if self._df is None:
             return self  # schema-less empty: no rows to compute over
-        if isinstance(fn, str) and "{" not in fn:
-            col = F.expr(fn)
-        elif isinstance(fn, Column):
-            col = fn
+        if isinstance(fn, (str, Column)):
+            col = self._computed_column(fn)
+            if default is not None:
+                col = F.coalesce(col, F.lit(default))
         else:
-            user_fields = self.fields
-            rtype = None
-            if not isinstance(fn, str):
-                first = next(iter(self.head(1)), None)
-                probe: Any = default
-                if first is not None:
-                    try:
-                        probe = fn(first)
-                    except Exception:
-                        probe = default
-                rtype = _pytype_to_spark(probe)
-
-            def call(*vals: Any, _fn=fn, _names=tuple(user_fields), _d=default,
-                     _t=rtype):
-                try:
-                    if isinstance(_fn, str):
-                        return _fn.format(**dict(zip(_names, vals)))
-                    out = _fn(SimpleNamespace(**dict(zip(_names, vals))))
-                except Exception:
-                    out = _d
-                # a typed double UDF returning a Python int yields NULL
-                if _t == "double" and isinstance(out, int):
-                    return float(out)
-                return out
-
-            udf = F.udf(call, rtype) if rtype else F.udf(call)
-            col = udf(*[F.col(c) for c in user_fields])
-        if default is not None and isinstance(fn, (str, Column)):
-            col = F.coalesce(col, F.lit(default))
+            rtype = _pytype_to_spark(self._probe(fn, default))
+            col = self._row_udf(fn, rtype, default)
         self._mutate(self._require_df().withColumn(attr, col))
         return self
 
@@ -1254,30 +1176,21 @@ class Table:
             # probe one row to learn the key shape: scalar vs tuple, and
             # numeric vs string per element — a string-typed UDF column
             # would sort numeric keys lexicographically
-            user_fields = self.fields
-            sample_rows = self._ordered_df().limit(1).collect()
-            probe = key(_row_to_ns(sample_rows[0])) if sample_rows else None
+            probe = self._probe(key)
             parts = probe if isinstance(probe, tuple) else (probe,)
-            types = [
-                "double" if isinstance(p, (int, float)) and not isinstance(p, bool) else "string"
-                for p in parts
-            ]
             df = self._require_df()
             spec = []
-            for i, rtype in enumerate(types):
-                def keyfn(*vals: Any, _fn=key, _names=tuple(user_fields), _i=i, _t=rtype):
-                    try:
-                        k = _fn(SimpleNamespace(**dict(zip(_names, vals))))
-                        v = k[_i] if isinstance(k, tuple) else k
-                        # a DoubleType UDF returning a Python int yields
-                        # null — coerce explicitly
-                        return float(v) if _t == "double" else (None if v is None else str(v))
-                    except Exception:
-                        return None
+            for i, p in enumerate(parts):
+                num = isinstance(p, (int, float)) and not isinstance(p, bool)
+
+                def part(r, _i=i, _num=num):
+                    k = key(r)
+                    v = k[_i] if isinstance(k, tuple) else k
+                    return float(v) if _num else (None if v is None else str(v))
 
                 col_name = f"{SORTKEY}{i or ''}"
                 df = df.withColumn(
-                    col_name, F.udf(keyfn, rtype)(*[F.col(c) for c in user_fields])
+                    col_name, self._row_udf(part, "double" if num else "string", None)
                 )
                 spec.append((col_name, True))
             self._mutate(df)

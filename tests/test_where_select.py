@@ -112,3 +112,17 @@ def test_unique_full_record_and_key(spark):
     assert len(t.unique()) == 2
     u = t.unique(key="a")
     assert len(u) == 1 and u[0].b == "x"  # keep-first
+
+
+def test_awkward_field_names_round_trip(spark):
+    """Field names holding a backtick or a dot are names, not
+    expressions: ``.df``, ``select`` and ``where`` keywords quote them."""
+    t = Table("awkward", spark=spark)
+    t.insert_many([{"a`b": "p", "x.y": 1}, {"a`b": "q", "x.y": 2}])
+    assert t.df.columns == ["a`b", "x.y"]
+    assert [tuple(r) for r in t.df.collect()] == [("p", 1), ("q", 2)]
+    picked = t.select(["x.y", "a`b"])
+    assert picked.fields == ["x.y", "a`b"]
+    assert [tuple(r) for r in picked.df.collect()] == [(1, "p"), (2, "q")]
+    hit = t.where(**{"x.y": 1})
+    assert [(getattr(r, "a`b"), getattr(r, "x.y")) for r in hit] == [("p", 1)]
