@@ -18,7 +18,7 @@ from typing import Any, Callable, Iterator
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
-from ..table import EPOCH, Table, _q
+from ..table import EPOCH, Table, _q, _row_to_ns
 from ..plans.ordering import ROW_ORD
 
 
@@ -65,9 +65,13 @@ def groupby_with_summaries(
         spec = _as_callable(expr)
         if spec:
             fn, rtype = spec
-            grouped = grouped.withColumn(
-                name, table._row_udf(fn, rtype, None, group=F.col("__rows__"))
-            )
+
+            # no hints: pyspark would try to infer an Arrow UDF
+            def call(rows, _fn=fn, _cls=table._row_class):
+                return _fn([_row_to_ns(r, _cls) for r in rows])
+
+            udf = F.udf(call, rtype or "string")
+            grouped = grouped.withColumn(name, udf(F.col("__rows__")))
     if needs_rows:
         grouped = grouped.drop("__rows__")
     t = Table.from_df(grouped, name=f"{table.table_name}_summary")

@@ -23,7 +23,7 @@ import random
 from types import SimpleNamespace
 from typing import Any, Callable, Iterable, Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as SQLT
 
@@ -35,7 +35,7 @@ from .exceptions import (
     SearchIndexInconsistentError,
     UniqueKeyViolation,
 )
-from .functions.rows import to_row_dict
+from .functions.rows import _normalize_value, to_row_dict
 from .plans.ordering import ROW_ORD, dense_index, ensure_row_ord
 from .sources.parquet_io import read_parquet
 
@@ -335,33 +335,33 @@ class Table:
         return _row_to_ns(row, self._row_class)
 
     def _row_udf(
-        self,
-        fn: Callable,
-        rtype: str | None,
-        on_error: Any,
-        group: Column | None = None,
+        self, fn: Callable, rtype: str | None, on_error: Any, attr: str | None = None
     ) -> Column:
         """The one path from a Python callable to a Column. ``fn`` runs
         on the executors over each row, built by ``_row_to_ns`` exactly
         as iteration yields it (this table's ``row_class``, nested
-        structs as dicts); with ``group`` (an array of this table's row
-        structs, e.g. a ``collect_list``) it gets the list of rows. An
-        exception returns ``on_error``; ``rtype`` None is string."""
-        row_class, many = self._row_class, group is not None
+        structs as dicts); with ``attr`` only that column ships and
+        ``fn`` gets its value as iteration yields it. An exception gives
+        ``on_error``; ``rtype`` None is string."""
+        row_class = self._row_class
 
         def call(v):  # no hints: pyspark would try to infer an Arrow UDF
             try:
-                out = fn(
-                    [_row_to_ns(r, row_class) for r in v]
-                    if many
-                    else _row_to_ns(v, row_class)
-                )
+                if attr is None:
+                    v = _row_to_ns(v, row_class)
+                elif isinstance(v, (Row, list, dict)):  # as _row_to_ns converts it
+                    v = Row(v=v).asDict(recursive=True)["v"]
+                out = fn(v)
             except Exception:
-                return on_error
+                out = on_error
             # a typed double UDF returning a Python int yields NULL
             return float(out) if rtype == "double" and isinstance(out, int) else out
 
-        arg = group if many else F.struct(*[F.col(_q(c)) for c in self.fields])
+        arg = (
+            F.struct(*[F.col(_q(c)) for c in self.fields])
+            if attr is None
+            else F.col(_q(attr))
+        )
         return F.udf(call, rtype or "string")(arg)
 
     def _probe(self, fn: Callable, default: Any = None) -> Any:
@@ -778,9 +778,7 @@ class Table:
         if isinstance(value, Column):
             return value
         if callable(value):
-            return self._row_udf(
-                lambda r: bool(value(getattr(r, attr))), "boolean", False
-            )
+            return self._row_udf(lambda v: bool(value(v)), "boolean", False, attr)
         if value is None:
             return col.isNull()
         return col == F.lit(value)
@@ -1118,8 +1116,13 @@ class Table:
             return expr
         if isinstance(expr, str):
             if "{" in expr:
+                fields = self.fields
                 return self._row_udf(
-                    lambda r: expr.format(**to_row_dict(r)), "string", None
+                    lambda r: expr.format(
+                        **{f: _normalize_value(getattr(r, f)) for f in fields}
+                    ),
+                    "string",
+                    None,
                 )
             return F.expr(expr)
         if callable(expr):

@@ -1,6 +1,7 @@
 """Grouping, pivot, consecutive-run groupby (littletable.py:3546-3614,
 2724-2742, 4295-4599)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from littletable_spark import Table
@@ -20,6 +21,13 @@ def test_groupby_with_summaries_callable(abc):
     )
     vals = {r.a: r.spread for r in g}
     assert set(vals.values()) == {"2"} or set(vals.values()) == {2}
+
+
+def test_groupby_with_summaries_callable_error_fails_job(abc):
+    # a bug in a summary callable surfaces as an error, not as NULLs
+    g = abc.groupby_with_summaries("a", bad=lambda rows: 1 // 0)
+    with pytest.raises(Exception, match="ZeroDivisionError"):
+        g.df.collect()
 
 
 def test_groupby_sorted_iteration(abc):

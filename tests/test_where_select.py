@@ -84,6 +84,37 @@ def test_compute_field_default_on_exception(abc):
     assert ("0", -1) in {(str(a), i) for a, i in vals} or (0, "-1") in vals or (0, -1) in vals
 
 
+def test_compute_field_int_default_in_double_column(spark):
+    # the first row types the column as double; a raising row's int
+    # default is stored as a float, not dropped to NULL
+    t = Table("ratio", spark=spark)
+    t.insert_many([{"a": 1, "b": 2}, {"a": 1, "b": 0}])
+    t.compute_field("r", lambda r: r.a / r.b, default=0)
+    assert dict(t.df.dtypes)["r"] == "double"
+    assert list(t.all.r) == [0.5, 0.0]
+
+
+def test_format_template_underscore_and_nested_fields(spark):
+    t = Table("fmt", spark=spark)
+    t.insert_many([{"_id": 7, "s": {"x": 1}}, {"_id": 8, "s": {"x": 2}}])
+    assert list(t.select(label="{_id}-{s.x}").all.label) == ["7-1", "8-2"]
+
+
+def test_where_value_callable_gets_iteration_value(spark):
+    # nested structs arrive as the dicts (and lists of dicts) iteration yields
+    t = Table("nested", spark=spark)
+    t.insert_many(
+        [
+            {"k": 1, "s": {"x": 1}, "xs": [{"x": 1}]},
+            {"k": 2, "s": {"x": 2}, "xs": [{"x": 2}, {"x": 3}]},
+        ]
+    )
+    last = list(t)[-1]
+    assert last.s == {"x": 2} and last.xs == [{"x": 2}, {"x": 3}]
+    assert [r.k for r in t.where(s=lambda v: v == last.s)] == [2]
+    assert [r.k for r in t.where(xs=lambda v: v == last.xs)] == [2]
+
+
 def test_delete_returns_count(abc):
     n = abc.delete(a=0)
     assert n == 9
