@@ -15,11 +15,12 @@ from __future__ import annotations
 
 from typing import Any, Callable, Iterator
 
-from pyspark.sql import Column, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..table import EPOCH, Table, _q, _row_to_ns
-from ..plans.ordering import ROW_ORD
+from ..plans.ordering import ROW_ORD, dense_index
+from ..session import scoped_persist
 
 
 def _keys(keyexpr: Any) -> list[str]:
@@ -87,63 +88,25 @@ def _mk_idx(attr: str):
 
 
 _RUN = "__run__"
-_RUNPID = "__runpid__"
-_RUNRN = "__runrn__"
-_RUNLOCAL = "__runlocal__"
+_POS = "__runpos__"
 
 
 def _with_run_ids(df, keys: list[str], order_cols: list[Column]):
-    """Attach a global consecutive-run id column ``__run__`` without a
-    single-partition window (the ``dense_index`` trick,
-    plans/ordering.py:51): sort, detect run breaks partition-locally,
-    then merge runs that straddle partition boundaries with a
-    driver-side O(#partitions) pass over (first_key, last_key, #runs)
-    summaries, broadcast back as a pid -> offset map.
+    """Attach ``__runpos__`` (the dense position in ``order_cols`` order)
+    and ``__run__``, so that ``(keys, __run__)`` identifies one
+    consecutive run of equal ``keys`` (itertools.groupby semantics).
+
+    Islands identity over two distributed sequences (``dense_index`` —
+    no single-partition window): ``pos`` numbers rows in table order,
+    ``rk`` numbers them in ``(keys, pos)`` order. Inside a run both
+    advance by one per row, so ``pos - rk`` is constant; between two
+    runs of one key ``pos`` skips the rows of other keys while ``rk``
+    does not, so the difference grows. Runs of different keys may share
+    a ``__run__`` value — group by the keys too.
     """
-    key_struct = F.struct(*[F.col(k) for k in keys])
-    # persist before the summary collect: both the collect and the
-    # downstream consumer must observe the same partition assignment, so
-    # the cache is never released (a layout pin, as in dense_index)
-    df_sorted = (
-        df.orderBy(*order_cols)
-        .withColumn(_RUNPID, F.spark_partition_id())
-        .persist()
-    )
-    w = Window.partitionBy(_RUNPID).orderBy(*order_cols)
-    brk = F.when(
-        key_struct.eqNullSafe(F.lag(key_struct).over(w)), F.lit(0)
-    ).otherwise(F.lit(1))
-    with_local = df_sorted.withColumn(_RUNRN, F.row_number().over(w)).withColumn(
-        _RUNLOCAL, F.sum(brk).over(w)
-    )
-    info = sorted(
-        with_local.groupBy(_RUNPID)
-        .agg(
-            F.max(_RUNLOCAL).alias("k"),
-            F.min_by(key_struct, F.col(_RUNRN)).alias("first_key"),
-            F.max_by(key_struct, F.col(_RUNRN)).alias("last_key"),
-        )
-        .collect(),
-        key=lambda r: r[_RUNPID],
-    )
-    offsets: dict[int, int] = {}
-    acc = 0
-    prev_last = None
-    have_prev = False
-    for row in info:
-        merge = 1 if have_prev and row["first_key"] == prev_last else 0
-        offsets[row[_RUNPID]] = acc - merge
-        acc += row["k"] - merge
-        prev_last = row["last_key"]
-        have_prev = True
-    if not offsets:
-        return df.withColumn(_RUN, F.lit(0).cast("long")).limit(0)
-    mapping = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-    )
-    return with_local.withColumn(
-        _RUN, (mapping[F.col(_RUNPID)] + F.col(_RUNLOCAL)).cast("long")
-    ).drop(_RUNPID, _RUNRN, _RUNLOCAL)
+    pos = dense_index(df, order_cols, out_col=_POS)
+    rk = dense_index(pos, [*(F.col(k) for k in keys), F.col(_POS)], out_col=_RUN)
+    return rk.withColumn(_RUN, F.col(_POS) - F.col(_RUN))
 
 
 def groupby_iter(
@@ -201,33 +164,17 @@ def groupby_iter(
     if materialize:
         from itertools import groupby as _it_groupby
 
-        spark = table.spark
-        if sort:
-            # stable sort by key: within-key order is the table's order
-            rows = df.orderBy(
-                *[F.col(k).asc() for k in keys], *table._sort_cols()
-            ).collect()
-            schema = df.schema
-            drop: list[str] = []
-        else:
-            runs = _with_run_ids(df, keys, table._sort_cols())
-            rows = runs.orderBy(F.col(_RUN).asc(), *table._sort_cols()).collect()
-            schema = runs.schema
-            drop = [_RUN]
-        if sort:
-            key_of = lambda r: tuple(r[k] for k in keys)  # noqa: E731
-        else:
-            key_of = lambda r: r[_RUN]  # noqa: E731
-        for gk, grp in _it_groupby(rows, key=key_of):
+        # the reference's own rule: itertools.groupby over the rows in
+        # table order, stably sorted by key first when sort=True
+        rows = df.orderBy(
+            *([F.col(k).asc() for k in keys] if sort else []), *table._sort_cols()
+        ).collect()
+        for keyvals, grp in _it_groupby(rows, key=lambda r: tuple(r[k] for k in keys)):
             grp = list(grp)
-            sub_df = spark.createDataFrame(grp, schema)
-            for c in drop:
-                sub_df = sub_df.drop(c)
-            sub = table._derive(sub_df, keep_sort=True)
+            sub = table._derive(table.spark.createDataFrame(grp, df.schema), keep_sort=True)
             # rows are already here in table order: iteration/len on the
-            # subtable is job-free (run columns are INTERNAL to row objs)
+            # subtable is job-free
             sub._prefetched = grp
-            keyvals = tuple(grp[0][k] for k in keys)
             yield (keyvals[0] if len(keys) == 1 else keyvals), sub
         return
     if sort:
@@ -239,18 +186,24 @@ def groupby_iter(
             sub = table.where(**dict(zip(keys, keyvals)))
             yield (keyvals[0] if len(keys) == 1 else keyvals), sub
         return
-    # consecutive-run ids, partition-local detection + boundary merge —
-    # no single-partition window even though the result is consumed as a
-    # driver-side iterator
+    # consecutive runs in table order; a run is the position range
+    # [min(pos), max(pos)], so each subtable is one range filter. The
+    # run frame is held while the generator lives, so G runs sort once;
+    # a subtable read after that recomputes the same positions
     runs = _with_run_ids(df, keys, table._sort_cols())
-    run_keys = (
-        runs.select(_RUN, *keys).distinct().orderBy(_RUN).collect()
-    )
-    for r in run_keys:
-        sub_df = runs.filter(F.col(_RUN) == r[_RUN]).drop(_RUN)
-        sub = table._derive(sub_df, keep_sort=True)
-        keyvals = tuple(r[k] for k in keys)
-        yield (keyvals[0] if len(keys) == 1 else keyvals), sub
+    with scoped_persist("groupby") as scope:
+        spans = (
+            scope.persist(runs)
+            .groupBy(_RUN, *keys)
+            .agg(F.min(_POS).alias("lo"), F.max(_POS).alias("hi"))
+            .orderBy("lo")
+            .collect()
+        )
+        for r in spans:
+            sub_df = runs.filter(F.col(_POS).between(r["lo"], r["hi"])).drop(_RUN, _POS)
+            sub = table._derive(sub_df, keep_sort=True)
+            keyvals = tuple(r[k] for k in keys)
+            yield (keyvals[0] if len(keys) == 1 else keyvals), sub
 
 
 def consecutive_runs(
@@ -260,9 +213,9 @@ def consecutive_runs(
     littletable.py:3612) as a DataFrame — the set-returning companion to
     the ``groupby`` iterator.
 
-    Run ids come from partition-local break detection with a boundary
-    merge (``_with_run_ids`` — no single-partition window), and are kept
-    internal: each run is identified in the output by ``run_start`` — the
+    Run ids come from two distributed sequences (``_with_run_ids`` — no
+    single-partition window), and are kept internal: each run is
+    identified in the output by ``run_start`` — the
     minimum of the first order column within the run — so the result is
     convention-free (no dependence on whether run numbering starts at 0
     or 1, or on the counter's integer width).

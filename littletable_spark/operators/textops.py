@@ -1297,9 +1297,9 @@ def bm25_topk(
     top = scored.orderBy(
         F.col("score").desc(), F.col(id_col).asc()
     ).limit(int(k))
-    # rank over the <= k surviving rows via partition-local numbering +
-    # broadcast offsets (no global single-partition window — lint-clean,
-    # and the pattern stays correct if k is ever large)
+    # rank over the <= k surviving rows via the distributed sequence
+    # (no global single-partition window — lint-clean, and the pattern
+    # stays correct if k is ever large)
     out = dense_index(
         top, [F.col("score").desc(), F.col(id_col).asc()], out_col="rank"
     ).withColumn("rank", (F.col("rank") + F.lit(1)).cast("int"))

@@ -10,8 +10,8 @@ What it flags (each a structured ``PlanWarning``):
 - ``single-partition-window`` — a window function with no
   ``partitionBy``: Spark collapses the whole input to ONE partition to
   satisfy the global sort, the classic cluster-killer. (The repo's own
-  ``rank``/slicing avoid it via partition-local numbering + broadcast
-  offsets, plans/ordering.py.)
+  ``rank``/slicing avoid it via a sort plus Spark's distributed
+  sequence, plans/ordering.py.)
 - ``single-partition-exchange`` — an ``Exchange SinglePartition`` from
   ``repartition(1)``/``coalesce(1)``-style plans: one task processes
   everything downstream of it.
@@ -142,8 +142,8 @@ def lint_plan(df: DataFrame) -> list[PlanWarning]:
                 f"{n_global_windows} window(s) have no partitionBy — the "
                 "whole input collapses to one partition to satisfy the "
                 "global sort. Partition the window, or derive global "
-                "positions via partition-local numbering + broadcast "
-                "offsets (see plans/ordering.dense_index).",
+                "positions from a sort plus Spark's distributed "
+                "sequence (see plans/ordering.dense_index).",
             )
         )
     if "Exchange SinglePartition" in physical:

@@ -12,28 +12,29 @@ Scale design notes (100 TB):
   by (partition, offset)*, which equals file/ingest order for reads. That is
   all the ordered-bag semantics need.
 - ``dense_index`` (needed only for positional ops: slices, ``rank``,
-  ``batched``) deliberately avoids the classic
+  ``batched``, consecutive runs) deliberately avoids the classic
   ``row_number().over(Window.orderBy(...))`` with no partition key — that
-  plan collapses to a single partition and dies at scale. Instead it:
-    1. sorts (range-partitioned exchange — Spark's normal global sort),
-    2. numbers rows *within* each partition,
-    3. collects one tiny row per partition (the counts) and adds the
-       cumulative offset via a broadcast map.
-  Cost: one global sort (unavoidable for a total order) + one O(#partitions)
-  driver-side aggregation. No single-partition bottleneck.
+  plan collapses to a single partition and dies at scale. Instead it sorts
+  (range-partitioned exchange — Spark's normal global sort) and attaches
+  Spark's distributed sequence (``AttachDistributedSequence``, the
+  ``zipWithIndex`` behind pandas-on-Spark's ``distributed-sequence``
+  index): one small count job per action, no single-partition bottleneck.
+  The plan is lazy and holds no cache past the action that runs it. Its
+  numbering is a function of the total order alone, so two actions over
+  the same sort columns agree whenever those columns are a total order —
+  ``Table._sort_cols()`` always ends with ``__epoch__``, ``__row_ord__``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 
 ROW_ORD = "__row_ord__"
-_PID = "__pid__"
-_LOCAL = "__local_rn__"
 
 #: internal columns that must never leak into user-visible output
-INTERNAL_COLS = (ROW_ORD, _PID, _LOCAL)
+INTERNAL_COLS = (ROW_ORD,)
 
 
 def ensure_row_ord(df: DataFrame) -> DataFrame:
@@ -58,38 +59,8 @@ def dense_index(
     """
     if sort_cols is None:
         sort_cols = [F.col(ROW_ORD)]
-    tmp = out_col + "__tmp"
-    # 1. global sort = range-partitioned exchange; rows land partition-ordered
-    df_sorted = df.orderBy(*sort_cols).withColumn(_PID, F.spark_partition_id())
-    # 2. partition-local numbering (window partitioned by pid — parallel)
-    w = Window.partitionBy(_PID).orderBy(*sort_cols)
-    # persist BEFORE the counts job: the counts collect and the output job
-    # must see identical partition assignment, but range-partitioner
-    # sample seeds are RDD-id-derived and AQE may re-plan between jobs —
-    # the cache (filled by the counts job) pins one computed layout for
-    # both consumers, so it is never released: a recompute could number
-    # rows differently with no error (a layout pin)
-    df_local = df_sorted.withColumn(_LOCAL, F.row_number().over(w)).persist()
-    # 3. tiny per-partition counts -> cumulative offsets, broadcast-mapped
-    counts = sorted(
-        df_local.groupBy(_PID).agg(F.count(F.lit(1)).alias("n")).collect(),
-        key=lambda r: r[_PID],
+    return (
+        df.orderBy(*sort_cols)
+        .drop(out_col)
+        .select("*", InternalFunction.distributed_sequence_id().alias(out_col))
     )
-    offsets: dict[int, int] = {}
-    acc = 0
-    for row in counts:
-        offsets[row[_PID]] = acc
-        acc += row["n"]
-    if not offsets:
-        return df.withColumn(tmp, F.lit(0).cast("long")).drop(out_col).withColumnRenamed(tmp, out_col)
-    mapping = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-    )
-    out = (
-        df_local.withColumn(
-            tmp, (mapping[F.col(_PID)] + F.col(_LOCAL) - 1).cast("long")
-        )
-        .drop(_PID, _LOCAL, out_col)
-        .withColumnRenamed(tmp, out_col)
-    )
-    return out

@@ -37,6 +37,7 @@ from .exceptions import (
 )
 from .functions.rows import _normalize_value, to_row_dict
 from .plans.ordering import ROW_ORD, dense_index, ensure_row_ord
+from .session import scoped_persist
 from .sources.parquet_io import read_parquet
 
 EPOCH = "__epoch__"
@@ -465,6 +466,14 @@ class Table:
     def _ordered_df(self) -> DataFrame:
         return self._require_df().orderBy(*self._sort_cols())
 
+    def _dense(self) -> DataFrame:
+        """The rows with ``__row_ord__`` = dense position 0..n-1 in table
+        order and one ``__epoch__``, so the order survives clearing the
+        sort (positions are global across insert batches)."""
+        return dense_index(self._require_df(), self._sort_cols()).withColumn(
+            EPOCH, F.lit(0).cast("long")
+        )
+
     def _mutate(self, df: DataFrame) -> None:
         import datetime as _dt
 
@@ -554,12 +563,11 @@ class Table:
         d = self._full_record_pred(obj)
         if d is None:
             raise ValueError(f"{obj!r} not in table")
-        dense = dense_index(self._require_df(), self._sort_cols(), out_col="__pos__")
         pred = self._compile_kwargs(d)
-        rows = dense.filter(pred).select(F.min("__pos__").alias("p")).collect()
-        if rows and rows[0]["p"] is not None:
-            return int(rows[0]["p"])
-        raise ValueError(f"{obj!r} not in table")
+        p = self._dense().filter(pred).select(F.min(ROW_ORD)).collect()[0][0]
+        if p is None:
+            raise ValueError(f"{obj!r} not in table")
+        return int(p)
 
     def __getitem__(self, key: int | slice) -> Any:
         n = None
@@ -570,30 +578,24 @@ class Table:
             if step not in (None, 1):
                 n = len(self)
                 start, stop, step = key.indices(n)
-                dense = dense_index(self._require_df(), self._sort_cols())
+                dense = self._dense()
                 # arithmetic membership + explicit new ordinal (no driver-
                 # side position list): position start + i*step maps to
                 # ordinal i, so step<0 slices come back reversed like the
                 # reference's list slice
                 new_ord = (F.col(ROW_ORD) - F.lit(start)) / F.lit(step)
-                out = (
-                    dense.filter(_slice_member(start, stop, step))
-                    .withColumn(ROW_ORD, new_ord.cast("long"))
-                    .withColumn(EPOCH, F.lit(0).cast("long"))
+                out = dense.filter(_slice_member(start, stop, step)).withColumn(
+                    ROW_ORD, new_ord.cast("long")
                 )
                 return self._derive(out, keep_sort=False)._clear_sort()
             if (start is not None and start < 0) or (stop is not None and stop < 0):
                 n = len(self)
                 start, stop, _ = key.indices(n)
             start = start or 0
-            dense = dense_index(self._require_df(), self._sort_cols())
             pred = F.col(ROW_ORD) >= F.lit(start)
             if stop is not None:
                 pred = pred & (F.col(ROW_ORD) < F.lit(stop))
-            # dense positions are global across insert batches; reset the
-            # epoch so iteration order is the slice order, not batch order
-            out = dense.filter(pred).withColumn(EPOCH, F.lit(0).cast("long"))
-            return self._derive(out, keep_sort=False)._clear_sort()
+            return self._derive(self._dense().filter(pred), keep_sort=False)._clear_sort()
         # int
         idx = key
         if idx < 0:
@@ -627,8 +629,7 @@ class Table:
                 return  # schema-less empty table: nothing to delete
             n = len(self)
             start, stop, step = key.indices(n)
-            dense = dense_index(self._require_df(), self._sort_cols())
-            self._mutate(dense.filter(~_slice_member(start, stop, step)))
+            self._mutate(self._dense().filter(~_slice_member(start, stop, step)))
             return
         if isinstance(key, int):
             self.pop(key)
@@ -639,8 +640,7 @@ class Table:
         row = self[idx]
         if idx < 0:
             idx += len(self)
-        dense = dense_index(self._require_df(), self._sort_cols())
-        self._mutate(dense.filter(F.col(ROW_ORD) != F.lit(idx)))
+        self._mutate(self._dense().filter(F.col(ROW_ORD) != F.lit(idx)))
         return row
 
     def __repr__(self) -> str:
@@ -684,12 +684,20 @@ class Table:
                     all_keys.append(k)
         # tuples + explicit names: createDataFrame on dicts sorts keys
         # alphabetically, which would break first-seen field order
-        filled = [tuple(d.get(k) for k in all_keys) for d in dicts]
-        new_df = self.spark.createDataFrame(filled, schema=all_keys)
-        # NullType columns (all-None in batch) default to string
-        for f in new_df.schema.fields:
-            if isinstance(f.dataType, SQLT.NullType):
-                new_df = new_df.withColumn(f.name, F.col(f.name).cast("string"))
+        # a column that is None throughout the batch has no type to infer
+        # (createDataFrame refuses it): it takes the table's type, or
+        # string for a new column
+        typed = [k for k in all_keys if any(d.get(k) is not None for d in dicts)]
+        base = (
+            self.spark.createDataFrame([tuple(d.get(k) for k in typed) for d in dicts], schema=typed)
+            if typed
+            else self.spark.range(len(dicts))
+        )
+        known = {f.name: f.dataType for f in self._df.schema.fields} if self._df is not None else {}
+        new_df = base.select(*[
+            F.col(_q(k)) if k in typed else F.lit(None).cast(known.get(k, SQLT.StringType())).alias(k)
+            for k in all_keys
+        ])
         new_df = ensure_row_ord(new_df.withColumn(EPOCH, F.lit(self._next_epoch)))
         self._validate_unique(new_df)
         if self._df is None:
@@ -739,15 +747,11 @@ class Table:
 
     def remove(self, obj: Any) -> "Table":
         """Remove one matching occurrence (first in table order)."""
-        d = self._full_record_pred(obj)
-        if d is None:
+        try:
+            target = self.index(obj)
+        except ValueError:
             return self
-        dense = dense_index(self._require_df(), self._sort_cols())
-        pred = self._compile_kwargs(d)
-        target = dense.filter(pred).select(F.min(ROW_ORD).alias("m")).collect()[0]["m"]
-        if target is None:
-            return self
-        self._mutate(dense.filter(F.col(ROW_ORD) != F.lit(target)))
+        self._mutate(self._dense().filter(F.col(ROW_ORD) != F.lit(target)))
         self._sort = []
         return self
 
@@ -1226,7 +1230,7 @@ class Table:
     def rank(self, rank_col: str = "rank", start: int = 1) -> "Table":
         if self._df is None:
             return self
-        dense = dense_index(self._require_df(), self._sort_cols())
+        dense = self._dense()
         self._mutate(dense.withColumn(rank_col, (F.col(ROW_ORD) + F.lit(start)).cast("long")))
         self._sort = []
         return self
@@ -1252,14 +1256,16 @@ class Table:
         """Generator of n-row subtables (littletable.py:3616-3628)."""
         if self._df is None:
             return
-        dense = dense_index(self._require_df(), self._sort_cols())
-        dense = dense.withColumn("__batch__", (F.col(ROW_ORD) / F.lit(n)).cast("long"))
-        total = dense.count()
-        for b in range((total + n - 1) // n):
-            yield self._derive(
-                dense.filter(F.col("__batch__") == b).drop("__batch__"),
-                keep_sort=False,
-            )._clear_sort()
+        dense = self._dense().withColumn("__batch__", (F.col(ROW_ORD) / F.lit(n)).cast("long"))
+        # held while the generator lives, so B batches sort once; a batch
+        # read after that recomputes the same positions from lineage
+        with scoped_persist("batched") as scope:
+            total = scope.persist(dense).count()
+            for b in range((total + n - 1) // n):
+                yield self._derive(
+                    dense.filter(F.col("__batch__") == b).drop("__batch__"),
+                    keep_sort=False,
+                )._clear_sort()
 
     # ------------------------------------------------------------------ #
     # union (littletable.py:1445-1462)

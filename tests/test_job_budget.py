@@ -95,6 +95,24 @@ def test_load_events_runs_no_job(spark, root):
     assert len(ran) == 0
 
 
+@pytest.mark.parametrize("op", ["rank", "slice", "consecutive_runs"])
+def test_positional_plans_build_without_a_job(spark, op):
+    """Dense positions are a lazy plan (a sort plus Spark's distributed
+    sequence): building one runs nothing until the caller's action."""
+    from littletable_spark.operators.grouping import consecutive_runs
+
+    t = Table("positional", spark=spark)
+    t.insert_many([{"k": i % 3, "v": i} for i in range(30)])
+    t.orderby("k")
+    build = {
+        "rank": lambda: t.rank("r"),
+        "slice": lambda: t[10:20],
+        "consecutive_runs": lambda: consecutive_runs(t, "k", order_by="v"),
+    }[op]
+    _, ran = _run(spark, build)
+    assert len(ran) == 0, ran
+
+
 def test_ingest_and_compact_budgets(spark, root):
     corpus, bands, jobs = _two_batches(spark, root)
     counts = [len(j) for j in jobs]

@@ -5,11 +5,11 @@ included — must release what the call acquired.
 The count is ``getPersistentRDDs().size()``: one entry per materialized
 cache or local checkpoint. Each operator runs twice on DIFFERENT inputs;
 the second call may not leave more entries than the first. The pinned
-sites are exempt by design (layout pins in ``plans/ordering`` and
-``grouping``, and the local checkpoint a returned plan reads: the last
-``dup_clusters`` round, a tol= ``pagerank`` checkpoint, ``enrich_stream``
-dimension frames) — none of them is exercised here except the
-distributed ``dup_clusters``, whose allowance is its one last round."""
+sites are exempt by design (the local checkpoint a returned plan reads:
+the last ``dup_clusters`` round, a tol= ``pagerank`` checkpoint,
+``enrich_stream`` dimension frames) — none of them is exercised here
+except the distributed ``dup_clusters``, whose allowance is its one last
+round."""
 
 import shutil
 import tempfile
@@ -22,6 +22,7 @@ from littletable_spark import Table
 from littletable_spark.operators import dedup as D
 from littletable_spark.operators import graph as G
 from littletable_spark.operators import textops as T
+from littletable_spark.operators.grouping import consecutive_runs
 
 _WORDS = (
     "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu "
@@ -88,6 +89,32 @@ def _ingest(spark, variant: int):
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _bag(spark, variant: int) -> Table:
+    """A sorted two-epoch table with duplicate sort keys."""
+    t = Table(f"bag{variant}", spark=spark)
+    t.insert_many([{"k": (i * 7 + variant) % 4, "v": variant * 100 + i} for i in range(8)])
+    t.insert_many([{"k": i % 3, "v": variant * 100 + 50 + i} for i in range(6)])
+    return t.orderby("k")
+
+
+def _deleted(spark, variant: int):
+    t = _bag(spark, variant)
+    del t[::2]
+    return t.df
+
+
+def _removed(spark, variant: int):
+    t = _bag(spark, variant)
+    return t.remove({"k": variant % 4, "v": variant * 100}).df
+
+
+def _done(spark, tables):
+    """Read every yielded table, then hand back a trivial frame."""
+    for t in tables:
+        list(t)
+    return spark.createDataFrame([(1,)], "x int")
+
+
 def _tfidf_incr(spark, variant: int):
     import atexit
 
@@ -141,6 +168,17 @@ OPERATORS = [
     ("pagerank_driver", lambda s, v: G.pagerank(_edges(s, v), iterations=4).df),
     ("ingest_batch", _ingest),
     ("q_text_tfidf_incr", _tfidf_incr),
+    ("rank", lambda s, v: _bag(s, v).rank("r").df),
+    ("slice", lambda s, v: _bag(s, v)[3:9].df),
+    ("slice_stepped", lambda s, v: _bag(s, v)[10:1:-3].df),
+    ("del_slice", _deleted),
+    ("remove", _removed),
+    ("batched", lambda s, v: _done(s, _bag(s, v).batched(4))),
+    ("consecutive_runs", lambda s, v: consecutive_runs(_bag(s, v), "k", order_by="v").df),
+    ("groupby_lazy", lambda s, v: _done(
+        s, (sub for _, sub in _bag(s, v).groupby("k", materialize=False)))),
+    ("bm25_topk", lambda s, v: T.bm25_topk(
+        _docs(s, v), "text", "doc_id", "alpha beta tail", k=3).df),
 ]
 
 
@@ -150,6 +188,22 @@ def test_second_call_on_new_input_adds_no_persisted_rdds(spark, name, fn):
     after_first = _n(spark)
     fn(spark, 2).collect()
     assert _n(spark) <= after_first, name
+
+
+@pytest.mark.parametrize(
+    "query", ["rank", "slice_positional", "groupby_runs", "text_bm25", "text_bm25_incr"]
+)
+def test_registry_positional_queries_add_no_persisted_rdds(spark, monkeypatch, query):
+    """The positional registry rows on fresh (uncached) base tables:
+    each call leaves the persisted-RDD count where it found it."""
+    import __spark_entry__ as entry
+
+    monkeypatch.delenv("SPARK_GRAFT_CACHE_TABLES", raising=False)
+    q = entry.queries()[query]
+    for _ in range(2):
+        before = _n(spark)
+        q(spark, "/root/testdata/sf0.001").collect()
+        assert _n(spark) == before, query
 
 
 def test_distributed_pagerank_second_call_adds_nothing(spark, monkeypatch):

@@ -75,7 +75,7 @@ def test_global_sort_flagged_but_topk_is_not(spark):
 
 
 def test_repo_operators_lint_clean(spark):
-    """rank/slicing (partition-local numbering), groupby, joins — the
+    """rank/slicing (distributed sequence), groupby, joins — the
     operators built to dodge these traps must not trigger them."""
     t = Table("lintt", spark=spark)
     t.insert_many([{"k": i % 3, "v": float(i)} for i in range(30)])

@@ -16,6 +16,12 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _lint_codes(df) -> set[str]:
+    from littletable_spark.plans.lint import lint_plan
+
+    return {w.code for w in lint_plan(df)}
+
+
 def test_where_pushes_filters_and_prunes_columns(spark):
     li = Table.parquet_import(spark, "/root/testdata/sf0.001/lineitem.parquet")
     t = li.where(l_quantity=Table.gt(30.0)).select("l_orderkey l_quantity")
@@ -50,10 +56,10 @@ def test_rank_has_no_single_partition_window(spark):
     o = Table.parquet_import(spark, "/root/testdata/sf0.001/orders.parquet")
     o.orderby("o_totalprice desc, o_orderkey")
     o.rank("r")
-    plan = _plan(o.df)
-    # dense indexing uses partition-local numbering + broadcast offsets,
-    # never row_number over an empty partition spec
-    assert "Window" not in plan or "spark_partition_id" in plan.lower() or "__pid__" in plan
+    # dense indexing is a sort plus Spark's distributed sequence, never
+    # row_number over an empty partition spec
+    assert "single-partition-window" not in _lint_codes(o.df)
+    assert "AttachDistributedSequence" in _plan(o.df)
 
 
 def test_sketches_are_single_shuffle(spark):
@@ -145,21 +151,15 @@ def test_lsh_candidate_join_is_hash_join(spark):
 
 
 def test_consecutive_runs_has_no_global_window(spark):
-    """Run detection must stay partition-local (boundary-merged), never a
-    single-partition Window.orderBy with empty partition spec."""
-    import re
-
-    from pyspark.sql import functions as F
-
+    """Run detection must stay distributed (two distributed sequences),
+    never a single-partition Window.orderBy with empty partition spec."""
     from littletable_spark.operators.grouping import consecutive_runs
 
     t = Table("runs", spark=spark)
     t.insert_many([{"k": i % 3, "v": i} for i in range(50)])
     out = consecutive_runs(t, "k", order_by="v", n=F.count(F.lit(1)))
-    plan = out.df._jdf.queryExecution().executedPlan().toString()
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    assert specs, "expected partition-local window in plan"
-    assert all("__runpid__" in s for s in specs), specs
+    assert "single-partition-window" not in _lint_codes(out.df)
+    assert "AttachDistributedSequence" in _plan(out.df)
 
 
 def test_pipeline_projections_have_no_shuffle(spark):

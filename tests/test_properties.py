@@ -71,6 +71,101 @@ def test_head_slice_consistency(spark, rows, n):
     assert sliced == rows[:n]
 
 
+# ---- positional parity: the ordered bag against a Python list -------- #
+#
+# Every dense position (rank, slices, del/pop/remove/index, batched,
+# consecutive groupby) comes from a sort plus Spark's distributed
+# sequence. The table spans >= 4 partitions and >= 2 insert epochs, with
+# duplicate and None sort keys, so a numbering that followed partition
+# layout instead of the total order would show up here.
+
+_key = st.one_of(st.none(), st.integers(0, 3))
+# a later epoch may hold only None keys (the column keeps the table's
+# type); the first may not, since a new all-None column is typed string
+epochs_strategy = st.lists(
+    st.lists(st.tuples(_key, st.integers(-3, 3)), min_size=1, max_size=4),
+    min_size=2,
+    max_size=3,
+).filter(lambda es: any(a is not None for a, _ in es[0]))
+# each example runs tens of Spark jobs (the lazy groupby one per run)
+PARITY = settings(SETTINGS, max_examples=4)
+
+
+def _bag(spark, epochs, sort):
+    """(table, the same rows as a Python list in table order)."""
+    t = Table("bag", spark=spark)
+    for rows in epochs:
+        t.insert_many([{"a": a, "b": b} for a, b in rows])
+    # spread the rows; their order is carried by __epoch__/__row_ord__
+    t._mutate(t._require_df().repartition(4))
+    assert t._require_df().rdd.getNumPartitions() >= 4
+    rows = [r for e in epochs for r in e]
+    if sort:
+        t.orderby("a")  # ascending sorts NULL first, stably
+        rows = sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0))
+    return t, rows
+
+
+def _ab(t):
+    return [(r.a, r.b) for r in t]
+
+
+_index = st.one_of(st.none(), st.integers(-20, 20))
+_step = st.sampled_from([None, 1, 2, 3, -1, -2])
+
+
+@given(epochs=epochs_strategy, sort=st.booleans(), i=_index, j=_index, k=_step)
+@PARITY
+def test_rank_and_slices_match_python_list(spark, epochs, sort, i, j, k):
+    t, rows = _bag(spark, epochs, sort)
+    ranked = [(r.a, r.b, r.r) for r in t.clone().rank("r")]
+    assert ranked == [(a, b, n + 1) for n, (a, b) in enumerate(rows)]
+    assert _ab(t[i:j:k]) == rows[i:j:k]
+    assert _ab(t) == rows  # slicing leaves the table as it was
+
+
+@given(epochs=epochs_strategy, sort=st.booleans(), i=_index, j=_index,
+       k=_step, data=st.data())
+@PARITY
+def test_deletes_and_index_match_python_list(spark, epochs, sort, i, j, k, data):
+    t, rows = _bag(spark, epochs, sort)
+    c, expect = t.clone(), list(rows)
+    del c[i:j:k]
+    del expect[i:j:k]
+    assert _ab(c) == expect
+
+    at = data.draw(st.integers(-len(rows), len(rows) - 1))
+    c, expect = t.clone(), list(rows)
+    popped = c.pop(at)
+    assert (popped.a, popped.b) == expect.pop(at)
+    assert _ab(c) == expect
+
+    a, b = data.draw(st.sampled_from(rows))
+    assert t.index({"a": a, "b": b}) == rows.index((a, b))
+    c, expect = t.clone(), list(rows)
+    c.remove({"a": a, "b": b})
+    expect.remove((a, b))
+    assert _ab(c) == expect
+
+
+@given(epochs=epochs_strategy, sort=st.booleans(), n=st.integers(1, 5))
+@PARITY
+def test_batched_and_groupby_match_python_list(spark, epochs, sort, n):
+    from itertools import groupby
+
+    t, rows = _bag(spark, epochs, sort)
+    assert [_ab(b) for b in t.batched(n)] == [
+        rows[s : s + n] for s in range(0, len(rows), n)
+    ]
+    expect = [(key, list(g)) for key, g in groupby(rows, key=lambda r: r[0])]
+    for materialize in (True, False):
+        got = [(key, _ab(sub)) for key, sub in t.groupby("a", materialize=materialize)]
+        assert got == expect, materialize
+    by_key = sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0))
+    got = [(key, _ab(sub)) for key, sub in t.groupby("a", sort=True)]
+    assert got == [(key, list(g)) for key, g in groupby(by_key, key=lambda r: r[0])]
+
+
 # ---- xlsx codec round-trip (no Spark: pure driver-side codec) ---------- #
 
 _cell = st.one_of(
