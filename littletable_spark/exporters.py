@@ -394,5 +394,7 @@ def formatted_table(table, fields: Iterable[str], field_formats: dict[str, str])
             cols.append(F.format_string(printf, F.col(c)).alias(c))
         else:
             cols.append(F.col(c).cast("string").alias(c))
-    out = table._require_df().select(*cols, F.col("__epoch__"), F.col("__row_ord__"))
+    df = table._require_df()
+    # the internal columns carry the order (and any sort key) over
+    out = df.select(*cols, *[c for c in df.columns if c not in table.fields])
     return table._derive(out)

@@ -22,7 +22,7 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
-from ..plans.ordering import ROW_ORD
+from ..plans.ordering import ROW_ORD, ROW_SUB
 from ..table import EPOCH, Table, _q
 
 _RPREFIX = "__r__"
@@ -34,6 +34,20 @@ def _parse_attrlist(attrlist: Any) -> list[Any] | None:
     if isinstance(attrlist, str):
         return attrlist.replace(",", " ").split()
     return list(attrlist)
+
+
+def _row_sub(left_cols: list[str], right_cols: list[str], rp: str) -> str:
+    """SQL for the output ``__row_sub__``: the left row's own tie-break,
+    then the matched right row's order key. One left row matching several
+    right rows keeps its ``(__epoch__, __row_ord__)`` on every copy; this
+    orders the copies by the right table, so the order stays total."""
+    none = "cast(array() as array<bigint>)"
+    parts = [f"array({_q(rp + EPOCH)}, {_q(rp + ROW_ORD)})"]
+    if ROW_SUB in left_cols:
+        parts.insert(0, f"coalesce({_q(ROW_SUB)}, {none})")
+    if ROW_SUB in right_cols:
+        parts.append(f"coalesce({_q(rp + ROW_SUB)}, {none})")
+    return f"concat({', '.join(parts)})"
 
 
 def join_tables(
@@ -137,6 +151,7 @@ def join_tables(
     # offset)
     exprs.append(f"coalesce({_q(EPOCH)}, {_q(rp + EPOCH)} + 1000000) AS {_q(EPOCH)}")
     exprs.append(f"coalesce({_q(ROW_ORD)}, {_q(rp + ROW_ORD)}) AS {_q(ROW_ORD)}")
+    exprs.append(f"{_row_sub(ldf.columns, rdf.columns, rp)} AS {_q(ROW_SUB)}")
     out = joined.selectExpr(*exprs)
     name = f"{left.table_name}:{right.table_name}"
     t = left._derive(out, name=name, keep_sort=False)
@@ -173,11 +188,11 @@ def salted_join(
         lsalted["__salt__"] == rrepl["__salt__"]
     )
     joined = lsalted.join(rrepl, on=cond, how=how).drop("__salt__")
-    out_cols = [lsalted[c].alias(c) for c in ldf.columns] + [
+    out_cols = [lsalted[c].alias(c) for c in ldf.columns if c != ROW_SUB] + [
         rrepl[_RPREFIX + c].alias(c)
         for c in right.fields
         if c != right_key and c not in left.fields
-    ]
+    ] + [F.expr(_row_sub(ldf.columns, rdf.columns, _RPREFIX)).alias(ROW_SUB)]
     t = left._derive(joined.select(*out_cols), keep_sort=False)
     t._clear_sort()
     return t

@@ -19,10 +19,23 @@ Scale design notes (100 TB):
   Spark's distributed sequence (``AttachDistributedSequence``, the
   ``zipWithIndex`` behind pandas-on-Spark's ``distributed-sequence``
   index): one small count job per action, no single-partition bottleneck.
-  The plan is lazy and holds no cache past the action that runs it. Its
-  numbering is a function of the total order alone, so two actions over
-  the same sort columns agree whenever those columns are a total order —
-  ``Table._sort_cols()`` always ends with ``__epoch__``, ``__row_ord__``.
+  The plan is lazy and holds no cache past the action that runs it.
+
+Precondition — positions are a function of the order alone, so two actions
+number the rows alike only when the order columns are a total order whose
+values the source computes alike every time:
+
+- ``Table._sort_cols()`` ends with ``__epoch__``, ``__row_ord__`` and, when
+  present, ``__row_sub__``. ``(__epoch__, __row_ord__)`` is unique for rows
+  from reads and inserts. A join copies one left row's pair onto each of
+  its matches, so ``join_tables`` and ``salted_join`` stamp ``__row_sub__``
+  (the matched right row's order key) to keep the order total.
+- ``Table.from_df`` over a frame whose row order Spark does not fix (the
+  output of a shuffle: an aggregate, a join, a repartition) stamps
+  ``__row_ord__`` from the order in which the rows arrive, which a
+  recompute may change. Positional results over such a table agree across
+  actions only after ``orderby`` on a unique key, or while the table is
+  persisted (``Table.persist``).
 """
 
 from __future__ import annotations
@@ -32,9 +45,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.internal import InternalFunction
 
 ROW_ORD = "__row_ord__"
+#: tie-break after ``__epoch__``/``__row_ord__`` on join outputs (array of longs)
+ROW_SUB = "__row_sub__"
 
 #: internal columns that must never leak into user-visible output
-INTERNAL_COLS = (ROW_ORD,)
+INTERNAL_COLS = (ROW_ORD, ROW_SUB)
 
 
 def ensure_row_ord(df: DataFrame) -> DataFrame:

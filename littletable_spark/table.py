@@ -36,15 +36,15 @@ from .exceptions import (
     UniqueKeyViolation,
 )
 from .functions.rows import _normalize_value, to_row_dict
-from .plans.ordering import ROW_ORD, dense_index, ensure_row_ord
+from .plans.ordering import ROW_ORD, ROW_SUB, dense_index, ensure_row_ord
 from .session import scoped_persist
 from .sources.parquet_io import read_parquet
 
 EPOCH = "__epoch__"
 SORTKEY = "__sortkey__"
-# __run*__ are grouping's consecutive-run helper columns
-# (operators/grouping.py) — internal wherever a row object is built
-INTERNAL = (ROW_ORD, EPOCH, SORTKEY, "__run__", "__runpid__", "__runrn__", "__runlocal__")
+# __run__ is grouping's consecutive-run id (operators/grouping.py) —
+# internal wherever a row object is built
+INTERNAL = (ROW_ORD, ROW_SUB, EPOCH, SORTKEY, "__run__")
 
 
 def _is_internal(col_name: str) -> bool:
@@ -454,14 +454,16 @@ class Table:
             self._spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
         return self._spark
 
-    def _sort_cols(self) -> list[Column]:
-        cols: list[Column] = []
-        for expr, asc in self._sort:
-            c = F.expr(expr)
-            cols.append(c.asc() if asc else c.desc())
-        cols.append(F.col(EPOCH).asc())
-        cols.append(F.col(ROW_ORD).asc())
-        return cols
+    def _sort_cols(self, reverse: bool = False) -> list[Column]:
+        """The table order as sort columns (``reverse``: last row first):
+        the sort spec, then the order columns, which make it total."""
+        spec = list(self._sort) + [(EPOCH, True), (ROW_ORD, True)]
+        if self._df is not None and ROW_SUB in self._df.columns:
+            spec.append((ROW_SUB, True))
+        return [
+            F.expr(e).asc() if asc != reverse else F.expr(e).desc()
+            for e, asc in spec
+        ]
 
     def _ordered_df(self) -> DataFrame:
         return self._require_df().orderBy(*self._sort_cols())
@@ -470,8 +472,10 @@ class Table:
         """The rows with ``__row_ord__`` = dense position 0..n-1 in table
         order and one ``__epoch__``, so the order survives clearing the
         sort (positions are global across insert batches)."""
-        return dense_index(self._require_df(), self._sort_cols()).withColumn(
-            EPOCH, F.lit(0).cast("long")
+        return (
+            dense_index(self._require_df(), self._sort_cols())
+            .withColumn(EPOCH, F.lit(0).cast("long"))
+            .drop(ROW_SUB)
         )
 
     def _mutate(self, df: DataFrame) -> None:
@@ -524,15 +528,7 @@ class Table:
         )
 
     def __reversed__(self) -> Iterator[SimpleNamespace]:
-        rev = [
-            (expr, not asc) for expr, asc in self._sort
-        ] or []
-        df = self._require_df().orderBy(
-            *(
-                [F.expr(e).asc() if a else F.expr(e).desc() for e, a in rev]
-                + [F.col(EPOCH).desc(), F.col(ROW_ORD).desc()]
-            )
-        )
+        df = self._require_df().orderBy(*self._sort_cols(reverse=True))
         return (self._make_row(r) for r in df.toLocalIterator())
 
     def _full_record_pred(self, obj: Any) -> dict[str, Any] | None:
@@ -613,7 +609,7 @@ class Table:
 
     @staticmethod
     def _with_internal_reset(df: DataFrame) -> DataFrame:
-        df = df.drop(ROW_ORD, EPOCH)
+        df = df.drop(ROW_ORD, ROW_SUB, EPOCH)
         return Table._with_internal(df)
 
     def __delitem__(self, key: int | slice) -> None:
@@ -637,6 +633,9 @@ class Table:
         raise TypeError("Table index must be int or slice")
 
     def pop(self, idx: int = -1) -> SimpleNamespace:
+        """Remove and return the row at ``idx``: one job reads it, and a
+        lazy filter drops that position. Each call adds a global sort to
+        the lineage (see ``remove``)."""
         row = self[idx]
         if idx < 0:
             idx += len(self)
@@ -746,13 +745,21 @@ class Table:
                     )
 
     def remove(self, obj: Any) -> "Table":
-        """Remove one matching occurrence (first in table order)."""
-        try:
-            target = self.index(obj)
-        except ValueError:
+        """Remove one matching occurrence (first in table order).
+
+        One lazy plan, no job: matches sort first, in table order, so the
+        first match is sequence number 0. Each call adds a global sort to
+        the lineage, so a loop of positional edits (``remove``, ``pop``,
+        ``del t[i]``) slows with every step: do many as one
+        ``del t[i:j:k]``, ``remove_many`` or ``delete``."""
+        d = self._full_record_pred(obj)
+        if d is None or self._df is None:
             return self
-        self._mutate(self._dense().filter(F.col(ROW_ORD) != F.lit(target)))
-        self._sort = []
+        hit = F.coalesce(self._compile_kwargs(d), F.lit(False))
+        first = dense_index(
+            self._require_df(), [hit.desc(), *self._sort_cols()], out_col="__first__"
+        )
+        self._mutate(first.filter(~(hit & (F.col("__first__") == 0))).drop("__first__"))
         return self
 
     def remove_many(self, objs: Iterable[Any]) -> "Table":
@@ -1243,13 +1250,7 @@ class Table:
     def tail(self, n: int = 10) -> "Table":
         if self._df is None:
             return self._empty_like()
-        rev = self._require_df().orderBy(
-            *[
-                (F.expr(e).desc() if a else F.expr(e).asc())
-                for e, a in self._sort
-            ]
-            + [F.col(EPOCH).desc(), F.col(ROW_ORD).desc()]
-        )
+        rev = self._require_df().orderBy(*self._sort_cols(reverse=True))
         return self._derive(rev.limit(n))
 
     def batched(self, n: int) -> Iterator["Table"]:

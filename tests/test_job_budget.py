@@ -95,7 +95,7 @@ def test_load_events_runs_no_job(spark, root):
     assert len(ran) == 0
 
 
-@pytest.mark.parametrize("op", ["rank", "slice", "consecutive_runs"])
+@pytest.mark.parametrize("op", ["rank", "slice", "remove", "consecutive_runs"])
 def test_positional_plans_build_without_a_job(spark, op):
     """Dense positions are a lazy plan (a sort plus Spark's distributed
     sequence): building one runs nothing until the caller's action."""
@@ -107,6 +107,7 @@ def test_positional_plans_build_without_a_job(spark, op):
     build = {
         "rank": lambda: t.rank("r"),
         "slice": lambda: t[10:20],
+        "remove": lambda: t.remove({"k": 1, "v": 4}),
         "consecutive_runs": lambda: consecutive_runs(t, "k", order_by="v"),
     }[op]
     _, ran = _run(spark, build)

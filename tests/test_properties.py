@@ -4,7 +4,7 @@ suite has none of these (SURVEY §5.6); they guard the ordered-bag and
 filter semantics against edge inputs (negatives, duplicates, empty)."""
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, assume, given, settings
 from hypothesis import strategies as st
 
 from littletable_spark import Table
@@ -164,6 +164,57 @@ def test_batched_and_groupby_match_python_list(spark, epochs, sort, n):
     by_key = sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0))
     got = [(key, _ab(sub)) for key, sub in t.groupby("a", sort=True)]
     assert got == [(key, list(g)) for key, g in groupby(by_key, key=lambda r: r[0])]
+
+
+@given(
+    left=st.lists(st.integers(0, 2), min_size=2, max_size=4),
+    right=st.lists(st.tuples(st.integers(0, 2), st.integers(-2, 2)), min_size=2, max_size=6),
+    sort=st.booleans(),
+    i=_index,
+    k=_step,
+    data=st.data(),
+)
+@PARITY
+def test_positions_over_a_one_to_many_join_match_python_list(spark, left, right, sort, i, k, data):
+    """A join copies a left row's order pair onto each of its matches; the
+    right row's order breaks the tie, so every action numbers the copies
+    alike and in nested-loop order (left order, then right order)."""
+    assume(any(sum(rk == lk for rk, _ in right) > 1 for lk in left))
+    L, R = Table("L", spark=spark), Table("R", spark=spark)
+    for part in (left[:1], left[1:]):
+        L.insert_many([{"k": lk, "l": n} for n, lk in enumerate(part, len(L))])
+    for part in (right[: len(right) // 2], right[len(right) // 2 :]):
+        R.insert_many([{"k": rk, "r": r} for rk, r in part])
+    t = L.join(R, k="k")
+    t._mutate(t._require_df().repartition(4))
+    rows = [(lk, n, r) for n, lk in enumerate(left) for rk, r in right if rk == lk]
+    if sort:
+        t.orderby("k")
+        rows.sort(key=lambda x: x[0])
+
+    def klr(tbl):
+        return [(x.k, x.l, x.r) for x in tbl]
+
+    assert klr(t) == rows
+    assert [(x.l, x.r, x.n) for x in t.clone().rank("n")] == [
+        (n, r, p + 1) for p, (_, n, r) in enumerate(rows)
+    ]
+    assert klr(t[i::k]) == rows[i::k]
+    c, expect = t.clone(), list(rows)
+    del c[i::k]
+    del expect[i::k]
+    assert klr(c) == expect
+    at = data.draw(st.integers(-len(rows), len(rows) - 1))
+    c, expect = t.clone(), list(rows)
+    assert klr([c.pop(at)]) == [expect.pop(at)]
+    assert klr(c) == expect
+    target = data.draw(st.sampled_from(rows))
+    obj = dict(zip("klr", target))
+    assert t.index(obj) == rows.index(target)
+    c, expect = t.clone(), list(rows)
+    c.remove(obj)
+    expect.remove(target)
+    assert klr(c) == expect
 
 
 # ---- xlsx codec round-trip (no Spark: pure driver-side codec) ---------- #

@@ -131,6 +131,20 @@ def test_remove_one_occurrence(abc):
     assert abc.count({"a": 0, "b": 0, "c": 0}) == 1
 
 
+def test_insert_batch_with_an_all_none_column(spark):
+    """A column that is None on every row of a batch has no type to infer:
+    it takes the table's type, or string when the column is new."""
+    t = Table("nones", spark=spark)
+    t.insert_many([{"x": 1, "y": 2}])
+    t.insert_many([{"x": 3, "y": None, "z": None}, {"x": 4}])
+    types = dict(t.df.dtypes)
+    assert (types["y"], types["z"]) == ("bigint", "string")
+    t.insert_many([{"y": None}])  # no typed column at all
+    assert [(r.x, r.y, r.z) for r in t] == [
+        (1, 2, None), (3, None, None), (4, None, None), (None, None, None)
+    ]
+
+
 def test_contains_partial_record_does_not_match(abc):
     # whole-record equality: a partial dict is not "in" the table
     assert {"a": 1} not in abc
