@@ -121,7 +121,11 @@ def main() -> None:
     )
 
     # warmup pass: codegen/JIT compilation + parquet footer caches; the
-    # timed pass below measures steady-state execution
+    # timed pass below measures steady-state execution. Its compiled
+    # classes carry over only while every benched query's classes fit
+    # in Spark's codegen cache together: get_spark sizes it to 2000
+    # (one registry pass builds ~1,000); at Spark's default 100 each
+    # timed pass compiles its queries again.
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     for name in names:
         try:

@@ -369,6 +369,11 @@ def minhash_lsh_pairs(
     ]
     if against is None and against_bands is None:
         cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    # The first call fills the band cache inside this join, and AQE
+    # broadcasts whichever side it sees finish first; a repeat call
+    # reads the filled cache, sized exactly at planning, and broadcasts
+    # the right side. So the second call compiles that variant's
+    # classes once (seen on dedup_clusters); later calls compile none.
     pairs = (
         a.alias("a")
         .join(b.alias("b"), on=cond)
@@ -1131,6 +1136,11 @@ def semantic_dup_pairs(
         bb = pack(assigned_b).select(
             "cluster", F.col("__blk__").alias("b2"), F.col("items").alias("items2")
         )
+        # The build side of this join varies between calls: both sides
+        # are shuffle stages that run at once, and AQE broadcasts the
+        # one it sees finish first (exact size against the other's
+        # estimate). Each build side compiles its own classes once;
+        # Spark's codegen cache holds both, so later calls compile none.
         block_pairs = aa.join(bb, on="cluster")
 
     def emit(batches):

@@ -21,9 +21,9 @@ the reference's exact keyword bookkeeping —
   negative-only matches drop out (littletable.py:1866-1884).
 
 Spark-first design:
-- the index is a derived DataFrame ``(epoch, row_ord, word)`` built with
-  an Arrow-batched pandas UDF + ``explode`` — embarrassingly parallel,
-  persisted for repeated queries;
+- the index is a derived DataFrame ``(epoch, row_ord[, row_sub], word)``
+  built with an Arrow-batched pandas UDF + ``explode`` — embarrassingly
+  parallel, persisted for repeated queries;
 - a query broadcast-joins a tiny keyword table against the index and
   aggregates scores per row — one shuffle on the row key, no driver-side
   scan of table data (the only collects are one-row aggregates for the
@@ -46,7 +46,7 @@ from ..functions.normalize import (
     normalize_query_term,
     normalize_text,
 )
-from ..plans.ordering import ROW_ORD
+from ..plans.ordering import ROW_ORD, ROW_SUB
 from ..session import small_df
 
 BARE_WEIGHT = 100
@@ -97,12 +97,11 @@ class SearchIndex:
             words = F.array_distinct(toks)
 
         # key rows by (epoch, row_ord): row_ord alone is only unique
-        # within one insert batch
-        df = table._require_df().select(
-            F.col(EPOCH),
-            F.col(ROW_ORD),
-            F.explode(words).alias("word"),
-        )
+        # within one insert batch, and the copies of a row in a
+        # one-to-many join output differ only in row_sub
+        src = table._require_df()
+        keys = [EPOCH, ROW_ORD] + ([ROW_SUB] if ROW_SUB in src.columns else [])
+        df = src.select(*keys, F.explode(words).alias("word"))
         # the index owns this cache for its lifetime; the public
         # SearchIndex.unpersist (delete_search_index) releases it
         index_df = df.persist()
@@ -115,6 +114,19 @@ class SearchIndex:
             self.index_df.unpersist()
         except Exception:
             pass
+
+
+def _join_rows(left: DataFrame, right: DataFrame, keys: list[str], how: str = "inner"):
+    """``left`` joined to ``right`` on the row key, keeping ``left``'s key
+    columns. ``__row_sub__`` compares null-safely: rows inserted after a
+    join hold a null one."""
+    renamed = {k: f"__rk_{k}" for k in keys}
+    right = right.withColumnsRenamed(renamed)
+    on = [
+        left[k].eqNullSafe(right[r]) if k == ROW_SUB else left[k] == right[r]
+        for k, r in renamed.items()
+    ]
+    return left.join(right, on, how).drop(*renamed.values())
 
 
 def parse_query(query: str) -> list[tuple[str, str]]:
@@ -227,13 +239,12 @@ def search(
     spark = table.spark
     weights, excluded, groups = compile_query(query, idx.normalize, idx.stopwords)
 
-    from ..table import EPOCH
-
     if not weights and not groups:
         empty = table._require_df().limit(0)
         return table._derive(empty) if as_table else []
 
     index_df = idx.index_df
+    keys = [c for c in index_df.columns if c != "word"]
 
     # required-group cardinality rules (littletable.py:1852-1863): a group
     # with zero corpus hits empties the result; groups that all hit but
@@ -250,7 +261,7 @@ def search(
         # one job for both coverage statistics: per-row distinct-gid sets
         # (each bounded by len(groups), so the explode below is cheap at
         # any corpus size), then global max row-coverage + distinct gids
-        per_row_g = ghits.groupBy(EPOCH, ROW_ORD).agg(
+        per_row_g = ghits.groupBy(*keys).agg(
             F.collect_set("gid").alias("__g__")
         )
         summary = (
@@ -266,9 +277,7 @@ def search(
         if (summary["gids_hit"] or 0) < len(groups):
             empty = table._require_df().limit(0)
             return table._derive(empty) if as_table else []
-        per_row = per_row_g.select(
-            EPOCH, ROW_ORD, F.size("__g__").alias("__gh__")
-        )
+        per_row = per_row_g.select(*keys, F.size("__g__").alias("__gh__"))
         apply_required = (summary["max_gh"] or 0) == len(groups)
 
     weight_rows = [{"word": w, "weight": wt} for w, wt in weights.items()]
@@ -278,22 +287,21 @@ def search(
         )
         scored = (
             index_df.join(wdf, on="word")
-            .groupBy(EPOCH, ROW_ORD)
+            .groupBy(*keys)
             .agg(F.sum("weight").alias("__score__"))
         )
     else:
         scored = (
-            index_df.select(EPOCH, ROW_ORD)
+            index_df.select(*keys)
             .limit(0)
             .withColumn("__score__", F.lit(0).cast("long"))
         )
 
     if apply_required:
-        scored = scored.join(
-            per_row.filter(F.col("__gh__") == F.lit(len(groups))).select(
-                EPOCH, ROW_ORD
-            ),
-            on=[EPOCH, ROW_ORD],
+        scored = _join_rows(
+            scored,
+            per_row.filter(F.col("__gh__") == F.lit(len(groups))).select(*keys),
+            keys,
         )
     if excluded:
         edf = F.broadcast(
@@ -303,14 +311,14 @@ def search(
                 "word string",
             )
         )
-        excl_rows = index_df.join(edf, on="word").select(EPOCH, ROW_ORD).distinct()
-        scored = scored.join(excl_rows, on=[EPOCH, ROW_ORD], how="left_anti")
+        excl_rows = index_df.join(edf, on="word").select(*keys).distinct()
+        scored = _join_rows(scored, excl_rows, keys, "left_anti")
 
     if min_score is not None:
         scored = scored.filter(F.col("__score__") >= F.lit(min_score))
 
-    rows_df = table._require_df().join(
-        scored.select(EPOCH, ROW_ORD, "__score__"), on=[EPOCH, ROW_ORD]
+    rows_df = _join_rows(
+        table._require_df(), scored.select(*keys, "__score__"), keys
     )
     score_col = f"{attr}_search_score"
     words_col = f"{attr}_search_words"
@@ -318,10 +326,10 @@ def search(
     if include_words:
         # reference semantics: ALL of the row's index terms, sorted
         # (littletable.py:1888-1895), not just the matched ones
-        row_words = index_df.groupBy(EPOCH, ROW_ORD).agg(
+        row_words = index_df.groupBy(*keys).agg(
             F.array_sort(F.collect_set("word")).alias(words_col)
         )
-        rows_df = rows_df.join(row_words, on=[EPOCH, ROW_ORD], how="left")
+        rows_df = _join_rows(rows_df, row_words, keys, "left")
         rows_df = rows_df.withColumn(
             words_col,
             F.coalesce(F.col(words_col), F.array().cast("array<string>")),

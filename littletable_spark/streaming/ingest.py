@@ -155,7 +155,7 @@ def ingest_batch(
     # still in the (reader-invisible) temp dir — probing that state
     # would silently miss the settled corpus and admit duplicates.
     # Cost when nothing is pending: one fs.exists per enabled path.
-    from .maintenance import recover_asset
+    from .maintenance import _fs, _list_batch_dirs, recover_asset
 
     for p in (
         corpus_path, bands_path, lines_path, grams_path, sigs_path,
@@ -177,8 +177,6 @@ def ingest_batch(
     # listStatus + one footer read — the corpus data is never listed
     # recursively or scanned.
     if not allow_schema_drift:
-        from .maintenance import _fs, _list_batch_dirs
-
         fs, _, jvm = _fs(spark, corpus_path)
         dirs = _list_batch_dirs(fs, jvm, corpus_path)
         stored = None
@@ -221,11 +219,16 @@ def ingest_batch(
         probing them would match every doc against itself and
         overwrite the partition with nothing. The exclusion is on the
         partition column, so it prunes at scan. None if the index
-        doesn't exist yet (first batch)."""
+        doesn't exist yet (first batch): checked on the file system,
+        because Spark's reader would fail it in the analyzer and log a
+        stack trace per missing index."""
+        fs, jpath, _ = _fs(spark, path)
+        if not fs.exists(jpath):
+            return None
         try:
             df = read_parquet(spark, path)
         except AnalysisException:
-            return None
+            return None  # a directory with no data file yet
         return df.where(F.col("batch_id") != F.lit(bid))
 
     counts: dict[str, int] = {"batch_id": bid}

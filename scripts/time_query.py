@@ -4,10 +4,12 @@ Usage: python scripts/time_query.py NAME [NAME...] [--passes N] [--sf DIR]
 
 Replicates bench.py's steady-state methodology for a subset of queries:
 cached base tables, an untimed warmup pass, then per-query median over N
-timed passes against the noop sink. Prints one JSON line per query plus
-a JVM calibration figure so readings taken at different moments stay
-comparable. Used for same-box A/Bs during optimization rounds — the
-citable numbers remain the driver's BENCH artifacts.
+timed passes against the noop sink. Prints one JSON line per query, with
+the classes Spark compiled in each timed pass next to its sample (a
+nonzero count means that pass paid for codegen), plus a JVM calibration
+figure so readings taken at different moments stay comparable. Used for
+same-box A/Bs during optimization rounds — the citable numbers remain
+the driver's BENCH artifacts.
 """
 
 from __future__ import annotations
@@ -55,7 +57,11 @@ def main() -> None:
         ).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
-    # warmup: codegen + parquet caches + table cache fill
+    # warmup: parquet caches, table cache fill, and codegen. The warmup
+    # keeps its classes for the timed passes only while they fit in
+    # Spark's codegen cache, which get_spark sizes to 2000 classes; a
+    # session made elsewhere keeps Spark's 100, and the compiles column
+    # shows the timed passes compiling again.
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     for n in names:
         spark.sparkContext.setJobDescription(f"warmup {n}")
@@ -63,17 +69,25 @@ def main() -> None:
     cal_once()
     cal_pre = round(sorted(cal_once() for _ in range(3))[1], 3)
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     out = {}
     for n in names:
-        samples = []
+        samples, compiles = [], []
         for p in range(passes):
             spark.sparkContext.setJobDescription(f"timed {n} pass {p}")
+            c0 = compiled()
             t0 = time.perf_counter()
             queries[n](spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
+            compiles.append(compiled() - c0)
         med = sorted(samples)[len(samples) // 2]
         out[n] = {"median": med, "samples": samples}
-        print(json.dumps({"query": n, "median": med, "samples": samples}))
+        print(json.dumps({"query": n, "median": med, "samples": samples,
+                          "compiles": compiles}))
     cal_post = round(sorted(cal_once() for _ in range(3))[1], 3)
     print(json.dumps({
         "cal_pre": cal_pre, "cal_post": cal_post, "sf_dir": sf_dir,

@@ -125,6 +125,31 @@ def test_ingest_and_compact_budgets(spark, root):
     assert {r.doc_id for r in spark.read.parquet(corpus).collect()} == before
 
 
+def test_first_batch_reads_no_missing_index(spark, root, monkeypatch):
+    """A first batch finds its indexes missing on the file system, not
+    by sending each path through Spark's reader, which fails it in the
+    analyzer and logs a stack trace per index."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    read = DataFrameReader.parquet
+    missing = []
+
+    def parquet(self, *paths, **options):
+        missing.extend(p for p in paths if not os.path.exists(p))
+        return read(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    batch = _docs(spark, [(1, _BASE[0]), (2, _BASE[1])])
+    ingest_batch(
+        batch, 0, f"{root}/corpus", f"{root}/bands", collect_stats=False,
+        lines_path=f"{root}/lines", grams_path=f"{root}/grams",
+    )
+    assert missing == []
+    assert {r.doc_id for r in spark.read.parquet(f"{root}/corpus").collect()} == {1, 2}
+
+
 def test_ingest_write_pool_keeps_callers_job_group(spark, root):
     """The asset writes run on pool threads; they must carry the
     caller's job group, or cancelJobGroup cannot stop them."""

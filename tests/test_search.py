@@ -137,3 +137,28 @@ def test_stale_index_raises(journal):
         journal.search.entry("merge")
     journal.rebuild_search_index("entry")
     assert len(journal.search.entry("merge")) == 3
+
+
+def test_search_scores_each_copy_of_a_joined_row(spark):
+    """A one-to-many join repeats a left row's (epoch, row_ord) on every
+    copy; the index keys rows by __row_sub__ too, so each copy keeps its
+    own words and score. A row inserted after the join (null
+    __row_sub__) is found through the same null-safe key."""
+    left = Table("l", spark=spark)
+    left.insert_many([{"k": 1, "name": "x"}])
+    right = Table("r", spark=spark)
+    right.insert_many([{"k": 1, "txt": "apple pie"}, {"k": 1, "txt": "banana split"}])
+    j = left.join(right, k="k")
+    j.create_search_index("txt")
+    res = j.search.txt("apple", include_words=True, as_table=False)
+    assert [(ns.txt, ns.txt_search_words, s) for ns, s in res] == [
+        ("apple pie", ["apple", "pie"], 100)
+    ]
+
+    j.insert({"k": 2, "name": "y", "txt": "apple tart"})
+    j.rebuild_search_index("txt")
+    res = j.search.txt("apple", include_words=True, as_table=False)
+    assert sorted((ns.txt, ns.txt_search_words, s) for ns, s in res) == [
+        ("apple pie", ["apple", "pie"], 100),
+        ("apple tart", ["apple", "tart"], 100),
+    ]

@@ -46,3 +46,27 @@ def test_entry_loaders_apply_confs(spark):
         assert spark.conf.get(BYTES_KEY) == "2147483647b"
     finally:
         spark.conf.set(BYTES_KEY, prev)
+
+
+def test_codegen_cache_holds_more_than_sparks_default(spark):
+    """Compiled whole-stage classes live in one JVM-global cache that
+    holds 100 classes unless ``get_spark`` sizes it: a round of 150
+    plans with distinct generated code, compiled a second time, must
+    compile nothing. ``codegenToSeq`` generates and compiles each plan's
+    whole-stage code through that cache without running a job."""
+    from pyspark.sql import functions as F
+
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compile_round(plans) -> int:
+        before = metric.METRIC_COMPILATION_TIME().getCount()
+        for df in plans:
+            df._jdf.queryExecution().debug().codegenToSeq()
+        return metric.METRIC_COMPILATION_TIME().getCount() - before
+
+    plans = [
+        spark.range(4).select((F.col("id") * F.lit(7919 + i)).alias("x"))
+        for i in range(150)
+    ]
+    assert compile_round(plans) >= 150
+    assert compile_round(plans) == 0

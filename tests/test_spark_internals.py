@@ -34,3 +34,26 @@ def test_optimized_plan_size_in_bytes_is_a_positive_int(spark):
     df = spark.range(1000).withColumn("s", F.col("id").cast("string"))
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     assert int(str(size)) > 0
+
+
+def _compiles(spark) -> int:
+    return (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount()
+    )
+
+
+def test_codegen_compilation_count_counts_cache_misses(spark):
+    """``CodegenMetrics.METRIC_COMPILATION_TIME`` counts one entry per
+    class Janino compiles, i.e. per miss of Spark's codegen cache; the
+    session tests and ``scripts/time_query.py`` read compiles from it."""
+    import uuid
+
+    salt = uuid.uuid4().int % 10**12
+    df = spark.range(8).select((F.col("id") * F.lit(salt) + F.lit(salt)).alias("x"))
+    before = _compiles(spark)
+    df.collect()
+    after = _compiles(spark)
+    assert after > before
+    df.collect()
+    assert _compiles(spark) == after
