@@ -23,13 +23,15 @@ module implements the standard handler for exactly that case:
 
 The AES core derives its S-box and GF(2⁸) multiplication tables at
 import time from the public construction (multiplicative inverse +
-affine map) instead of embedding digit tables, and the block
-transform is numpy-vectorized across all blocks of a stream — CBC
-DECRYPTION parallelizes (every block's AES step is independent; the
-chaining XOR is a plain shifted-array XOR afterwards), so large
-streams decrypt at table-lookup speed rather than per-byte Python.
-The encrypt direction exists for the test-side fixture writers
-(tests/test_pdfcodec.py) — the differential that pins this module.
+affine map) instead of embedding digit tables. The decrypt transform
+is numpy-vectorized across all blocks of a stream — CBC DECRYPTION
+parallelizes (every block's AES step is independent; the chaining XOR
+is a plain shifted-array XOR afterwards), so large streams decrypt at
+table-lookup speed rather than per-byte Python. CBC encryption is a
+sequential chain, so it runs scalar T-table rounds per block over one
+key schedule; it serves Algorithm 2.B and the test-side fixture
+writers (tests/test_pdfcodec.py) — the differential that pins this
+module.
 
 Files with a real (non-empty) user password keep raising to
 ``on_error`` in every revision — /U validation fails by construction.
@@ -129,11 +131,8 @@ def _gf_tables():
 _SBOX, _INV_SBOX, _MUL = _gf_tables()
 _RCON = (0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36)
 
-#: ShiftRows / InvShiftRows index permutations over the 16-byte block
-#: in COLUMN-major (FIPS state) order: byte i = row i%4, col i//4
-_SHIFT = np.array(
-    [0, 5, 10, 15, 4, 9, 14, 3, 8, 13, 2, 7, 12, 1, 6, 11], dtype=np.int64
-)
+#: InvShiftRows index permutation over the 16-byte block in
+#: COLUMN-major (FIPS state) order: byte i = row i%4, col i//4
 _INV_SHIFT = np.array(
     [0, 13, 10, 7, 4, 1, 14, 11, 8, 5, 2, 15, 12, 9, 6, 3], dtype=np.int64
 )
@@ -162,19 +161,6 @@ def _expand_key(key: bytes):
     return rks
 
 
-def _mix_columns(s: np.ndarray) -> np.ndarray:
-    # s: (n, 16) column-major state
-    b = s.reshape(-1, 4, 4)  # (n, col, row)
-    a0, a1, a2, a3 = b[:, :, 0], b[:, :, 1], b[:, :, 2], b[:, :, 3]
-    m2, m3 = _MUL[2], _MUL[3]
-    out = np.empty_like(b)
-    out[:, :, 0] = m2[a0] ^ m3[a1] ^ a2 ^ a3
-    out[:, :, 1] = a0 ^ m2[a1] ^ m3[a2] ^ a3
-    out[:, :, 2] = a0 ^ a1 ^ m2[a2] ^ m3[a3]
-    out[:, :, 3] = m3[a0] ^ a1 ^ a2 ^ m2[a3]
-    return out.reshape(-1, 16)
-
-
 def _inv_mix_columns(s: np.ndarray) -> np.ndarray:
     b = s.reshape(-1, 4, 4)
     a0, a1, a2, a3 = b[:, :, 0], b[:, :, 1], b[:, :, 2], b[:, :, 3]
@@ -185,20 +171,6 @@ def _inv_mix_columns(s: np.ndarray) -> np.ndarray:
     out[:, :, 2] = m13[a0] ^ m9[a1] ^ m14[a2] ^ m11[a3]
     out[:, :, 3] = m11[a0] ^ m13[a1] ^ m9[a2] ^ m14[a3]
     return out.reshape(-1, 16)
-
-
-def _ecb_encrypt_blocks(key: bytes, blocks: np.ndarray) -> np.ndarray:
-    rks = _expand_key(key)
-    nr = len(rks) - 1
-    s = blocks ^ rks[0]
-    for r in range(1, nr):
-        s = _SBOX[s]
-        s = s[:, _SHIFT]
-        s = _mix_columns(s)
-        s = s ^ rks[r]
-    s = _SBOX[s]
-    s = s[:, _SHIFT]
-    return s ^ rks[nr]
 
 
 def _ecb_decrypt_blocks(key: bytes, blocks: np.ndarray) -> np.ndarray:
@@ -238,17 +210,72 @@ def aes128_cbc_encrypt(key: bytes, iv: bytes, plain: bytes) -> bytes:
     return iv + _cbc_encrypt_nopad(key, iv, plain)
 
 
+def _encrypt_tables():
+    """Encrypt-round T-tables over the S-box: ``te[r][x]`` is the
+    MixColumns column (big-endian word) that S-box output ``S[x]``
+    contributes from state row ``r``, so one round is 16 lookups and
+    XORs per block."""
+    m2, m3 = _MUL[2], _MUL[3]
+    te0 = [(int(m2[v]) << 24) | (int(v) << 16) | (int(v) << 8) | int(m3[v])
+           for v in _SBOX]
+    tes = [te0]
+    for _ in range(3):
+        tes.append([((w >> 8) | (w << 24)) & 0xFFFFFFFF for w in tes[-1]])
+    return tes, [int(v) for v in _SBOX]
+
+
+_TE, _SBOX_LIST = _encrypt_tables()
+
+
 def _cbc_encrypt_nopad(key: bytes, iv: bytes, plain: bytes) -> bytes:
     """Raw CBC encrypt, no padding, IV not prepended — Algorithm 2.B's
-    inner step and the /UE-wrap fixture direction."""
+    inner step and the /UE-wrap fixture direction. CBC encryption is a
+    sequential chain (each block's input is the previous ciphertext),
+    so it runs scalar rounds per block over one key schedule instead
+    of a vectorized transform of one block at a time."""
     assert len(plain) % 16 == 0
-    blocks = np.frombuffer(plain, dtype=np.uint8).reshape(-1, 16).copy()
-    prev = np.frombuffer(iv, dtype=np.uint8)
+    rk = [
+        int.from_bytes(r[i : i + 4].tobytes(), "big")
+        for r in _expand_key(key)
+        for i in (0, 4, 8, 12)
+    ]
+    nr = len(rk) // 4 - 1
+    te0, te1, te2, te3 = _TE
+    sb = _SBOX_LIST
+    words = struct.unpack(f">{len(plain) // 4}I", plain)
+    c0, c1, c2, c3 = struct.unpack(">4I", iv)
     out = []
-    for i in range(len(blocks)):
-        prev = _ecb_encrypt_blocks(key, (blocks[i] ^ prev)[np.newaxis, :])[0]
-        out.append(prev)
-    return b"".join(b.tobytes() for b in out)
+    for b in range(0, len(words), 4):
+        s0 = words[b] ^ c0 ^ rk[0]
+        s1 = words[b + 1] ^ c1 ^ rk[1]
+        s2 = words[b + 2] ^ c2 ^ rk[2]
+        s3 = words[b + 3] ^ c3 ^ rk[3]
+        for k in range(4, 4 * nr, 4):
+            # SubBytes + ShiftRows + MixColumns + AddRoundKey: output
+            # column c takes row r from input column (c + r) % 4
+            s0, s1, s2, s3 = (
+                te0[s0 >> 24] ^ te1[(s1 >> 16) & 255]
+                ^ te2[(s2 >> 8) & 255] ^ te3[s3 & 255] ^ rk[k],
+                te0[s1 >> 24] ^ te1[(s2 >> 16) & 255]
+                ^ te2[(s3 >> 8) & 255] ^ te3[s0 & 255] ^ rk[k + 1],
+                te0[s2 >> 24] ^ te1[(s3 >> 16) & 255]
+                ^ te2[(s0 >> 8) & 255] ^ te3[s1 & 255] ^ rk[k + 2],
+                te0[s3 >> 24] ^ te1[(s0 >> 16) & 255]
+                ^ te2[(s1 >> 8) & 255] ^ te3[s2 & 255] ^ rk[k + 3],
+            )
+        k = 4 * nr  # final round: no MixColumns
+        c0, c1, c2, c3 = (
+            (sb[s0 >> 24] << 24 | sb[(s1 >> 16) & 255] << 16
+             | sb[(s2 >> 8) & 255] << 8 | sb[s3 & 255]) ^ rk[k],
+            (sb[s1 >> 24] << 24 | sb[(s2 >> 16) & 255] << 16
+             | sb[(s3 >> 8) & 255] << 8 | sb[s0 & 255]) ^ rk[k + 1],
+            (sb[s2 >> 24] << 24 | sb[(s3 >> 16) & 255] << 16
+             | sb[(s0 >> 8) & 255] << 8 | sb[s1 & 255]) ^ rk[k + 2],
+            (sb[s3 >> 24] << 24 | sb[(s0 >> 16) & 255] << 16
+             | sb[(s1 >> 8) & 255] << 8 | sb[s2 & 255]) ^ rk[k + 3],
+        )
+        out += (c0, c1, c2, c3)
+    return struct.pack(f">{len(out)}I", *out)
 
 
 def _cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:

@@ -13,7 +13,10 @@ Scale design (100 TB):
   generation; hot buckets are bounded by band width choice and AQE skew
   handling;
 - exact pairwise Jaccard/cosine exist as the small-N verification path;
-  candidate generation at scale always goes through LSH first.
+  candidate generation at scale always goes through LSH first;
+- embedding near-dup scoring runs similarity.py's dense-vector kernels
+  (centroid assignment, the block-pair threshold matmul, row-pair
+  cosine), defined once there and shared with the top-k rankers.
 - hashes are md5-based (not Spark's murmur3) so results are engine-
   portable and oracle-checkable in DuckDB.
 """
@@ -28,6 +31,16 @@ from pyspark.sql import functions as F
 
 from ..session import scoped_persist, small_df
 from ..table import Table
+from .similarity import (
+    _assign_pass,
+    _block_pair_pass,
+    _pack_blocks,
+    _planes,
+    _row_pair_pass,
+    cosine_expr,
+    lsh_signature,
+    resolve_centroids,
+)
 
 # Self-join pair generators consume their signature/shingle intermediate
 # 2-4x; without an explicit persist Spark re-runs the whole shuffled +
@@ -714,28 +727,30 @@ def embedding_dup_pairs(
     the executor-OOM/driver-collect failure modes of a broadcast
     formulation are gone. Work is inherently O(N²/B) block pairs: this is
     the exact path; the sub-quadratic scale path is
-    ``embedding_lsh_dup_pairs``.
+    ``embedding_lsh_dup_pairs``. Packing and scoring are the block-pair
+    kernel ``semantic_dup_pairs`` runs (``similarity._pack_blocks`` and
+    ``_block_pair_pass``), over one label; ids keep their dtype, so
+    string ids order lexicographically.
     """
     import math
 
     df = table.df.select(id_col, vec_col)
+    id_dtype = dict(df.dtypes)[id_col]
+    schema = f"id1 {id_dtype}, id2 {id_dtype}, cosine double"
     n = df.count()
     if n == 0:
-        empty = table.spark.createDataFrame(
-            [], "id1 long, id2 long, cosine double"
-        )
+        empty = table.spark.createDataFrame([], schema)
         return Table.from_df(empty, name=f"{table.table_name}_embedding_pairs")
     # small corpora still want parallel block pairs: target >= ~8 blocks
     # (36 pair-tasks) while keeping per-task memory <= block_rows vectors
     eff_block_rows = min(block_rows, max(256, math.ceil(n / 8)))
     n_blocks = max(1, math.ceil(n / eff_block_rows))
-    blocked = df.select(
-        F.col(id_col).alias("__id__"),
-        F.col(vec_col).cast("array<double>").alias("__vec__"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("__blk__"),
-    )
-    packed = blocked.groupBy("__blk__").agg(
-        F.collect_list(F.struct("__id__", "__vec__")).alias("items")
+    packed = _pack_blocks(
+        df.select(
+            F.col(id_col).alias("__id__"),
+            F.col(vec_col).cast("array<double>").alias("__vec__"),
+        ),
+        F.lit(n_blocks),
     )
     # the self-join consumes the packed frame TWICE (a and b sides) and
     # exchange reuse does not dedupe the two aggregation subtrees (the
@@ -746,36 +761,9 @@ def embedding_dup_pairs(
     a = packed.select(F.col("__blk__").alias("b1"), F.col("items").alias("items1"))
     b = packed.select(F.col("__blk__").alias("b2"), F.col("items").alias("items2"))
     block_pairs = a.join(b, F.col("b1") <= F.col("b2"))
-
-    def emit(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                ids1 = np.array([e["__id__"] for e in row["items1"]], dtype=np.int64)
-                M1 = np.array([list(e["__vec__"]) for e in row["items1"]], dtype=np.float64)
-                ids2 = np.array([e["__id__"] for e in row["items2"]], dtype=np.int64)
-                M2 = np.array([list(e["__vec__"]) for e in row["items2"]], dtype=np.float64)
-                S = np.round(
-                    (M1 @ M2.T)
-                    / np.outer(np.linalg.norm(M1, axis=1), np.linalg.norm(M2, axis=1)),
-                    6,
-                )
-                if row["b1"] == row["b2"]:
-                    keep = (S >= threshold) & (ids1[:, None] < ids2[None, :])
-                    bi, mj = np.nonzero(keep)
-                    id1, id2 = ids1[bi], ids2[mj]
-                else:
-                    keep = S >= threshold
-                    bi, mj = np.nonzero(keep)
-                    x, y = ids1[bi], ids2[mj]
-                    id1, id2 = np.minimum(x, y), np.maximum(x, y)
-                yield pd.DataFrame({"id1": id1, "id2": id2, "cosine": S[bi, mj]})
-
     out = block_pairs.repartition(
         max(32, min(n_blocks * (n_blocks + 1) // 2, 512))
-    ).mapInPandas(emit, "id1 long, id2 long, cosine double")
+    ).mapInPandas(_block_pair_pass(threshold, True, (id_dtype, id_dtype)), schema)
     return Table.from_df(out, name=f"{table.table_name}_embedding_pairs")
 
 
@@ -794,8 +782,6 @@ def embedding_signature_table(
     against_sigs=sigs)`` — the corpus vectors are carried in the table
     so candidate scoring needs no second corpus source. n_planes / dim
     / seed must match the probe call's (they define the plane matrix)."""
-    from .similarity import _planes, lsh_signature
-
     planes = _planes(dim, n_planes, seed)
     out = table.df.select(
         F.col(id_col),
@@ -855,8 +841,6 @@ def embedding_lsh_dup_pairs(
     prior run): the corpus is never rescanned or re-signed — probe
     cost is the new batch's signatures plus the bucket join against
     the stored index. Build parameters must match this call's."""
-    from .similarity import _planes, cosine_expr, lsh_signature
-
     if probe_bits not in (0, 1):
         raise ValueError("probe_bits must be 0 (off) or 1 (single-bit multiprobe)")
     if against is not None and against_sigs is not None:
@@ -934,26 +918,11 @@ def embedding_lsh_dup_pairs(
         ).where(F.col("cosine") >= F.lit(threshold))
         return Table.from_df(out, name=f"{table.table_name}_embedding_lsh_pairs")
 
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.stack(pdf["v1"].to_numpy()).astype(np.float64, copy=False)
-            B = np.stack(pdf["v2"].to_numpy()).astype(np.float64, copy=False)
-            cos = np.round(
-                np.einsum("ij,ij->i", A, B)
-                / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)),
-                6,
-            )
-            out = pd.DataFrame(
-                {"id1": pdf["id1"], "id2": pdf["id2"], "cosine": cos}
-            )
-            yield out[out["cosine"] >= threshold]
-
-    out = cand.mapInPandas(score, "id1 long, id2 long, cosine double")
+    dt = dict(cand.dtypes)
+    out = cand.mapInPandas(
+        _row_pair_pass(("id1", "id2"), ("v1", "v2"), threshold),
+        f"id1 {dt['id1']}, id2 {dt['id2']}, cosine double",
+    )
     return Table.from_df(out, name=f"{table.table_name}_embedding_lsh_pairs")
 
 
@@ -995,8 +964,9 @@ def semantic_dup_pairs(
     ``id1 < id2`` is then lexicographic); NULL-labeled rows belong to
     no block and are excluded.
 
-    Scoring reuses ``embedding_dup_pairs``' block-matmul formulation,
-    restricted to same-cluster block pairs: each cluster is hashed
+    Scoring is ``embedding_dup_pairs``' block-matmul kernel
+    (``similarity._pack_blocks`` / ``_block_pair_pass``), restricted to
+    same-cluster block pairs: each cluster is hashed
     into sub-blocks of ≤ ``block_rows`` vectors (sized from an exact
     k-row count agg, broadcast back), every same-cluster unordered
     block pair is one BLAS matmul task. Per-task memory stays bounded
@@ -1025,8 +995,6 @@ def semantic_dup_pairs(
 
     a_narrow = _narrow(table)
     id_dtype_a = dict(a_narrow.dtypes)["__id__"]
-    _INTS = ("tinyint", "smallint", "int", "bigint")
-    int_a = id_dtype_a in _INTS
 
     if clusters is not None:
         # external blocking labels (any dtype — domain strings, topic
@@ -1044,9 +1012,8 @@ def semantic_dup_pairs(
         # internal clustering: assign in ONE Arrow pass that carries the
         # vectors straight through — no corpus-vs-assignment join (at
         # 100 TB that join is a second corpus scan plus a shuffle). In
-        # incremental mode the model comes from the CORPUS side.
-        from .similarity import resolve_centroids
-
+        # incremental mode the model comes from the CORPUS side. The
+        # argmax is over rounded scores, as in cluster_embeddings.
         model_side = against if against is not None else table
         bc = table.spark.sparkContext.broadcast(
             resolve_centroids(
@@ -1054,28 +1021,7 @@ def semantic_dup_pairs(
                 seed, init_ids, centroids,
             )
         )
-
-        def assign(batches):
-            import numpy as np
-            import pandas as pd
-
-            cents = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                M = np.stack(pdf["__vec__"].to_numpy()).astype(np.float64, copy=False)
-                norms = np.linalg.norm(M, axis=1, keepdims=True)
-                Mn = M / np.where(norms == 0, 1.0, norms)
-                # same rounded-argmax total order as cluster_embeddings
-                cl = np.argmax(np.round(Mn @ cents.T, 6), axis=1)
-                yield pd.DataFrame(
-                    {
-                        "__id__": pdf["__id__"],
-                        "__vec__": pdf["__vec__"],
-                        "cluster": cl.astype(np.int32),
-                    }
-                )
-
+        assign = _assign_pass(bc, "__vec__", ("__id__", "__vec__"), rounded=True)
         cluster_dtype = "int"
 
         def attach(narrow, dt):
@@ -1092,14 +1038,10 @@ def semantic_dup_pairs(
                 F.lit(1), F.ceil(F.col("count") / F.lit(block_rows))
             ).cast("int").alias("__nsub__"),
         )
-        return (
-            assigned.join(F.broadcast(sized), on="cluster")
-            .withColumn(
-                "__blk__",
-                F.pmod(F.xxhash64(F.col("__id__")), F.col("__nsub__")).cast("int"),
-            )
-            .groupBy("cluster", "__blk__")
-            .agg(F.collect_list(F.struct("__id__", "__vec__")).alias("items"))
+        return _pack_blocks(
+            assigned.join(F.broadcast(sized), on="cluster"),
+            F.col("__nsub__"),
+            "cluster",
         )
 
     with scoped_persist("semantic_dup_pairs") as scope:
@@ -1125,14 +1067,13 @@ def semantic_dup_pairs(
     )
     if against is None:
         symmetric = True
-        id_dtype_b, int_b = id_dtype_a, int_a
+        id_dtype_b = id_dtype_a
         bb = packed_a.select(
             "cluster", F.col("__blk__").alias("b2"), F.col("items").alias("items2")
         )
         block_pairs = aa.join(bb, on="cluster").where(F.col("b1") <= F.col("b2"))
     else:
         symmetric = False
-        int_b = id_dtype_b in _INTS
         bb = pack(assigned_b).select(
             "cluster", F.col("__blk__").alias("b2"), F.col("items").alias("items2")
         )
@@ -1143,49 +1084,6 @@ def semantic_dup_pairs(
         # Spark's codegen cache holds both, so later calls compile none.
         block_pairs = aa.join(bb, on="cluster")
 
-    def emit(batches):
-        import numpy as np
-        import pandas as pd
-
-        id_np1 = np.int64 if int_a else object
-        id_np2 = np.int64 if int_b else object
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                ids1 = np.array([e["__id__"] for e in row["items1"]], dtype=id_np1)
-                M1 = np.array(
-                    [list(e["__vec__"]) for e in row["items1"]], dtype=np.float64
-                )
-                ids2 = np.array([e["__id__"] for e in row["items2"]], dtype=id_np2)
-                M2 = np.array(
-                    [list(e["__vec__"]) for e in row["items2"]], dtype=np.float64
-                )
-                S = np.round(
-                    (M1 @ M2.T)
-                    / np.outer(
-                        np.linalg.norm(M1, axis=1), np.linalg.norm(M2, axis=1)
-                    ),
-                    6,
-                )
-                if not symmetric:
-                    bi, mj = np.nonzero(S >= threshold)
-                    id1, id2 = ids1[bi], ids2[mj]
-                elif row["b1"] == row["b2"]:
-                    keep = (S >= threshold) & (ids1[:, None] < ids2[None, :])
-                    bi, mj = np.nonzero(keep)
-                    id1, id2 = ids1[bi], ids2[mj]
-                else:
-                    bi, mj = np.nonzero(S >= threshold)
-                    x, y = ids1[bi], ids2[mj]
-                    id1, id2 = np.minimum(x, y), np.maximum(x, y)
-                yield pd.DataFrame(
-                    {
-                        "id1": id1,
-                        "id2": id2,
-                        "cluster": pd.Series([row["cluster"]] * len(id1)),
-                        "cosine": S[bi, mj],
-                    }
-                )
-
     # hash-spread block pairs so a hot cluster's matmul tasks don't all
     # land in the join's per-cluster output partition; no explicit N —
     # shuffle.partitions governs fan-out at scale and AQE coalesces the
@@ -1194,7 +1092,9 @@ def semantic_dup_pairs(
     out = block_pairs.repartition(
         F.col("cluster"), F.col("b1"), F.col("b2")
     ).mapInPandas(
-        emit,
+        _block_pair_pass(
+            threshold, symmetric, (id_dtype_a, id_dtype_b), label="cluster"
+        ),
         f"id1 {id_dtype_a}, id2 {id_dtype_b}, cluster {cluster_dtype}, cosine double",
     )
     return Table.from_df(out, name=f"{table.table_name}_semantic_pairs")

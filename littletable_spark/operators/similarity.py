@@ -1,20 +1,36 @@
 """Similarity search over embedding columns.
 
 Net-new over the reference (north-star requirement): brute-force cosine
-top-k as the exact baseline, plus random-hyperplane LSH bucketing as the
-scale path (candidates from matching buckets only, then exact re-rank).
+top-k as the exact baseline, random-hyperplane LSH bucketing (candidates
+from matching buckets only, then exact re-rank), IVF with an optional
+product-quantized index, and spherical k-means clustering.
 
 Scale design (100 TB):
-- cosine is a native higher-order-function expression (zip_with +
-  aggregate) — whole-stage codegen, no Python;
 - brute-force is query-broadcast × corpus — linear scan, no shuffle
   beyond the final per-query top-k;
-- LSH replaces the linear scan with an equi-join on bucket signature;
-  plane count trades recall vs candidate volume. An IVF (k-means
-  coarse quantizer) variant would follow the same candidate-join shape.
+- LSH replaces the linear scan with an equi-join on bucket signature
+  (a native higher-order-function expression, whole-stage codegen);
+  plane count trades recall vs candidate volume;
+- IVF probes ``nprobe`` of ``nlist`` k-means lists, with a static
+  cluster predicate a partitioned stored index prunes at the scan.
+
+Dense scoring runs in numpy over Arrow batches, through four kernels
+defined once here and shared with dedup.py:
+- per-query top-k over a scored batch, merged by one ``row_number``
+  window (``_topk_search``, ``_rank_per_query``) — the
+  local-top-k-then-merge shape of REPOSE (ICDE 2021);
+- nearest-centroid scoring (``_assign_clusters``, run by
+  ``_assign_pass``);
+- the block-pair threshold matmul (``_pack_blocks`` +
+  ``_block_pair_pass``);
+- row-pair cosine (``_row_pair_pass``).
+Every cosine is dot / (|a|·|b|) rounded to 6 places, the op order of
+the JVM fold (``cosine_expr``) and of the DuckDB oracle.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -32,18 +48,29 @@ from ..table import Table
 MAX_QUERY_VECTORS = 65536
 
 
-def _collect_query_vectors(df: DataFrame, max_queries: int) -> list:
-    """Bounded collect of the query side: raises ``ValueError`` instead
-    of silently OOMing the driver when the query table exceeds the cap
-    (checked with a ``limit(cap+1)`` scan, not a full count)."""
-    rows = df.limit(max_queries + 1).collect()
+def _query_matrix(
+    queries: Table, qid: str, vec_col: str, max_queries: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Collect the query side of a top-k search: (ids, vectors, norms).
+    Bounded: raises ``ValueError`` instead of silently OOMing the driver
+    when the query table exceeds the cap (checked with a
+    ``limit(cap+1)`` scan, not a full count)."""
+    rows = (
+        queries.df.select(qid, F.col(vec_col).cast("array<double>"))
+        .limit(max_queries + 1)
+        .collect()
+    )
     if len(rows) > max_queries:
         raise ValueError(
             f"query table exceeds max_queries={max_queries}; top-k search "
             "broadcasts the query side — chunk the queries or raise "
             "max_queries explicitly if the driver has the memory"
         )
-    return rows
+    q_ids = np.array([int(r[0]) for r in rows], dtype=np.int64)
+    Q = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    if not rows:
+        Q = Q.reshape(0, 0)
+    return q_ids, Q, np.linalg.norm(Q, axis=1)
 
 
 def _vec_matrix(series) -> np.ndarray:
@@ -55,6 +82,277 @@ def _vec_matrix(series) -> np.ndarray:
     Series or any sequence of vectors."""
     cells = series.to_numpy() if hasattr(series, "to_numpy") else series
     return np.stack(cells).astype(np.float64, copy=False)
+
+
+def _cosine_matrix(A: np.ndarray, B: np.ndarray, b_norms: np.ndarray) -> np.ndarray:
+    """Rounded cosine of every row of ``A`` against every row of ``B``:
+    one BLAS matmul, then dot / (|a|·|b|) — the op order of the JVM
+    fold and DuckDB, so every matmul path scores bit-identically."""
+    return np.round((A @ B.T) / np.outer(np.linalg.norm(A, axis=1), b_norms), 6)
+
+
+def _cosine_scores(pdf, Q: np.ndarray, q_norms: np.ndarray) -> np.ndarray:
+    """Top-k scorer: exact rounded cosine of the batch's ``cvec`` rows
+    against every query, (rows × queries)."""
+    return _cosine_matrix(_vec_matrix(pdf["cvec"]), Q, q_norms)
+
+
+def _adc_scores(
+    pdf, lut: np.ndarray, code_norm2: np.ndarray, q_norms: np.ndarray
+) -> np.ndarray:
+    """Top-k scorer over PQ ``codes``: asymmetric-distance cosine from
+    the per-subspace lookup tables (``lut`` (m, nq, ksub), ``code_norm2``
+    (m, ksub)), (rows × queries). Approximate: it only orders
+    candidates for the exact re-rank."""
+    m = lut.shape[0]
+    U = np.stack(
+        [np.frombuffer(b, dtype=np.uint8, count=m) for b in pdf["codes"]]
+    )  # (n, m)
+    D = np.zeros((lut.shape[1], len(U)), dtype=np.float64)
+    v2 = np.zeros(len(U), dtype=np.float64)
+    for s in range(m):
+        D += lut[s][:, U[:, s]]
+        v2 += code_norm2[s][U[:, s]]
+    vnorm = np.sqrt(v2)
+    denom = np.where(vnorm == 0, 1.0, vnorm)[None, :] * np.where(
+        q_norms == 0, 1.0, q_norms
+    )[:, None]
+    return (D / denom).T
+
+
+def _rank_per_query(
+    scored: DataFrame, n: int, score_col: str = "cosine", rank_col: str = "rank"
+) -> DataFrame:
+    """Merge per-batch candidates into each query's top ``n``: the one
+    ``row_number`` window, ordered by score desc then ``corpus_id``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("corpus_id").asc()
+    )
+    return scored.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= F.lit(n)
+    )
+
+
+def _topk_search(
+    cdf: DataFrame,
+    q_ids: np.ndarray,
+    score,
+    n: int,
+    allowed: dict | None = None,
+    score_col: str = "cosine",
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The one per-query top-k kernel: local top-``n`` per Arrow batch,
+    then one window merge (``_rank_per_query``), so the shuffle carries
+    ≤ n·batches rows per query instead of the full N·Q score matrix.
+
+    ``score(pdf)`` turns a batch of ``corpus_id`` rows into a (rows ×
+    queries) score matrix; ``allowed`` (or ``None``) maps each
+    ``cluster`` to the queries that probe it. Each batch emits at most
+    ``n`` rows per query: the highest scores, ties broken toward the
+    lower ``corpus_id`` (the total order the window merges by), never
+    the query itself.
+    """
+    bq = cdf.sparkSession.sparkContext.broadcast((q_ids, score, allowed))
+
+    def topk(batches):
+        import pandas as pd
+
+        q_ids, score, allowed = bq.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            S = score(pdf)
+            cids = pdf["corpus_id"].to_numpy()
+            probes = (
+                None
+                if allowed is None
+                else np.stack([allowed[int(c)] for c in pdf["cluster"]])
+            )
+            frames = []
+            for qi, qv in enumerate(q_ids):
+                ok = cids != qv
+                if probes is not None:
+                    ok &= probes[:, qi]
+                idx = np.nonzero(ok)[0]
+                if idx.size == 0:
+                    continue
+                col = S[:, qi]
+                sel = idx[np.lexsort((cids[idx], -col[idx]))[:n]]
+                frames.append(
+                    pd.DataFrame(
+                        {"query_id": qv, "corpus_id": cids[sel], score_col: col[sel]}
+                    )
+                )
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    local = cdf.mapInPandas(
+        topk, f"query_id long, corpus_id long, {score_col} double"
+    )
+    return _rank_per_query(local, n, score_col, rank_col)
+
+
+def _empty_topk(spark, name: str) -> Table:
+    return Table.from_df(
+        spark.createDataFrame(
+            [], "query_id long, corpus_id long, cosine double, rank int"
+        ),
+        name=name,
+    )
+
+
+def _probe_plan(
+    Q: np.ndarray, q_norms: np.ndarray, cents: np.ndarray, nprobe: int
+) -> tuple[list, dict]:
+    """Each query probes its ``nprobe`` nearest centroids. Returns the
+    sorted union of probed clusters (a static scan predicate a
+    cluster-partitioned stored index prunes by) and, per probed
+    cluster, the boolean mask of the queries that probe it."""
+    Qn = Q / np.where(q_norms == 0, 1.0, q_norms)[:, None]
+    top = np.argsort(-(Qn @ cents.T), axis=1)[:, : min(nprobe, len(cents))]
+    probe_sets = [set(int(c) for c in row) for row in top]
+    probed = sorted({c for s in probe_sets for c in s})
+    allowed = {
+        c: np.fromiter(
+            (c in s for s in probe_sets), dtype=bool, count=len(probe_sets)
+        )
+        for c in probed
+    }
+    return probed, allowed
+
+
+def _assign_clusters(
+    M: np.ndarray, cents: np.ndarray, rounded: bool = False
+) -> tuple[np.ndarray, np.ndarray]:
+    """The one nearest-centroid kernel: unit-normalize, one BLAS matmul,
+    argmax. Returns the cluster per row and its centroid score.
+
+    ``rounded`` takes the argmax over scores rounded to 6 places (ties
+    to the lower cluster index), the reproducible total order of
+    ``cluster_embeddings`` and ``semantic_dup_pairs``. IVF keeps the
+    unrounded argmax, so stored indexes keep assigning as they were
+    built. Normalization is argmax-irrelevant (same positive divisor
+    per row) but kept so the batch matmul matches the trainer's
+    geometry exactly."""
+    norms = np.linalg.norm(M, axis=1, keepdims=True)
+    scores = (M / np.where(norms == 0, 1.0, norms)) @ cents.T
+    if rounded:
+        scores = np.round(scores, 6)
+    cl = np.argmax(scores, axis=1)
+    return cl.astype(np.int32), scores[np.arange(len(cl)), cl]
+
+
+def _assign_pass(bc, vec: str, keep, rounded=False, cosine=False, bb=None):
+    """``mapInPandas`` body of every nearest-centroid pass: the ``keep``
+    columns pass through, ``cluster`` comes from ``_assign_clusters``
+    over the broadcast centroids ``bc``, plus the assigned ``cosine``
+    (``cosine=True``) or the PQ ``codes`` under broadcast codebooks
+    ``bb``."""
+
+    def assign(batches):
+        import pandas as pd
+
+        cents = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            M = _vec_matrix(pdf[vec])
+            cl, best = _assign_clusters(M, cents, rounded)
+            out = {c: pdf[c] for c in keep}
+            out["cluster"] = cl
+            if cosine:
+                out["cosine"] = best
+            if bb is not None:
+                out["codes"] = _encode_pq(M, bb.value)
+            yield pd.DataFrame(out)
+
+    return assign
+
+
+def _row_pair_pass(ids: tuple, vecs: tuple, threshold: float | None = None):
+    """``mapInPandas`` body of the row-pair cosine: each row carries
+    both vectors (``vecs``); emits the two ``ids`` and the rounded
+    ``cosine``, only rows ``>= threshold`` when one is given."""
+
+    def score(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            A, B = _vec_matrix(pdf[vecs[0]]), _vec_matrix(pdf[vecs[1]])
+            cos = np.round(
+                np.einsum("ij,ij->i", A, B)
+                / (np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)),
+                6,
+            )
+            out = pd.DataFrame({ids[0]: pdf[ids[0]], ids[1]: pdf[ids[1]], "cosine": cos})
+            yield out if threshold is None else out[out["cosine"] >= threshold]
+
+    return score
+
+
+_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
+
+
+def _pack_blocks(narrow: DataFrame, n_sub: Column, *labels: str) -> DataFrame:
+    """The block packer of the block-pair cosine: hash each (``__id__``,
+    ``__vec__``) row into one of ``n_sub`` sub-blocks (a literal, or a
+    per-label column) within its ``labels``, and collect each block's
+    rows into one ``items`` list — the unit one matmul task reads."""
+    return (
+        narrow.withColumn(
+            "__blk__", F.pmod(F.xxhash64(F.col("__id__")), n_sub).cast("int")
+        )
+        .groupBy(*labels, "__blk__")
+        .agg(F.collect_list(F.struct("__id__", "__vec__")).alias("items"))
+    )
+
+
+def _block_pair_pass(
+    threshold: float, symmetric: bool, id_dtypes: tuple, label: str | None = None
+):
+    """``mapInPandas`` body of the block-pair threshold matmul: each row
+    pairs two packed blocks (``b1``/``items1``, ``b2``/``items2``); one
+    BLAS matmul scores them and only pairs with cosine ``>= threshold``
+    are emitted. ``symmetric`` (a self-join) emits each unordered pair
+    once as ``id1 < id2``; otherwise ``id1`` is the left block's row.
+    Ids keep their Spark dtypes (``id_dtypes``), so string ids order
+    lexicographically; ``label`` names a column copied onto every
+    emitted pair."""
+    np_ids = [np.int64 if dt in _INT_TYPES else object for dt in id_dtypes]
+
+    def block(items, id_type):
+        ids = np.array([e["__id__"] for e in items], dtype=id_type)
+        return ids, _vec_matrix([e["__vec__"] for e in items])
+
+    def emit(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            for _, row in pdf.iterrows():
+                ids1, M1 = block(row["items1"], np_ids[0])
+                ids2, M2 = block(row["items2"], np_ids[1])
+                S = _cosine_matrix(M1, M2, np.linalg.norm(M2, axis=1))
+                if not symmetric:
+                    bi, mj = np.nonzero(S >= threshold)
+                    id1, id2 = ids1[bi], ids2[mj]
+                elif row["b1"] == row["b2"]:
+                    keep = (S >= threshold) & (ids1[:, None] < ids2[None, :])
+                    bi, mj = np.nonzero(keep)
+                    id1, id2 = ids1[bi], ids2[mj]
+                else:
+                    bi, mj = np.nonzero(S >= threshold)
+                    x, y = ids1[bi], ids2[mj]
+                    id1, id2 = np.minimum(x, y), np.maximum(x, y)
+                out = {"id1": id1, "id2": id2}
+                if label is not None:
+                    out[label] = pd.Series([row[label]] * len(id1))
+                out["cosine"] = S[bi, mj]
+                yield pd.DataFrame(out)
+
+    return emit
 
 
 def cast_embeddings(table: Table, vec_col: str, dtype: str = "float") -> Table:
@@ -105,57 +403,21 @@ def cosine_topk(
     """Exact top-k neighbors per query vector (brute force baseline).
 
     The query side is collected/broadcast (bounded by ``max_queries`` —
-    a clear error beats a silent driver OOM); the
-    corpus streams through an Arrow-batched ``mapInPandas`` that does one
-    BLAS matmul per batch and emits only its local top-k per query —
-    the final window then merges per-batch candidates (decomposable
-    top-k, so the shuffle carries ≤ k·batches rows per query instead of
-    the full N·Q score matrix).
+    a clear error beats a silent driver OOM); the corpus streams through
+    the shared top-k kernel (``_topk_search``): one BLAS matmul per Arrow
+    batch, only its local top-k per query emitted, and one window merges
+    the per-batch candidates (decomposable top-k, so the shuffle carries
+    ≤ k·batches rows per query instead of the full N·Q score matrix).
     """
-    qid = query_id_col or id_col
-    q_rows = _collect_query_vectors(queries.df.select(qid, vec_col), max_queries)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norms = np.linalg.norm(Q, axis=1)
-    bq = corpus.spark.sparkContext.broadcast((q_ids, Q, q_norms))
-
-    def score_batches(batches):
-        import numpy as np
-        import pandas as pd
-
-        q_ids_, Q_, q_norms_ = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = _vec_matrix(pdf[vec_col])
-            c_norms = np.linalg.norm(C, axis=1)
-            # dot / (|a|·|b|): same op order as the JVM fold and DuckDB
-            S = np.round((C @ Q_.T) / np.outer(c_norms, q_norms_), 6)
-            cids = pdf[id_col].to_numpy()
-            frames = []
-            for qi, qv in enumerate(q_ids_):
-                col = S[:, qi]
-                mask = cids != qv
-                idx = np.nonzero(mask)[0]
-                order = np.lexsort((cids[idx], -col[idx]))[:k]
-                sel = idx[order]
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qv, "corpus_id": cids[sel], "cosine": col[sel]}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    partial = corpus.df.select(id_col, vec_col).mapInPandas(
-        score_batches, "query_id long, corpus_id long, cosine double"
+    q_ids, Q, q_norms = _query_matrix(
+        queries, query_id_col or id_col, vec_col, max_queries
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id").asc()
+    if not len(q_ids):
+        return _empty_topk(corpus.spark, "cosine_topk")
+    cdf = corpus.df.select(
+        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
     )
-    out = partial.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= F.lit(k)
-    )
+    out = _topk_search(cdf, q_ids, partial(_cosine_scores, Q=Q, q_norms=q_norms), k)
     return Table.from_df(out, name="cosine_topk")
 
 
@@ -196,19 +458,6 @@ def lsh_signature(vec_col: Column | str, planes: np.ndarray) -> Column:
         )
         bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
-
-
-def _assign_clusters(vec_series, cents: np.ndarray) -> np.ndarray:
-    """Nearest-centroid assignment for one Arrow batch: unit-normalize,
-    one BLAS matmul, argmax. The SINGLE definition shared by ivf_topk
-    (self mode) and ivf_index_table, so a stored index and a fresh
-    assignment can never disagree bit-for-bit. Normalization is
-    argmax-irrelevant (same positive divisor per row) but kept so the
-    batch matmul matches the trainer's geometry exactly."""
-    M = _vec_matrix(vec_series)
-    norms = np.linalg.norm(M, axis=1, keepdims=True)
-    Mn = M / np.where(norms == 0, 1.0, norms)
-    return np.argmax(Mn @ cents.T, axis=1).astype(np.int32)
 
 
 def _train_centroids(
@@ -338,11 +587,12 @@ def ivf_topk(
 ) -> Table:
     """IVF approximate top-k: k-means coarse quantizer, probe-limited scan.
 
-    Train ``nlist`` spherical-k-means centroids on a driver-side sample,
-    broadcast them; every corpus vector is assigned to its nearest
-    centroid (one Arrow pass, no shuffle), and each query probes only its
-    ``nprobe`` closest lists via an equi-join on the cluster id. Exact
-    re-rank inside the probed lists. With ``nprobe == nlist`` this
+    Without ``against_index``, the corpus is indexed in memory by
+    ``ivf_index_table`` (``nlist`` spherical-k-means centroids trained
+    on a driver-side sample, every vector assigned to its nearest
+    centroid in one Arrow pass, no shuffle), and each query probes only
+    its ``nprobe`` closest lists through a per-query probe-cluster mask.
+    Exact re-rank inside the probed lists. With ``nprobe == nlist`` this
     degenerates to the exact brute-force result.
 
     ``against_index`` skips training AND corpus assignment entirely,
@@ -371,126 +621,46 @@ def ivf_topk(
             corpus, queries, id_col, vec_col, qid, k, nprobe,
             max_queries, against_index, rerank,
         )
-    if against_index is not None:
-        centroids, cdf = _load_ivf_index(against_index)
-    else:
-        sample, _sample_ids = _training_sample(
-            corpus.df, id_col, vec_col, sample_size
+    if against_index is None:
+        # self mode searches an in-memory index: the same trainer and
+        # the same assignment pass as a stored one, so the two can
+        # never disagree bit-for-bit. Assignment stays an Arrow/BLAS
+        # pass DELIBERATELY: a native-JVM fold (dot array as one F.expr
+        # of nlist x dim literals, argmax via array_position(array_max),
+        # the lsh_signature trick) was built and A/B-measured (round
+        # 6): 2.46s vs 1.79s end-to-end at sf0.1 — nlist*dim (~1024)
+        # interpreted multiply-adds per row lose to one numpy matmul by
+        # far more than the Arrow round-trip costs.
+        against_index = ivf_index_table(
+            corpus, id_col, vec_col, nlist=nlist, sample_size=sample_size,
+            seed=seed,
         )
-        centroids = _train_centroids(sample, nlist, seed)
-
-        # Assignment stays an Arrow/BLAS pass DELIBERATELY. A
-        # native-JVM fold (dot array as one F.expr of nlist x dim
-        # literals, argmax via array_position(array_max), the
-        # lsh_signature trick) was built and A/B-measured (round 6):
-        # 2.46s vs 1.79s end-to-end at sf0.1 — nlist*dim (~1024)
-        # interpreted multiply-adds per row lose to one numpy matmul
-        # by far more than the Arrow round-trip costs. The math lives
-        # in _assign_clusters, shared with ivf_index_table so stored-
-        # index search can never diverge from self-mode assignment.
-        bc = corpus.spark.sparkContext.broadcast(centroids)
-
-        def assign_batches(batches):
-            import pandas as pd
-
-            cents = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "corpus_id": pdf["corpus_id"],
-                        "cvec": pdf["cvec"],
-                        "cluster": _assign_clusters(pdf["cvec"], cents),
-                    }
-                )
-
-        cdf = corpus.df.select(
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).cast("array<double>").alias("cvec"),
-        ).mapInPandas(
-            assign_batches, "corpus_id long, cvec array<double>, cluster int"
-        )
+    centroids, cdf = _load_ivf_index(against_index)
 
     # probe-list fan-out happens on the driver; bounded like cosine_topk
-    q_rows = _collect_query_vectors(
-        queries.df.select(qid, F.col(vec_col).cast("array<double>")), max_queries
-    )
-    if not q_rows:
-        empty = corpus.spark.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-        return Table.from_df(empty, name="ivf_topk")
-    nprobe = min(nprobe, len(centroids))
-    q_ids = np.array([int(r[0]) for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norms = np.linalg.norm(Q, axis=1)
-    Qn = Q / np.where(q_norms == 0, 1.0, q_norms)[:, None]
-    top = np.argsort(-(Qn @ centroids.T), axis=1)[:, :nprobe]
-    probe_sets = [set(int(c) for c in row) for row in top]
+    q_ids, Q, q_norms = _query_matrix(queries, qid, vec_col, max_queries)
+    if not len(q_ids):
+        return _empty_topk(corpus.spark, "ivf_topk")
     # the probed cluster set is known driver-side: a static IN filter
     # lets a cluster-partitioned stored index prune unprobed partitions
     # at the scan before any scoring happens
-    probed = sorted({c for s in probe_sets for c in s})
+    probed, allowed = _probe_plan(Q, q_norms, centroids, nprobe)
     cdf = cdf.where(F.col("cluster").isin(probed))
 
-    # re-rank in the cosine_topk shape — queries live in the closure,
-    # one BLAS matmul per Arrow batch, per-query probe-cluster mask,
-    # local top-k per batch — instead of a broadcast pair join that
+    # re-rank through cosine_topk's kernel (_topk_search) with the
+    # probe mask — queries in the broadcast, one BLAS matmul per Arrow
+    # batch, local top-k per batch — instead of a broadcast pair join that
     # carries BOTH dense vectors per candidate through a second Arrow
     # pass. A/B round 7 at sf0.1 (nprobe == nlist, 5 queries x ~60k
     # corpus): search 2.96s -> ~0.9s warm with bit-identical output;
     # the shuffle now carries <= k x batches rows per query, never the
     # candidate score matrix.
-    allowed_by_cluster = {
-        c: np.fromiter(
-            (c in s for s in probe_sets), dtype=bool, count=len(probe_sets)
-        )
-        for c in probed
-    }
-    bq = corpus.spark.sparkContext.broadcast(
-        (q_ids, Q, q_norms, allowed_by_cluster)
-    )
-
-    def score_probed(batches):
-        import numpy as np
-        import pandas as pd
-
-        q_ids_, Q_, q_norms_, allowed_ = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = _vec_matrix(pdf["cvec"])
-            c_norms = np.linalg.norm(C, axis=1)
-            # dot / (|a|·|b|): same op order as cosine_topk and DuckDB
-            S = np.round((C @ Q_.T) / np.outer(c_norms, q_norms_), 6)
-            cids = pdf["corpus_id"].to_numpy()
-            mask = np.stack([allowed_[int(c)] for c in pdf["cluster"]])
-            frames = []
-            for qi, qv in enumerate(q_ids_):
-                ok = mask[:, qi] & (cids != qv)
-                idx = np.nonzero(ok)[0]
-                if idx.size == 0:
-                    continue
-                col = S[:, qi]
-                order = np.lexsort((cids[idx], -col[idx]))[:k]
-                sel = idx[order]
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qv, "corpus_id": cids[sel], "cosine": col[sel]}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    scored = cdf.select("corpus_id", "cvec", "cluster").mapInPandas(
-        score_probed, "query_id long, corpus_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id").asc()
-    )
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= F.lit(k)
+    out = _topk_search(
+        cdf.select("corpus_id", "cvec", "cluster"),
+        q_ids,
+        partial(_cosine_scores, Q=Q, q_norms=q_norms),
+        k,
+        allowed,
     )
     return Table.from_df(out, name="ivf_topk")
 
@@ -585,38 +755,21 @@ def ivf_index_table(
     elif pq_m is not None:
         books = _train_pq_codebooks(sample, pq_m, pq_ksub, seed, pq_iters)
     bc = corpus.spark.sparkContext.broadcast(cents)
+    narrow = corpus.df.select(
+        F.col(id_col).cast("long").alias("corpus_id"),
+        F.col(vec_col).cast("array<double>").alias("cvec"),
+    )
 
     if books is not None:
         bb = corpus.spark.sparkContext.broadcast(books)
-
-        def assign_pq_batches(batches):
-            import pandas as pd
-
-            C = bc.value
-            B = bb.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "cluster": _assign_clusters(pdf["cvec"], C),
-                        "corpus_id": pdf["corpus_id"],
-                        "codes": _encode_pq(pdf["cvec"], B),
-                    }
-                )
-
         schema = (
             "cluster int, corpus_id long, codes binary, "
             "centroid array<double>, pq_sub int, pq_code int, "
             "pq_center array<double>"
         )
         assigned = (
-            corpus.df.select(
-                F.col(id_col).cast("long").alias("corpus_id"),
-                F.col(vec_col).cast("array<double>").alias("cvec"),
-            )
-            .mapInPandas(
-                assign_pq_batches,
+            narrow.mapInPandas(
+                _assign_pass(bc, "cvec", ("corpus_id",), bb=bb),
                 "cluster int, corpus_id long, codes binary",
             )
             .withColumn("centroid", F.lit(None).cast("array<double>"))
@@ -640,21 +793,6 @@ def ivf_index_table(
         out._pq_model = books
         return out
 
-    def assign_batches(batches):
-        import pandas as pd
-
-        C = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    "cluster": _assign_clusters(pdf["cvec"], C),
-                    "corpus_id": pdf["corpus_id"],
-                    "cvec": pdf["cvec"],
-                }
-            )
-
     # vec_dtype="float" stores the assignment vectors at half the bytes
     # (the index's dominant term at corpus scale); centroids stay
     # double — nlist rows, and probe math wants the model's precision.
@@ -664,17 +802,10 @@ def ivf_index_table(
         f"cluster int, corpus_id long, cvec array<{vec_dtype}>, "
         "centroid array<double>"
     )
-    assigned = (
-        corpus.df.select(
-            F.col(id_col).cast("long").alias("corpus_id"),
-            F.col(vec_col).cast("array<double>").alias("cvec"),
-        )
-        .mapInPandas(
-            assign_batches,
-            f"cluster int, corpus_id long, cvec array<{vec_dtype}>",
-        )
-        .withColumn("centroid", F.lit(None).cast("array<double>"))
-    )
+    assigned = narrow.mapInPandas(
+        _assign_pass(bc, "cvec", ("corpus_id", "cvec")),
+        f"cluster int, corpus_id long, cvec array<{vec_dtype}>",
+    ).withColumn("centroid", F.lit(None).cast("array<double>"))
     model = small_df(
         corpus.spark,
         [(int(i), None, None, [float(x) for x in c]) for i, c in enumerate(cents)],
@@ -811,32 +942,13 @@ def _pq_search(
     ``nprobe == nlist`` and ``rerank >= |corpus|`` the result is
     provably the exact brute-force top-k (the oracle contract)."""
     cents, books, cdf = _load_pq_index(index)
-    q_rows = _collect_query_vectors(
-        queries.df.select(qid, F.col(vec_col).cast("array<double>")),
-        max_queries,
-    )
+    q_ids, Q, q_norms = _query_matrix(queries, qid, vec_col, max_queries)
     spark = corpus.spark
-    if not q_rows:
-        empty = spark.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-        return Table.from_df(empty, name="ivf_pq_topk")
-    nprobe = min(nprobe, len(cents))
+    if not len(q_ids):
+        return _empty_topk(spark, "ivf_pq_topk")
     R = max(int(rerank), k) if rerank is not None else max(8 * k, 64)
-    q_ids = np.array([int(r[0]) for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norms = np.linalg.norm(Q, axis=1)
-    Qn = Q / np.where(q_norms == 0, 1.0, q_norms)[:, None]
-    top = np.argsort(-(Qn @ cents.T), axis=1)[:, :nprobe]
-    probe_sets = [set(int(c) for c in row) for row in top]
-    probed = sorted({c for s in probe_sets for c in s})
+    probed, allowed = _probe_plan(Q, q_norms, cents, nprobe)
     cdf = cdf.where(F.col("cluster").isin(probed))
-    allowed_by_cluster = {
-        c: np.fromiter(
-            (c in s for s in probe_sets), dtype=bool, count=len(probe_sets)
-        )
-        for c in probed
-    }
 
     # ADC tables: LUT[s][qi][code] = dot(q_sub, center);
     # code_norm2[s][code] = |center|^2 (for the reconstructed |v|)
@@ -845,63 +957,15 @@ def _pq_search(
         [Q[:, s * dsub : (s + 1) * dsub] @ books[s].T for s in range(m)]
     )  # (m, nq, ksub)
     code_norm2 = (books**2).sum(axis=2)  # (m, ksub)
-    bq = spark.sparkContext.broadcast(
-        (q_ids, q_norms, lut, code_norm2, allowed_by_cluster, R)
-    )
-
-    def adc_batches(batches):
-        import numpy as np
-        import pandas as pd
-
-        q_ids_, q_norms_, lut_, cn2_, allowed_, R_ = bq.value
-        m_ = lut_.shape[0]
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            U = np.stack(
-                [np.frombuffer(b, dtype=np.uint8, count=m_) for b in pdf["codes"]]
-            )  # (n, m)
-            n = len(U)
-            D = np.zeros((len(q_ids_), n), dtype=np.float64)
-            v2 = np.zeros(n, dtype=np.float64)
-            for s in range(m_):
-                D += lut_[s][:, U[:, s]]
-                v2 += cn2_[s][U[:, s]]
-            vnorm = np.sqrt(v2)
-            denom = np.where(vnorm == 0, 1.0, vnorm)[None, :] * np.where(
-                q_norms_ == 0, 1.0, q_norms_
-            )[:, None]
-            S = D / denom  # approx cosine: ranks candidates only
-            cids = pdf["corpus_id"].to_numpy()
-            mask = np.stack([allowed_[int(c)] for c in pdf["cluster"]])
-            frames = []
-            for qi, qv in enumerate(q_ids_):
-                ok = mask[:, qi] & (cids != qv)
-                idx = np.nonzero(ok)[0]
-                if idx.size == 0:
-                    continue
-                col = S[qi]
-                order = np.lexsort((cids[idx], -col[idx]))[:R_]
-                sel = idx[order]
-                frames.append(
-                    pd.DataFrame(
-                        {"query_id": qv, "corpus_id": cids[sel], "ascore": col[sel]}
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    cand = cdf.select("corpus_id", "codes", "cluster").mapInPandas(
-        adc_batches, "query_id long, corpus_id long, ascore double"
-    )
-    wa = Window.partitionBy("query_id").orderBy(
-        F.col("ascore").desc(), F.col("corpus_id").asc()
-    )
-    cand = (
-        cand.withColumn("__r__", F.row_number().over(wa))
-        .filter(F.col("__r__") <= F.lit(R))
-        .select("query_id", "corpus_id")
-    )
+    cand = _topk_search(
+        cdf.select("corpus_id", "codes", "cluster"),
+        q_ids,
+        partial(_adc_scores, lut=lut, code_norm2=code_norm2, q_norms=q_norms),
+        R,
+        allowed,
+        score_col="ascore",
+        rank_col="__r__",
+    ).select("query_id", "corpus_id")
 
     # exact re-rank: fetch the candidates' TRUE vectors from the corpus
     # via a broadcast join (candidate list is <= R x n_queries rows) —
@@ -911,42 +975,33 @@ def _pq_search(
         F.col(vec_col).cast("array<double>").alias("__cv__"),
     )
     joined = cvecs.join(F.broadcast(cand), "corpus_id")
-    bq2 = spark.sparkContext.broadcast((q_ids, Q, q_norms))
+    bq = spark.sparkContext.broadcast((q_ids, Q, q_norms))
 
     def exact_batches(batches):
-        import numpy as np
         import pandas as pd
 
-        q_ids_, Q_, q_norms_ = bq2.value
+        q_ids_, Q_, q_norms_ = bq.value
         pos = {int(v): i for i, v in enumerate(q_ids_)}
         for pdf in batches:
             if pdf.empty:
                 continue
-            C = _vec_matrix(pdf["__cv__"])
-            c_norms = np.linalg.norm(C, axis=1)
-            # same matmul + op order as ivf_topk/cosine_topk so the
-            # rounded score is bit-identical to the non-PQ paths
-            S = np.round((C @ Q_.T) / np.outer(c_norms, q_norms_), 6)
+            # the top-k scorer's matmul, so the rounded score is
+            # bit-identical to the non-PQ paths; each row keeps the
+            # column of the query it is a candidate for
+            S = _cosine_matrix(_vec_matrix(pdf["__cv__"]), Q_, q_norms_)
             qidx = pdf["query_id"].map(pos).to_numpy()
-            rows = np.arange(len(C))
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"],
                     "corpus_id": pdf["corpus_id"],
-                    "cosine": S[rows, qidx],
+                    "cosine": S[np.arange(len(S)), qidx],
                 }
             )
 
     scored = joined.mapInPandas(
         exact_batches, "query_id long, corpus_id long, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id").asc()
-    )
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= F.lit(k)
-    )
-    return Table.from_df(out, name="ivf_pq_topk")
+    return Table.from_df(_rank_per_query(scored, k), name="ivf_pq_topk")
 
 
 def extend_ivf_index(
@@ -1003,8 +1058,9 @@ def lsh_topk(
     Signatures are built with the native JVM ``lsh_signature`` fold
     (whole-stage codegen, same expression the dedup path uses — measured
     ~1.7× over the Arrow round-trip); Python/Arrow is reserved for the
-    BLAS re-rank after the candidate join, where a matmul genuinely
-    beats per-row folds.
+    re-rank after the candidate join, the row-pair cosine kernel
+    (``_row_pair_pass``) that ``embedding_lsh_dup_pairs(use_arrow=True)``
+    also runs.
     """
     planes = _planes(dim, n_planes, seed)
 
@@ -1020,37 +1076,11 @@ def lsh_topk(
         F.col("query_id") != F.col("corpus_id")
     )
 
-    def rerank(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            C = _vec_matrix(pdf["cvec"])
-            Q = _vec_matrix(pdf["qvec"])
-            dots = np.einsum("ij,ij->i", C, Q)
-            cos = np.round(
-                dots / (np.linalg.norm(C, axis=1) * np.linalg.norm(Q, axis=1)), 6
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"],
-                    "corpus_id": pdf["corpus_id"],
-                    "cosine": cos,
-                }
-            )
-
     scored = candidates.mapInPandas(
-        rerank, "query_id long, corpus_id long, cosine double"
+        _row_pair_pass(("query_id", "corpus_id"), ("cvec", "qvec")),
+        "query_id long, corpus_id long, cosine double",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id").asc()
-    )
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= F.lit(k)
-    )
-    return Table.from_df(out, name="lsh_topk")
+    return Table.from_df(_rank_per_query(scored, k), name="lsh_topk")
 
 
 def cluster_embeddings(
@@ -1103,32 +1133,13 @@ def cluster_embeddings(
     )
     bc = table.spark.sparkContext.broadcast(centroids)
     df = table._require_df()
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        cents = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = _vec_matrix(pdf["__vec__"])
-            norms = np.linalg.norm(M, axis=1, keepdims=True)
-            Mn = M / np.where(norms == 0, 1.0, norms)
-            scores = np.round(Mn @ cents.T, 6)
-            cl = np.argmax(scores, axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cluster": cl.astype(np.int32),
-                    "cosine": scores[np.arange(len(cl)), cl],
-                }
-            )
-
     id_dtype = dict(df.dtypes)[id_col]
     out = df.select(
         id_col, F.col(vec_col).cast("array<double>").alias("__vec__")
-    ).mapInPandas(assign, f"{id_col} {id_dtype}, cluster int, cosine double")
+    ).mapInPandas(
+        _assign_pass(bc, "__vec__", (id_col,), rounded=True, cosine=True),
+        f"{id_col} {id_dtype}, cluster int, cosine double",
+    )
     return Table.from_df(out, name=f"{table.table_name}_clusters")
 
 

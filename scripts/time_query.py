@@ -6,10 +6,12 @@ Replicates bench.py's steady-state methodology for a subset of queries:
 cached base tables, an untimed warmup pass, then per-query median over N
 timed passes against the noop sink. Prints one JSON line per query, with
 the classes Spark compiled in each timed pass next to its sample (a
-nonzero count means that pass paid for codegen), plus a JVM calibration
-figure so readings taken at different moments stay comparable. Used for
-same-box A/Bs during optimization rounds — the citable numbers remain
-the driver's BENCH artifacts.
+nonzero count means that pass paid for codegen) and the Spark jobs and
+stages the pass submitted (from the status tracker; job counts do not
+depend on box load, so they compare across busy machines), plus a JVM
+calibration figure so readings taken at different moments stay
+comparable. Used for same-box A/Bs during optimization rounds — the
+citable numbers remain the driver's BENCH artifacts.
 """
 
 from __future__ import annotations
@@ -74,20 +76,32 @@ def main() -> None:
     def compiled() -> int:
         return codegen.METRIC_COMPILATION_TIME().getCount()
 
+    tracker = spark.sparkContext.statusTracker()
+
+    def job_ids() -> set:
+        return set(tracker.getJobIdsForGroup(None) or [])
+
     out = {}
     for n in names:
-        samples, compiles = [], []
+        samples, compiles, jobs, stages = [], [], [], []
         for p in range(passes):
             spark.sparkContext.setJobDescription(f"timed {n} pass {p}")
-            c0 = compiled()
+            c0, j0 = compiled(), job_ids()
             t0 = time.perf_counter()
             queries[n](spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 3))
             compiles.append(compiled() - c0)
+            new = job_ids() - j0
+            jobs.append(len(new))
+            stages.append(sum(
+                len(info.stageIds)
+                for info in map(tracker.getJobInfo, new) if info is not None
+            ))
         med = sorted(samples)[len(samples) // 2]
         out[n] = {"median": med, "samples": samples}
         print(json.dumps({"query": n, "median": med, "samples": samples,
-                          "compiles": compiles}))
+                          "compiles": compiles, "jobs": jobs,
+                          "stages": stages}))
     cal_post = round(sorted(cal_once() for _ in range(3))[1], 3)
     print(json.dumps({
         "cal_pre": cal_pre, "cal_post": cal_post, "sf_dir": sf_dir,

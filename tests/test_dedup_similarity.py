@@ -230,6 +230,73 @@ def test_ivf_topk_exact_when_all_lists_probed(vectors):
     assert got == exact
 
 
+def test_rankers_share_one_tie_rule_at_rank_k(spark):
+    """Exact duplicates (equal cosines) straddle rank k for both
+    queries. The exact ranker, IVF with every list probed, and the PQ
+    path with every list probed and rerank >= |corpus| must all return
+    the ids and ranks of lexsort((id, -round(cos, 6))): the lower id
+    wins a tie, whichever batch or partition each copy landed in.
+    Integer components keep every dot product exact, so the reference
+    computes the same rounded cosines."""
+    import numpy as np
+
+    from littletable_spark.operators.similarity import (
+        cosine_topk,
+        ivf_index_table,
+        ivf_topk,
+    )
+
+    vecs = {0: [1, 0, 0, 0], 1: [0, 1, 0, 0], 25: [1, 0, 0, 0]}
+    vecs[5] = [3, 1, 0, 0]  # query 0's runner-up
+    for i in (14, 2, 9, 7):  # tie group for query 0: ranks 3..6
+        vecs[i] = [2, 1, 0, 0]
+    vecs[8] = [1, 4, 0, 0]  # query 1's best two
+    vecs[6] = [1, 3, 0, 0]
+    for i in (20, 3, 11):  # tie group for query 1: ranks 3..5
+        vecs[i] = [0, 2, 1, 0]
+    rng = np.random.RandomState(5)
+    for i in range(40):
+        if i not in vecs:  # orthogonal to both queries: cosine 0
+            vecs[i] = [0, 0, int(rng.randint(1, 4)), int(rng.randint(1, 4))]
+    ids = sorted(vecs, key=lambda i: (i * 7) % 41)
+    t = Table("ties", spark=spark)
+    t.insert_many(
+        [{"vec_id": i, "embedding": [float(x) for x in vecs[i]]} for i in ids]
+    )
+    t = Table.from_df(t.df.repartition(3))
+    q = t.where(vec_id=Table.lt(2))
+    k = 4
+
+    C = np.array([vecs[i] for i in range(40)], dtype=np.float64)
+    Q = C[:2]
+    cos = np.round(
+        (C @ Q.T) / np.outer(np.linalg.norm(C, axis=1), np.linalg.norm(Q, axis=1)), 6
+    )
+    expect = set()
+    for qi in range(2):
+        cand = np.array([i for i in range(40) if i != qi])
+        order = np.lexsort((cand, -cos[cand, qi]))[:k]
+        expect |= {(qi, int(cand[j]), r + 1) for r, j in enumerate(order)}
+    # the boundary really cuts a tie group
+    assert (0, 7, 4) in expect and (0, 9, 5) not in expect
+    assert (1, 11, 4) in expect and (1, 20, 5) not in expect
+
+    pq = ivf_index_table(t, "vec_id", "embedding", nlist=4, pq_m=2, pq_ksub=8, seed=1)
+    rankers = {
+        "cosine_topk": cosine_topk(t, q, "vec_id", "embedding", k=k),
+        "ivf_topk": ivf_topk(t, q, "vec_id", "embedding", k=k, nlist=4, nprobe=4),
+        "pq": ivf_topk(
+            t, q, "vec_id", "embedding", k=k, nprobe=4, against_index=pq,
+            rerank=1000,
+        ),
+    }
+    for name, out in rankers.items():
+        rows = list(out)
+        assert {(r.query_id, r.corpus_id, r.rank) for r in rows} == expect, name
+        for r in rows:
+            assert r.cosine == cos[r.corpus_id, r.query_id], name
+
+
 def test_ivf_topk_probed_subset_scores_exactly(vectors):
     from littletable_spark.operators.similarity import cosine_topk, ivf_topk
 

@@ -915,13 +915,10 @@ def test_encrypted_future_revision_unsupported():
 def test_aes_core_fips197_vectors():
     """FIPS-197 Appendix C block vectors pin the widened key schedule
     (AES-128 pinned since round 12; 192/256 are the round-13 paths)."""
-    import numpy as np
+    from littletable_spark.functions.pdfcrypt import _cbc_encrypt_nopad
 
-    from littletable_spark.functions.pdfcrypt import _ecb_encrypt_blocks
-
-    pt = np.frombuffer(
-        bytes.fromhex("00112233445566778899aabbccddeeff"), dtype=np.uint8
-    ).reshape(1, 16)
+    # one block under a zero IV: CBC encryption is the bare block cipher
+    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     for keyhex, cthex in [
         ("000102030405060708090a0b0c0d0e0f",
          "69c4e0d86a7b0430d8cdb78070b4c55a"),
@@ -931,8 +928,8 @@ def test_aes_core_fips197_vectors():
          "101112131415161718191a1b1c1d1e1f",
          "8ea2b7ca516745bfeafc49904b496089"),
     ]:
-        ct = _ecb_encrypt_blocks(bytes.fromhex(keyhex), pt)
-        assert ct.tobytes().hex() == cthex
+        ct = _cbc_encrypt_nopad(bytes.fromhex(keyhex), bytes(16), pt)
+        assert ct.hex() == cthex
 
 
 def test_encrypted_pdf_spark_on_error(spark):

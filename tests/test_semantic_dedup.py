@@ -247,6 +247,55 @@ def test_semantic_pairs_string_labels_and_ids(spark):
     assert got == {("d0", "d1"): "a.com"}
 
 
+def test_embedding_pairs_string_ids_match_semantic_pairs(spark):
+    """String ids keep their dtype through the exact block-pair
+    operator, as through semantic_dup_pairs: with one cluster the two
+    return the same pairs, ordered lexicographically. block_rows=2
+    splits the table into several blocks, so both the same-block and
+    the cross-block id ordering run. The LSH operator's two scorers
+    (JVM fold and the Arrow row-pair kernel) keep them too."""
+    from littletable_spark.operators.dedup import (
+        embedding_dup_pairs,
+        embedding_lsh_dup_pairs,
+        semantic_dup_pairs,
+    )
+
+    rng = np.random.RandomState(3)
+    base = rng.randn(6, 8)
+    base[1] = base[0] + 0.001 * rng.randn(8)
+    base[3] = base[2] + 0.001 * rng.randn(8)
+    t = Table("strids", spark=spark)
+    t.insert_many(
+        [
+            {"doc": f"d{i}", "embedding": [float(x) for x in base[i]]}
+            for i in range(6)
+        ]
+    )
+    exact = {
+        (r.id1, r.id2, r.cosine)
+        for r in embedding_dup_pairs(t, "doc", "embedding", 0.99, block_rows=2)
+    }
+    semantic = {
+        (r.id1, r.id2, r.cosine)
+        for r in semantic_dup_pairs(
+            t, "doc", "embedding", threshold=0.99, init_ids=["d0"],
+            train_iters=0, block_rows=2,
+        )
+    }
+    assert exact == semantic
+    assert {(a, b) for a, b, _ in exact} == {("d0", "d1"), ("d2", "d3")}
+    lsh = [
+        {
+            (r.id1, r.id2, r.cosine)
+            for r in embedding_lsh_dup_pairs(
+                t, "doc", "embedding", 0.99, n_planes=2, dim=8, use_arrow=arrow
+            )
+        }
+        for arrow in (False, True)
+    ]
+    assert lsh[0] == lsh[1] and lsh[0] <= exact
+
+
 def test_cluster_embeddings_pretrained_centroids(vecs):
     """centroids= bypasses training: assignment equals the numpy model
     of nearest-given-vector (the train-once-assign-forever path)."""
