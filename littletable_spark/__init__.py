@@ -19,7 +19,7 @@ from .exceptions import (
     SearchIndexInconsistentError,
     UniqueKeyViolation,
 )
-from .plans.lint import PlanWarning, lint_plan
+from .plans.lint import PlanWarning, lint_plan, plan_shape
 from .session import get_spark
 from .table import Table
 
@@ -61,6 +61,7 @@ __all__ = [
     "binary_import",
     "text_import",
     "lint_plan",
+    "plan_shape",
     "PlanWarning",
 ]
 

@@ -41,11 +41,17 @@ What it flags (each a structured ``PlanWarning``):
 Deliberately NOT flagged: broadcast-vs-shuffle join choice (needs
 statistics Catalyst/AQE already uses), shuffle counts (workload-
 dependent), and anything requiring data access.
+
+``plan_shape`` answers a different question: which physical operators
+the plan holds, as a name -> count map. ``plans/shapes.json`` pins it
+for every registry query (``scripts/capture_plans.py`` rebuilds and
+checks it), so a change of plan structure shows up as a one-line diff.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -60,6 +66,16 @@ _MID_DEF = re.compile(r"monotonically_increasing_id\(\)\s+AS\s+[^#\s,]*#(\d+)")
 #: a join node carrying a condition: ``Join LeftOuter, (a#1L = b#2L)``
 _JOIN_COND = re.compile(r"\bJoin\s+\w+,\s+(.*)$", re.MULTILINE)
 _ATTR_REF = re.compile(r"#(\d+)")
+
+#: a child line of a plan tree string: indentation, then the branch
+#: marker (``+- `` or ``:- ``), then the node
+_TREE_LINE = re.compile(r"^([ :|]*)[+:]- (.*)$")
+#: a node: optional whole-stage codegen prefix ``*(n) ``, its name and
+#: the word after it (an Exchange's partitioning kind, a Scan's source)
+_NODE = re.compile(r"(?:\*\(\d+\) )?(\w+)(?: (\w+))?")
+#: nodes plan_shape leaves out: the AQE wrapper, and the three that
+#: move with harmless refactors
+_UNCOUNTED = {"AdaptiveSparkPlan", "Project", "Filter", "ColumnarToRow"}
 
 
 @dataclass(frozen=True)
@@ -206,3 +222,43 @@ def lint_plan(df: DataFrame) -> list[PlanWarning]:
             )
         )
     return out
+
+
+def plan_shape(df: DataFrame) -> dict[str, int]:
+    """Count the physical operators of ``df``'s plan (no jobs run).
+
+    Reads ``executedPlan()``, the initial adaptive plan, and returns a
+    name -> count map sorted by name. ``Exchange`` is qualified by its
+    partitioning kind (``Exchange hashpartitioning``) and a scan by its
+    source (``FileScan parquet``, ``Scan ExistingRDD``). Project, Filter
+    and ColumnarToRow are not counted. A persisted frame is its own
+    plan: only its ``InMemoryTableScan`` counts, not the subtree Spark
+    prints under it (which differs once the cache is materialized). On
+    a frame that has run, only the initial plan counts.
+    """
+    counts: Counter = Counter()
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    skip_below = None  # marker column of the node whose subtree is skipped
+    for i, line in enumerate(lines):
+        m = _TREE_LINE.match(line)
+        if m:
+            col, node = len(m.group(1)), m.group(2)
+        elif i == 0:
+            col, node = 0, line
+        else:  # a multi-line literal, or a stage header of a final plan
+            continue
+        if skip_below is not None:
+            if col > skip_below:
+                continue
+            skip_below = None
+        if node.startswith(("InMemoryRelation", "== Final Plan ==")):
+            skip_below = col
+            continue
+        m = _NODE.match(node)
+        if m is None or m.group(1) in _UNCOUNTED:
+            continue  # "== Initial Plan ==" or a node left out
+        name, qual = m.groups()
+        if qual and (name == "Exchange" or "Scan" in name):
+            name = f"{name} {qual}"
+        counts[name] += 1
+    return dict(sorted(counts.items()))

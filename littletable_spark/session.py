@@ -18,6 +18,12 @@ the same code scales to a multi-executor cluster:
   classes compiles all of them again: on a 4-vCPU host a steady pass
   of the perfbench ``olap`` workload compiled 96-136 classes and a
   ``corpus`` pass 175-183, against 0-4 with the sized cache.
+- No cache under a distributed sequence
+  (``pandas_on_Spark.compute.default_index_cache=NONE``): the engine's
+  dense positions recompute their sort instead of persisting a copy.
+  The key is pandas-on-Spark's, so on a session shared with
+  pandas-on-Spark code its ``distributed-sequence`` default index stops
+  caching too.
 """
 
 from __future__ import annotations
@@ -62,6 +68,14 @@ def _runtime_sql_confs(cpus: int) -> dict[str, str]:
         # again (seen on dedup_semantic_incr). The id stays in the plan
         # string (`*(n)`) and in a comment of the generated source.
         "spark.sql.codegen.useIdInClassName": "false",
+        # Dense positions (plans/ordering.dense_index) run Spark's
+        # AttachDistributedSequenceExec, which by default persists its
+        # sorted child (MEMORY_AND_DISK_SER) for the two passes of
+        # zipWithIndex: every positional action wrote a serialized copy
+        # of its input and logged "clean up cached RDD". Without it the
+        # second pass reuses the range exchange's shuffle output, so
+        # only the reduce-side sort runs twice.
+        "pandas_on_Spark.compute.default_index_cache": "NONE",
     }
 
 

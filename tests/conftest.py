@@ -13,6 +13,19 @@ def spark():
     return get_spark(cpus=8)
 
 
+@pytest.fixture(scope="session")
+def registry_frames(spark):
+    """Every registry query built once at sf0.001: name -> DataFrame, in
+    registry order. For tests that read schemas and analyzed plans,
+    which do not depend on what the session has cached."""
+    import __spark_entry__ as entrymod
+
+    return {
+        name: fn(spark, "/root/testdata/sf0.001")
+        for name, fn in entrymod.registry().items()
+    }
+
+
 @pytest.fixture()
 def abc(spark):
     """The reference suite's canonical table: {a,b,c} = range(3)^3

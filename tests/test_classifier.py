@@ -8,7 +8,7 @@ import math
 import numpy as np
 import pytest
 
-from littletable_spark import Table
+from littletable_spark import Table, plan_shape
 from littletable_spark.operators.classifier import (
     filter_by_classifier,
     score_linear,
@@ -183,8 +183,10 @@ def test_text_classifier_trains_and_deploys_jvm_side(spark):
     assert agree >= int(0.95 * 2 * n)
 
     # the scoring plan never leaves the JVM: no Python eval of any kind
-    plan = scored.df._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "MapInPandas" not in plan, plan
+    shape = plan_shape(scored.df)
+    assert not [
+        op for op in shape if "Python" in op or "MapInPandas" in op
+    ], shape
 
 
 def test_text_classifier_model_is_a_durable_asset(spark, tmp_path):

@@ -1,12 +1,13 @@
 """plans/lint.py: each anti-pattern triggers its warning; the repo's
-own operators (built to avoid them) lint clean."""
+own operators (built to avoid them) lint clean; plan_shape counts
+operators."""
 
 from __future__ import annotations
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from littletable_spark import Table, lint_plan
+from littletable_spark import Table, lint_plan, plan_shape
 
 
 def _codes(df):
@@ -72,6 +73,50 @@ def test_content_key_join_of_stamped_frames_is_clean(spark):
 def test_global_sort_flagged_but_topk_is_not(spark):
     assert "global-sort" in _codes(_df(spark).orderBy("v"))
     assert "global-sort" not in _codes(_df(spark).orderBy("v").limit(5))
+
+
+def test_plan_shape_counts_a_persisted_frame_as_one_scan(spark):
+    """The cached subtree Spark prints under an InMemoryTableScan is not
+    counted, before the cache fills, after it fills, and after the frame
+    itself has run (whose plan string then holds a final plan too)."""
+    cached = spark.range(100).repartition(3).persist()
+    try:
+        over = cached.selectExpr("id * 2 AS x")
+        want = {"InMemoryTableScan": 1}
+        assert plan_shape(over) == want
+        cached.count()
+        assert plan_shape(over) == want
+        over.collect()
+        assert "== Final Plan ==" in over._jdf.queryExecution().executedPlan().toString()
+        assert plan_shape(over) == want
+    finally:
+        cached.unpersist()
+
+
+def test_plan_shape_names_exchanges_and_scans(spark):
+    """Spark prints ``Exchange SinglePartition, ...``: no comma in the
+    name. (``coalesce(1)`` plans a narrow ``Coalesce``, no exchange.)"""
+    single = plan_shape(_df(spark).repartition(1))
+    assert "Exchange SinglePartition" in single, single
+    assert not [op for op in single if op.endswith(",")], single
+    nation = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
+    self_join = nation.alias("a").join(nation.alias("b"), "n_nationkey")
+    assert plan_shape(self_join)["FileScan parquet"] == 2
+
+
+def test_plan_shape_strips_the_codegen_prefix(spark):
+    """Without AQE the plan is whole-stage compiled: ``*(1) HashAggregate``
+    counts as ``HashAggregate``."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        df = _df(spark).groupBy("k").count()
+        assert "*(1)" in df._jdf.queryExecution().executedPlan().toString()
+        assert plan_shape(df) == {
+            "Exchange hashpartitioning": 1, "HashAggregate": 2, "Range": 1,
+        }
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def test_repo_operators_lint_clean(spark):
@@ -148,7 +193,7 @@ def test_classifier_operators_lint_clean(spark):
         assert tab.lint() == [], tab.table_name
 
 
-def test_registry_outputs_are_scalar_only(spark):
+def test_registry_outputs_are_scalar_only(registry_frames):
     """Registry-wide schema sweep: no queries() result may expose an
     Array/Map/Struct column. The driver's oracle harness canonicalizes
     results via pandas sort_values, which raises `unhashable type` on
@@ -157,11 +202,8 @@ def test_registry_outputs_are_scalar_only(spark):
     query edge while the Table-level operators keep the real types."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    import __spark_entry__ as entrymod
-
     offenders = []
-    for name, fn in entrymod.registry().items():
-        df = fn(spark, "/root/testdata/sf0.001")
+    for name, df in registry_frames.items():
         for field in df.schema.fields:
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 offenders.append((name, field.name, field.dataType.simpleString()))

@@ -6,7 +6,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from littletable_spark import Table
+from littletable_spark import Table, plan_shape
 
 
 def _plan(df) -> str:
@@ -206,10 +206,8 @@ def test_ivf_topk_two_arrow_passes(spark):
     e = Table.parquet_import(spark, "/root/testdata/sf0.001/embeddings.parquet")
     q = Table.from_df(e.df.where("vec_id < 3"))
     df = ivf_topk(e, q, "vec_id", "embedding", k=5).df
-    # executedPlan tree string: one node line per operator (the
-    # formatted explain would double-count via its per-node details)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 2, plan
+    shape = plan_shape(df)
+    assert shape.get("MapInPandas") == 2, shape
 
 
 def test_ivf_topk_stored_index_single_pass_no_join(spark, tmp_path):
@@ -234,9 +232,9 @@ def test_ivf_topk_stored_index_single_pass_no_join(spark, tmp_path):
     df = ivf_topk(
         e, q, "vec_id", "embedding", k=5, nprobe=2, against_index=stored
     ).df
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
-    assert "Join" not in plan, plan
+    shape = plan_shape(df)
+    assert shape.get("MapInPandas") == 1, shape
+    assert not [op for op in shape if "Join" in op], shape
 
 
 def test_duplicate_spans_reads_grams_from_cache(spark):
@@ -250,8 +248,8 @@ def test_duplicate_spans_reads_grams_from_cache(spark):
     t = Table.parquet_import(spark, "/root/testdata/sf0.001/documents.parquet")
     df = duplicate_spans(t, "text", "doc_id", k=5).df
     df.count()  # materialize the persist
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    shape = plan_shape(df)
+    assert shape.get("InMemoryTableScan", 0) >= 2, shape
 
 
 def test_semantic_pairs_plan_shape(spark):
@@ -275,7 +273,7 @@ def test_semantic_pairs_plan_shape(spark):
     fns = set(re.findall(r"MapInPandas (\w+)\(", plan))
     assert fns == {"assign", "emit"}, plan
     # the assign pass is computed once behind an InMemoryRelation cache
-    assert "InMemoryTableScan" in plan
+    assert "InMemoryTableScan" in plan_shape(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
@@ -302,8 +300,9 @@ def test_pq_search_plan_shape(spark, tmp_path):
     ).df
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "cluster" in plan and " IN " in plan.upper() or "cluster#" in plan, plan
-    assert plan.count("BroadcastHashJoin") == 1, plan  # candidate fetch only
-    assert plan.count("SortMergeJoin") == 0, plan
+    shape = plan_shape(df)
+    assert shape.get("BroadcastHashJoin") == 1, shape  # candidate fetch only
+    assert "SortMergeJoin" not in shape, shape
     # the ADC pass reads codes, never cvec (the index has none)
     assert "cvec" not in plan, plan
 
@@ -314,9 +313,9 @@ def test_apply_bpe_is_single_arrow_pass_no_shuffle(spark):
     d = Table.parquet_import(spark, "/root/testdata/sf0.001/documents.parquet")
     merges = train_bpe(d, "text", num_merges=10, max_words=500)
     df = apply_bpe(d, "text", "doc_id", merges).df
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan
-    assert "Exchange" not in plan, plan
+    shape = plan_shape(df)
+    assert shape.get("MapInPandas") == 1, shape
+    assert not [op for op in shape if "Exchange" in op], shape
 
 
 def test_chunk_by_pieces_is_narrow(spark):
@@ -330,10 +329,10 @@ def test_chunk_by_pieces_is_narrow(spark):
     merges = train_bpe(d, "text", num_merges=10, max_words=500)
     pieces = apply_bpe(d, "text", "doc_id", merges, emit_pieces=True)
     df = chunk_by_pieces(pieces, "pieces", "doc_id", chunk_tokens=32).df
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    shape = plan_shape(df)
     # chunking adds NO exchange beyond the tokenize pass's plan
-    assert "Exchange" not in plan, plan
-    assert "Generate" in plan, plan  # posexplode row amplification
+    assert not [op for op in shape if "Exchange" in op], shape
+    assert "Generate" in shape, shape  # posexplode row amplification
 
 
 def test_url_features_plan_is_narrow(spark):

@@ -3,7 +3,7 @@ minwise nesting, split partition properties, and no-shuffle plans."""
 
 import pytest
 
-from littletable_spark import Table
+from littletable_spark import Table, plan_shape
 
 
 @pytest.fixture(scope="module")
@@ -61,15 +61,15 @@ def test_sample_fixed_k_and_nesting(orders):
 def test_sample_fixed_plan_is_take_ordered(orders):
     from littletable_spark.operators.sampling import sample_fixed
 
-    plan = sample_fixed(orders, "o_orderkey", 10).df._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
+    shape = plan_shape(sample_fixed(orders, "o_orderkey", 10).df)
+    assert "TakeOrderedAndProject" in shape, shape
 
 
 def test_sample_hash_no_shuffle(orders):
     from littletable_spark.operators.sampling import sample_hash
 
-    plan = sample_hash(orders, "o_orderkey", 0.5).df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    shape = plan_shape(sample_hash(orders, "o_orderkey", 0.5).df)
+    assert not [op for op in shape if "Exchange" in op], shape
 
 
 def test_split_train_test_partitions(orders):
@@ -166,8 +166,8 @@ def test_cap_per_group_plans_window_group_limit(spark):
 
     t = Table("capp", spark=spark)
     t.insert_many([{"g": i % 2, "k": i} for i in range(50)])
-    plan = cap_per_group(t, "g", 5, key_col="k").df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan, plan
+    shape = plan_shape(cap_per_group(t, "g", 5, key_col="k").df)
+    assert "WindowGroupLimit" in shape, shape
 
 
 def test_cap_per_group_weighted_budget(spark):
@@ -224,8 +224,8 @@ def test_cap_per_group_weighted_budget(spark):
         t, "g", 100, key_col="k", salt="s", weight_col="w", min_weight=5
     )
     assert {(r.g, r.k) for r in capped} == kept
-    plan = capped.df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan, plan
+    shape = plan_shape(capped.df)
+    assert "WindowGroupLimit" in shape, shape
 
 
 def test_cap_per_group_weighted_edge_cases(spark):
@@ -409,11 +409,8 @@ def test_sample_weighted_nested_null_and_plan(spark):
     }
     assert 99 not in everything  # NULL weight excluded
     assert all(r % 5 != 0 for r in everything)  # zero weight excluded
-    plan = (
-        sample_weighted(t, 5, "w", "rid")
-        .df._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in plan
+    shape = plan_shape(sample_weighted(t, 5, "w", "rid").df)
+    assert "TakeOrderedAndProject" in shape, shape
 
     with pytest.raises(ValueError, match="k must be positive"):
         sample_weighted(t, 0, "w", "rid")

@@ -35,6 +35,17 @@ def test_apply_runtime_confs_is_memoized(spark):
         spark.conf.set(BYTES_KEY, prev)
 
 
+def test_get_spark_sets_no_distributed_sequence_cache(spark):
+    """Dense positions do not persist a copy of their input per action."""
+    key = "pandas_on_Spark.compute.default_index_cache"
+    try:
+        spark.conf.set(key, "MEMORY_AND_DISK_SER")  # Spark's default
+        assert get_spark() is spark
+        assert spark.conf.get(key) == "NONE"
+    finally:
+        spark.conf.set(key, "NONE")
+
+
 def test_entry_loaders_apply_confs(spark):
     import __spark_entry__ as m
 

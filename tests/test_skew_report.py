@@ -4,7 +4,7 @@ as a value, map-side-bounded plan."""
 
 import pytest
 
-from littletable_spark import Table
+from littletable_spark import Table, plan_shape
 
 
 def _rows(t):
@@ -64,9 +64,11 @@ def test_skew_report_plan_shape(spark):
     t = Table("skewp", spark=spark)
     t.insert_many([{"g": i % 3, "h": i % 5} for i in range(60)])
     r = t.skew_report(["g", "h"], top_k=2)
-    plan = r.df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    shape = plan_shape(r.df)
+    assert "WindowGroupLimit" in shape, shape
+    assert not [
+        op for op in shape if "BatchEvalPython" in op or "ArrowEvalPython" in op
+    ], shape
     assert lint_plan(r.df) == []
 
 

@@ -26,10 +26,10 @@ from __future__ import annotations
 import re
 
 import duckdb
-import pytest
+
+from littletable_spark.plans.lint import _balanced_args
 
 SF_CENSUS = "/root/testdata/sf0.01"
-SF_PLAN = "/root/testdata/sf0.001"
 
 #: column sets verified unique by test_duplicate_key_census; a window
 #: sort that covers any one of these (partition + order keys combined)
@@ -142,19 +142,6 @@ def test_duplicate_key_census():
     )
 
 
-def _balanced_args(s: str, start: int) -> str:
-    """Return the argument string of the call opening at s[start] == '('."""
-    depth = 0
-    for i in range(start, len(s)):
-        if s[i] == "(":
-            depth += 1
-        elif s[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return s[start + 1 : i]
-    raise ValueError("unbalanced parens in plan string")
-
-
 def _window_specs(plan: str) -> list[set[str]]:
     """Extract, for each windowspecdefinition, the set of base attribute
     names referenced by its partition+order expressions."""
@@ -170,16 +157,13 @@ def _window_specs(plan: str) -> list[set[str]]:
     return specs
 
 
-def test_registry_window_sorts_are_total(spark):
+def test_registry_window_sorts_are_total(registry_frames):
     """Every Window in every registry query's plan must sort by a
     provably-unique key (census keyset or synthetic ordinal) or carry a
     documented interchangeability argument."""
-    import __spark_entry__ as entrymod
-
     failures = []
     audited = 0
-    for name, fn in entrymod.registry().items():
-        df = fn(spark, SF_PLAN)
+    for name, df in registry_frames.items():
         plan = df._jdf.queryExecution().analyzed().toString()
         for names in _window_specs(plan):
             audited += 1
