@@ -1,4 +1,4 @@
-"""Bomb-guarded single-stream decompression for blob ingestion.
+"""Bomb-guarded decompression for blob ingestion.
 
 Crawled corpora store documents gzip/bzip2/xz-compressed at the BLOB
 level (not just at the archive level the import resolver already
@@ -12,8 +12,11 @@ point of this module is the SAFETY shape:
   limit; ``decompressobj(max_length=...)`` does);
 - **bounded nesting** — ``.gz`` of ``.xz`` of text unwraps, but only
   ``max_layers`` deep, so pathological self-nesting terminates;
-- trailing-garbage tolerance matches the command-line tools: bytes
-  after the first complete stream are ignored.
+- concatenated streams decode like ``gzip``/``bz2``/``lzma.decompress``
+  and the command-line tools: consecutive streams of the same codec
+  (a multi-member ``.gz``) decode back to back under one output cap,
+  and trailing bytes that do not start with that codec's magic are
+  ignored.
 
 ``maybe_decompress`` returns the innermost payload plus the layer
 count; non-compressed input passes through untouched with 0 layers.
@@ -44,48 +47,52 @@ def sniff_compressed(blob: bytes) -> str | None:
 
 
 def safe_decompress(blob: bytes, cap: int = DEFAULT_CAP) -> bytes:
-    """Decompress one gzip/bzip2/xz stream with a hard output cap.
+    """Decompress the gzip/bzip2/xz streams at the start of ``blob``
+    with a hard cap on their total output.
 
-    Raises ValueError for non-compressed input, corrupt streams, and
-    streams whose decompressed size exceeds ``cap`` (the zip-bomb
-    guard) — all inside the caller's ``on_error`` net.
+    Raises ValueError for non-compressed input, corrupt or truncated
+    streams, and output over ``cap`` (the zip-bomb guard) — all inside
+    the caller's ``on_error`` net.
     """
     kind = sniff_compressed(blob)
     if kind is None:
         raise ValueError("not a gzip/bzip2/xz stream")
-    if kind == "gzip":
-        d = zlib.decompressobj(wbits=31)
-    elif kind == "bzip2":
-        d = bz2.BZ2Decompressor()
-    else:
-        d = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
-    # the INPUT already sits in memory (it is the blob cell); only the
-    # OUTPUT needs bounding, so feed everything and drain in capped
-    # chunks. zlib parks unfed input in .unconsumed_tail; bz2/lzma
-    # buffer internally and drain on decompress(b"").
-    zlib_like = hasattr(d, "unconsumed_tail")
     out: list[bytes] = []
     total = 0
     try:
-        chunk = d.decompress(blob, _CHUNK)
-        while True:
-            if chunk:
-                total += len(chunk)
-                if total > cap:
-                    raise ValueError(
-                        f"decompressed output exceeds {cap} bytes (bomb guard)"
-                    )
-                out.append(chunk)
-            if d.eof:
-                break
-            feed = d.unconsumed_tail if zlib_like else b""
-            if not chunk and not feed:
-                break  # no progress and nothing buffered: truncated
-            chunk = d.decompress(feed, _CHUNK)
+        while sniff_compressed(blob) == kind:
+            if kind == "gzip":
+                d = zlib.decompressobj(wbits=31)
+            elif kind == "bzip2":
+                d = bz2.BZ2Decompressor()
+            else:
+                d = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
+            # the INPUT already sits in memory (it is the blob cell);
+            # only the OUTPUT needs bounding, so feed everything and
+            # drain in capped chunks. zlib parks unfed input in
+            # .unconsumed_tail; bz2/lzma buffer internally and drain on
+            # decompress(b"").
+            zlib_like = hasattr(d, "unconsumed_tail")
+            chunk = d.decompress(blob, _CHUNK)
+            while True:
+                if chunk:
+                    total += len(chunk)
+                    if total > cap:
+                        raise ValueError(
+                            f"decompressed output exceeds {cap} bytes (bomb guard)"
+                        )
+                    out.append(chunk)
+                if d.eof:
+                    break
+                feed = d.unconsumed_tail if zlib_like else b""
+                if not chunk and not feed:
+                    break  # no progress and nothing buffered: truncated
+                chunk = d.decompress(feed, _CHUNK)
+            if not d.eof:
+                raise ValueError(f"truncated {kind} stream")
+            blob = d.unused_data
     except (zlib.error, OSError, EOFError, lzma.LZMAError) as exc:
         raise ValueError(f"corrupt {kind} stream: {exc}") from exc
-    if not d.eof:
-        raise ValueError(f"truncated {kind} stream")
     return b"".join(out)
 
 

@@ -15,8 +15,14 @@ provisioned, is used only as a fallback for variants these decoders
 don't cover (arithmetic-coded JPEG, exotic color modes).
 
 Everything here is per-blob Python executed INSIDE an Arrow batch on
-the executors — the decoders are shipped by value via cloudpickle, so
-they must only import stdlib + numpy (both on every worker).
+the executors, and imports only stdlib + numpy. The decoders are NOT
+shipped by value: cloudpickle pickles them by reference (only
+``functions.normalize`` is registered by value, in the package
+``__init__``), so a real decode path needs ``littletable_spark``
+importable on every worker (``--py-files`` or a cluster install); from
+a worker without it, ``decode_audio(use_fake=False)`` fails with
+``ModuleNotFoundError``. Only the fake paths of ``operators/
+multimodal.py`` run without the package.
 
 Public-format references: PNG (RFC 2083 / W3C PNG spec), BMP
 (BITMAPINFOHEADER, Windows public docs), PPM/PGM (netpbm man pages),

@@ -17,15 +17,18 @@ Scale notes:
 - metadata sniffing is a narrow native projection over the first bytes
   (no UDF, no full-blob scan — parquet stores blobs contiguously and the
   projection reads only what it needs);
-- decode/featurize run in ``mapInPandas`` so each Arrow batch amortizes
-  Python crossing; blobs never pass through the driver;
+- every blob operator (decode, hash, extract, probe, sample, EXIF)
+  crosses into Python through the one Arrow pass ``_blob_pass``: one
+  ``mapInPandas`` per call, so each Arrow batch amortizes the crossing,
+  and one error net for ``on_error``; blobs never pass through the
+  driver. An operator only names its output columns and a per-blob
+  function returning that blob's rows;
 - ``media_repartition`` sizes partitions by *bytes*, not rows — blob
   tables skew by size, so row-count partitioning would OOM executors.
 """
 
 from __future__ import annotations
 
-import struct
 from functools import lru_cache
 from typing import Iterator
 
@@ -185,6 +188,71 @@ def _bounded_blob_input(df: DataFrame, max_rows: int = 256) -> DataFrame:
     return df.repartition(max(1, -(-n // max_rows)))
 
 
+def _check_on_error(on_error: str) -> None:
+    if on_error not in ("raise", "null"):
+        raise ValueError(f"on_error must be raise|null, got {on_error!r}")
+
+
+def _blob_pass(
+    table: Table,
+    bin_col: str,
+    id_col: str,
+    cols: dict[str, str],
+    blob_rows,
+    suffix: str,
+    on_error: str = "raise",
+    null_row: tuple | None = None,
+) -> Table:
+    """The one Arrow pass of every blob operator in this module.
+
+    ``blob_rows(blob)`` returns (or yields) the rows of one blob: tuples
+    of the ``cols`` values (``name -> DDL type``), without the id. The
+    pass prefixes each row with the blob's id and emits ``(id_col,
+    *cols)`` rows into ``<table>_<suffix>``.
+
+    Errors: a blob that raises one of the corrupt-blob family
+    (``imagecodec.CORRUPT_ERRORS`` or ``OSError``) fails the task under
+    ``on_error="raise"``; under ``"null"`` it gives one ``null_row``
+    (all NULL by default) after any rows it yielded before raising.
+
+    ``run`` is a closure that names no module-level helper, so
+    cloudpickle ships it by value; with a ``blob_rows`` that imports
+    nothing from this package (the fake paths), the pass runs on
+    workers that cannot import ``littletable_spark``.
+
+    Construction runs ``_bounded_blob_input``'s eager column-pruned
+    count job.
+    """
+    _check_on_error(on_error)
+    from ..functions.imagecodec import CORRUPT_ERRORS
+
+    errors = (*CORRUPT_ERRORS, OSError)
+    names = [id_col, *cols]
+    null = (None,) * len(cols) if null_row is None else null_row
+    id_type = dict(table._require_df().dtypes)[id_col]
+    schema = ", ".join(
+        [f"{id_col} {id_type}", *(f"{c} {t}" for c, t in cols.items())]
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for _id, b in zip(pdf[id_col], pdf[bin_col]):
+                try:
+                    for row in blob_rows(bytes(b or b"")):
+                        rows.append((_id, *row))
+                except errors:
+                    if on_error == "raise":
+                        raise
+                    rows.append((_id, *null))
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+
+    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
+    out = inp.mapInPandas(run, schema)
+    return Table.from_df(out, name=f"{table.table_name}_{suffix}")
+
+
 def decode_image(
     table: Table,
     bin_col: str,
@@ -217,59 +285,33 @@ def decode_image(
     input is already landed at ≤256 rows/partition) — see
     ``_bounded_blob_input``.
     """
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"decode_image: on_error must be raise|null, got {on_error!r}")
+    if use_fake:
+        # local def, not a module-level helper: the fake pass stays
+        # self-contained so cloudpickle ships it by value even to
+        # workers that don't have this package on sys.path
+        def blob_rows(blob: bytes) -> list[tuple]:
+            import hashlib
 
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = f"{id_col} {id_type}, pixels array<double>, width int, height int"
+            h = hashlib.md5(blob).digest()
+            pixels = [
+                h[(x * 31 + y) % 16] / 255.0
+                for x in range(width)
+                for y in range(height)
+            ]
+            return [(pixels, width, height)]
 
-    # local def, not the module-level helper: the FAKE closure stays
-    # self-contained so cloudpickle ships it by value even to workers
-    # that don't have this package on sys.path
-    def fake_pixels(blob: bytes) -> list[float]:
-        import hashlib as _hl
+    else:
+        from ..functions.imagecodec import decode_to_gray
 
-        h = _hl.md5(blob or b"").digest()
-        return [
-            h[(x * 31 + y) % 16] / 255.0
-            for x in range(width)
-            for y in range(height)
-        ]
+        def blob_rows(blob: bytes) -> list[tuple]:
+            pixels = decode_to_gray(blob, width, height).ravel().tolist()
+            return [(pixels, width, height)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not use_fake:
-            from ..functions.imagecodec import CORRUPT_ERRORS, decode_to_gray
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if use_fake:
-                pixels = [fake_pixels(b) for b in pdf[bin_col]]
-            else:
-                pixels = []
-                for b in pdf[bin_col]:
-                    try:
-                        pixels.append(
-                            decode_to_gray(bytes(b or b""), width, height)
-                            .ravel()
-                            .tolist()
-                        )
-                    except CORRUPT_ERRORS:
-                        if on_error == "raise":
-                            raise
-                        pixels.append(None)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "pixels": pixels,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_decoded")
+    cols = {"pixels": "array<double>", "width": "int", "height": "int"}
+    return _blob_pass(
+        table, bin_col, id_col, cols, blob_rows, "decoded", on_error,
+        null_row=(None, width, height),
+    )
 
 
 def decode_audio(
@@ -299,71 +341,41 @@ def decode_audio(
     NOTE: construction runs one eager column-pruned count job to bound
     the Arrow feed partitions (no shuffle if the input is already
     landed at ≤256 rows/partition) — see ``_bounded_blob_input``."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"decode_audio: on_error must be raise|null, got {on_error!r}")
+    if use_fake:
+        def blob_rows(blob: bytes) -> list[tuple]:
+            import hashlib
 
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, sample_rate int, n_channels int, n_frames long, "
-        "duration double, rms double, peak double, zcr double, "
-        "waveform array<double>"
+            h = hashlib.md5(blob).digest()
+            return [(
+                16000, 1, h[0], h[1] / 255.0, h[2] / 255.0, h[3] / 255.0,
+                h[4] / 255.0, [h[(i * 7) % 16] / 255.0 for i in range(n_points)],
+            )]
+
+    else:
+        from ..functions.audiocodec import mp3_info, sniff_mp3, wav_features
+
+        def blob_rows(blob: bytes) -> list[tuple]:
+            if sniff_mp3(blob):
+                m = mp3_info(blob)
+                return [(
+                    m["sample_rate"], m["n_channels"],
+                    int(round(m["duration"] * m["sample_rate"])),
+                    m["duration"], None, None, None, None,
+                )]
+            f = wav_features(blob, n_points=n_points)
+            return [(
+                f["sample_rate"], f["n_channels"], f["n_frames"],
+                f["duration"], f["rms"], f["peak"], f["zcr"], f["waveform"],
+            )]
+
+    cols = {
+        "sample_rate": "int", "n_channels": "int", "n_frames": "long",
+        "duration": "double", "rms": "double", "peak": "double",
+        "zcr": "double", "waveform": "array<double>",
+    }
+    return _blob_pass(
+        table, bin_col, id_col, cols, blob_rows, "audio", on_error
     )
-    cols = [
-        "sample_rate", "n_channels", "n_frames", "duration",
-        "rms", "peak", "zcr", "waveform",
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hl
-
-        if not use_fake:
-            from ..functions.audiocodec import mp3_info, sniff_mp3, wav_features
-            from ..functions.imagecodec import CORRUPT_ERRORS
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for _id, b in zip(pdf[id_col], pdf[bin_col]):
-                if use_fake:
-                    h = _hl.md5(bytes(b or b"")).digest()
-                    rows.append(
-                        (
-                            _id, 16000, 1, h[0], h[1] / 255.0,
-                            h[2] / 255.0, h[3] / 255.0, h[4] / 255.0,
-                            [h[(i * 7) % 16] / 255.0 for i in range(n_points)],
-                        )
-                    )
-                    continue
-                try:
-                    blob = bytes(b or b"")
-                    if sniff_mp3(blob):
-                        m = mp3_info(blob)
-                        rows.append(
-                            (
-                                _id, m["sample_rate"], m["n_channels"],
-                                int(round(m["duration"] * m["sample_rate"])),
-                                m["duration"], None, None, None, None,
-                            )
-                        )
-                        continue
-                    f = wav_features(blob, n_points=n_points)
-                    rows.append(
-                        (
-                            _id, f["sample_rate"], f["n_channels"],
-                            f["n_frames"], f["duration"], f["rms"],
-                            f["peak"], f["zcr"], f["waveform"],
-                        )
-                    )
-                except CORRUPT_ERRORS:
-                    if on_error == "raise":
-                        raise
-                    rows.append((_id,) + (None,) * 8)
-            yield pd.DataFrame(rows, columns=[id_col, *cols])
-
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_audio")
 
 
 def audio_tags(table: Table, bin_col: str, id_col: str) -> Table:
@@ -382,60 +394,43 @@ def audio_tags(table: Table, bin_col: str, id_col: str) -> Table:
 
     NOTE: construction runs one eager column-pruned count job to bound
     the Arrow feed partitions — see ``_bounded_blob_input``."""
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, title string, artist string, "
-        "album string, year string, genre string"
+    from ..functions.audiocodec import (
+        aiff_info,
+        flac_info,
+        mp3_tags,
+        sniff_mp3,
+        wav_info,
     )
-    keys = ("title", "artist", "album", "year", "genre")
+    from ..functions.mkvcodec import mkv_info, sniff_mkv
+    from ..functions.mp4codec import mp4_info, sniff_mp4
+    from ..functions.oggcodec import ogg_info, sniff_ogg
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.audiocodec import (
-            aiff_info,
-            flac_info,
-            mp3_tags,
-            sniff_mp3,
-            wav_info,
-        )
-        from ..functions.mkvcodec import mkv_info, sniff_mkv
-        from ..functions.mp4codec import mp4_info, sniff_mp4
-        from ..functions.oggcodec import ogg_info, sniff_ogg
+    cols = dict.fromkeys(("title", "artist", "album", "year", "genre"), "string")
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for _id, b in zip(pdf[id_col], pdf[bin_col]):
-                blob = bytes(b or b"")
-                t: dict = {}
-                try:
-                    # container magics BEFORE the mp3 frame-sync scan:
-                    # Vorbis id headers carry FF FF FF FF bitrate
-                    # fields that satisfy MPEG sync
-                    if sniff_ogg(blob):
-                        t = ogg_info(blob)
-                    elif sniff_mp4(blob):
-                        t = mp4_info(blob)
-                    elif sniff_mkv(blob):
-                        t = mkv_info(blob)
-                    elif blob[:4] == b"fLaC":
-                        t = flac_info(blob)
-                    elif blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-                        t = wav_info(blob)
-                    elif blob[:4] == b"FORM" and blob[8:12] in (
-                        b"AIFF", b"AIFC",
-                    ):
-                        t = aiff_info(blob)
-                    elif sniff_mp3(blob):
-                        t = mp3_tags(blob)
-                except (ValueError, struct.error, IndexError):
-                    t = {}  # tags are optional — corrupt tag block != no row
-                rows.append((_id, *[t.get(k) for k in keys]))
-            yield pd.DataFrame(rows, columns=[id_col, *keys])
+    def blob_rows(blob: bytes) -> list[tuple]:
+        t: dict = {}
+        # container magics BEFORE the mp3 frame-sync scan: Vorbis id
+        # headers carry FF FF FF FF bitrate fields that satisfy MPEG sync
+        if sniff_ogg(blob):
+            t = ogg_info(blob)
+        elif sniff_mp4(blob):
+            t = mp4_info(blob)
+        elif sniff_mkv(blob):
+            t = mkv_info(blob)
+        elif blob[:4] == b"fLaC":
+            t = flac_info(blob)
+        elif blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
+            t = wav_info(blob)
+        elif blob[:4] == b"FORM" and blob[8:12] in (b"AIFF", b"AIFC"):
+            t = aiff_info(blob)
+        elif sniff_mp3(blob):
+            t = mp3_tags(blob)
+        return [tuple(t.get(k) for k in cols)]
 
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_audio_tags")
+    # tags are optional: a corrupt tag block gives an all-NULL row
+    return _blob_pass(
+        table, bin_col, id_col, cols, blob_rows, "audio_tags", "null"
+    )
 
 
 def media_info(
@@ -476,93 +471,70 @@ def media_info(
     NOTE: construction runs one eager column-pruned count job to bound
     the Arrow feed partitions — see ``_bounded_blob_input``.
     """
-    if on_error not in ("raise", "null"):
-        raise ValueError(
-            f"media_info: on_error must be raise|null, got {on_error!r}"
-        )
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, media_format string, duration_s double, "
-        "width int, height int, codec string, audio_codec string, "
-        "channels int, sample_rate int, n_tracks int, title string, "
-        "artist string, album string, year string, genre string"
+    from ..functions.audiocodec import (
+        aiff_info,
+        flac_info,
+        mp3_info,
+        mp3_tags,
+        sniff_mp3,
+        wav_info,
     )
-    cols = [
-        "media_format", "duration_s", "width", "height", "codec",
-        "audio_codec", "channels", "sample_rate", "n_tracks",
-        "title", "artist", "album", "year", "genre",
-    ]
+    from ..functions.mkvcodec import mkv_info, sniff_mkv
+    from ..functions.mp4codec import mp4_info, sniff_mp4
+    from ..functions.oggcodec import ogg_info, sniff_ogg
+    from ..functions.videocodec import avi_info
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.audiocodec import (
-            aiff_info,
-            flac_info,
-            mp3_info,
-            mp3_tags,
-            sniff_mp3,
-            wav_info,
-        )
-        from ..functions.mkvcodec import mkv_info, sniff_mkv
-        from ..functions.mp4codec import mp4_info, sniff_mp4
-        from ..functions.oggcodec import ogg_info, sniff_ogg
-        from ..functions.videocodec import avi_info
+    cols = {
+        "media_format": "string", "duration_s": "double", "width": "int",
+        "height": "int", "codec": "string", "audio_codec": "string",
+        "channels": "int", "sample_rate": "int", "n_tracks": "int",
+        "title": "string", "artist": "string", "album": "string",
+        "year": "string", "genre": "string",
+    }
 
-        def probe(blob: bytes) -> dict:
-            if sniff_mp4(blob):
-                return mp4_info(blob)
-            if sniff_mkv(blob):
-                return mkv_info(blob)
-            if sniff_ogg(blob):
-                return ogg_info(blob)
-            if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-                return {"format": "wav", "n_tracks": 1, **wav_info(blob)}
-            if blob[:4] == b"FORM" and blob[8:12] in (b"AIFF", b"AIFC"):
-                return {"format": "aiff", "n_tracks": 1, **aiff_info(blob)}
-            if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
-                got = avi_info(blob)
-                return {"format": "avi", "codec": got.get("codec"), **got}
-            if blob[:4] == b"fLaC":
-                return {"format": "flac", "n_tracks": 1, **flac_info(blob)}
-            if sniff_mp3(blob):
-                got = mp3_info(blob)
-                return {
-                    "format": "mp3",
-                    "codec": "mp3",
-                    "duration_s": got["duration"],
-                    "channels": got["n_channels"],
-                    "sample_rate": got["sample_rate"],
-                    "n_tracks": 1,
-                    **mp3_tags(blob),
-                }
-            raise ValueError("media_info: unrecognized container")
+    def probe(blob: bytes) -> dict:
+        if sniff_mp4(blob):
+            return mp4_info(blob)
+        if sniff_mkv(blob):
+            return mkv_info(blob)
+        if sniff_ogg(blob):
+            return ogg_info(blob)
+        if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
+            return {"format": "wav", "n_tracks": 1, **wav_info(blob)}
+        if blob[:4] == b"FORM" and blob[8:12] in (b"AIFF", b"AIFC"):
+            return {"format": "aiff", "n_tracks": 1, **aiff_info(blob)}
+        if blob[:4] == b"RIFF" and blob[8:12] == b"AVI ":
+            got = avi_info(blob)
+            return {"format": "avi", "codec": got.get("codec"), **got}
+        if blob[:4] == b"fLaC":
+            return {"format": "flac", "n_tracks": 1, **flac_info(blob)}
+        if sniff_mp3(blob):
+            got = mp3_info(blob)
+            return {
+                "format": "mp3",
+                "codec": "mp3",
+                "duration_s": got["duration"],
+                "channels": got["n_channels"],
+                "sample_rate": got["sample_rate"],
+                "n_tracks": 1,
+                **mp3_tags(blob),
+            }
+        raise ValueError("media_info: unrecognized container")
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for _id, b in zip(pdf[id_col], pdf[bin_col]):
-                blob = bytes(b or b"")
-                try:
-                    got = probe(blob)
-                    # audio-only containers report their codec in the
-                    # unified audio_codec column
-                    if "audio_codec" not in got and got.get("codec") and (
-                        got["format"] in ("wav", "aiff", "flac", "mp3")
-                    ):
-                        got["audio_codec"] = got.pop("codec")
-                    got["media_format"] = got.pop("format")
-                    rows.append(
-                        (_id, *[got.get(c) for c in cols])
-                    )
-                except (ValueError, struct.error, IndexError):
-                    if on_error == "raise":
-                        raise
-                    rows.append((_id,) + (None,) * len(cols))
-            yield pd.DataFrame(rows, columns=[id_col, *cols])
+    def blob_rows(blob: bytes) -> list[tuple]:
+        got = probe(blob)
+        # audio-only containers report their codec in the unified
+        # audio_codec column
+        if "audio_codec" not in got and got.get("codec") and (
+            got["format"] in ("wav", "aiff", "flac", "mp3")
+        ):
+            got["audio_codec"] = got.pop("codec")
+        got["media_format"] = got.pop("format")
+        return [tuple(got.get(c) for c in cols)]
 
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_media_info")
+    return _blob_pass(
+        table, bin_col, id_col, cols, blob_rows, "media_info", on_error
+    )
 
 
 def image_hash(
@@ -593,9 +565,8 @@ def image_hash(
     job to bound the Arrow feed partitions — see
     ``_bounded_blob_input``. The fake path is a pure projection.
     """
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"image_hash: on_error must be raise|null, got {on_error!r}")
     if use_fake:
+        _check_on_error(on_error)
         # 15 hex chars = 60 bits: always positive in a signed long in
         # BOTH engines (DuckDB's ::BIGINT has no unsigned escape hatch)
         h = F.conv(
@@ -606,36 +577,23 @@ def image_hash(
         )
         return Table.from_df(out, name=f"{table.table_name}_imghash")
 
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = f"{id_col} {id_type}, img_hash long"
+    from ..functions.imagecodec import decode_to_gray
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.imagecodec import CORRUPT_ERRORS, decode_to_gray
+    def blob_rows(blob: bytes) -> list[tuple]:
+        g = decode_to_gray(blob, 9, 8)  # (8, 9)
+        bits = (g[:, :-1] > g[:, 1:]).ravel()
+        h = 0
+        for i, bit in enumerate(bits):
+            if bit:
+                h |= 1 << i
+        if h >= 1 << 63:  # two's-complement into a long
+            h -= 1 << 64
+        return [(h,)]
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            hashes = []
-            for b in pdf[bin_col]:
-                try:
-                    g = decode_to_gray(bytes(b or b""), 9, 8)  # (8, 9)
-                    bits = (g[:, :-1] > g[:, 1:]).ravel()
-                    h = 0
-                    for i, bit in enumerate(bits):
-                        if bit:
-                            h |= 1 << i
-                    if h >= 1 << 63:  # two's-complement into a long
-                        h -= 1 << 64
-                    hashes.append(h)
-                except CORRUPT_ERRORS:
-                    if on_error == "raise":
-                        raise
-                    hashes.append(None)
-            yield pd.DataFrame({id_col: pdf[id_col], "img_hash": hashes})
-
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_imghash")
+    return _blob_pass(
+        table, bin_col, id_col, {"img_hash": "long"}, blob_rows, "imghash",
+        on_error,
+    )
 
 
 def _extract_document(
@@ -776,47 +734,16 @@ def extract_text(
     NOTE: construction runs one eager column-pruned count job to bound
     the Arrow feed partitions — see ``_bounded_blob_input``.
     """
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"extract_text: on_error must be raise|null, got {on_error!r}")
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, doc_format string, title string, "
-        "text string, n_chars int, encoding string"
-    )
+    cols = {
+        "doc_format": "string", "title": "string", "text": "string",
+        "n_chars": "int", "encoding": "string",
+    }
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.imagecodec import CORRUPT_ERRORS
+    def blob_rows(blob: bytes) -> list[tuple]:
+        fmt, title, text, enc = _extract_document(blob, html_main_content)
+        return [(fmt, title, text, len(text), enc)]
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for _id, b in zip(pdf[id_col], pdf[bin_col]):
-                try:
-                    fmt, title, text, enc = _extract_document(
-                        bytes(b or b""), html_main_content
-                    )
-                    rows.append((_id, fmt, title, text, enc))
-                except (*CORRUPT_ERRORS, UnicodeDecodeError):
-                    if on_error == "raise":
-                        raise
-                    rows.append((_id, None, None, None, None))
-            yield pd.DataFrame(
-                {
-                    id_col: [r[0] for r in rows],
-                    "doc_format": [r[1] for r in rows],
-                    "title": [r[2] for r in rows],
-                    "text": [r[3] for r in rows],
-                    "n_chars": [
-                        len(r[3]) if r[3] is not None else None for r in rows
-                    ],
-                    "encoding": [r[4] for r in rows],
-                }
-            )
-
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_text")
+    return _blob_pass(table, bin_col, id_col, cols, blob_rows, "text", on_error)
 
 
 def extract_archive_text(
@@ -855,108 +782,72 @@ def extract_archive_text(
     NOTE: construction runs one eager column-pruned count job to bound
     the Arrow feed partitions — see ``_bounded_blob_input``.
     """
-    if on_error not in ("raise", "null"):
-        raise ValueError(
-            f"extract_archive_text: on_error must be raise|null, "
-            f"got {on_error!r}"
-        )
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, member string, doc_format string, "
-        "title string, text string, n_chars int, encoding string"
-    )
+    import io
+    import tarfile
+    import zipfile
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import tarfile
-        import zipfile
+    from ..functions.compress import maybe_decompress
+    from ..functions.imagecodec import CORRUPT_ERRORS
 
-        from ..functions.compress import maybe_decompress
-        from ..functions.imagecodec import CORRUPT_ERRORS
+    cols = {
+        "member": "string", "doc_format": "string", "title": "string",
+        "text": "string", "n_chars": "int", "encoding": "string",
+    }
 
-        def members(blob: bytes):
-            """Yield (name, payload_bytes_or_None_when_capped)."""
-            if blob.startswith(b"PK\x03\x04"):
-                try:
-                    with zipfile.ZipFile(io.BytesIO(blob)) as zf:
-                        for zi in zf.infolist()[:max_members]:
-                            if zi.is_dir() or zi.file_size == 0:
-                                continue
-                            if zi.file_size > member_cap:
-                                yield zi.filename, None
-                            else:
-                                yield zi.filename, zf.read(zi)
-                except zipfile.BadZipFile as exc:
-                    raise ValueError(f"corrupt zip: {exc}") from exc
-                return
+    def members(blob: bytes):
+        """Yield (name, payload_bytes_or_None_when_capped)."""
+        if blob.startswith(b"PK\x03\x04"):
             try:
-                tf = tarfile.open(fileobj=io.BytesIO(blob), mode="r:")
-            except tarfile.TarError as exc:
-                raise ValueError(f"not a zip/tar archive: {exc}") from exc
-            with tf:
-                count = 0
-                for ti in tf:
-                    if count >= max_members:
-                        break
-                    if not ti.isfile() or ti.size == 0:
-                        continue
-                    count += 1
-                    if ti.size > member_cap:
-                        yield ti.name, None
-                    else:
-                        f = tf.extractfile(ti)
-                        yield ti.name, f.read() if f else b""
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for _id, b in zip(pdf[id_col], pdf[bin_col]):
-                blob = bytes(b or b"")
-                try:
-                    blob, _ = maybe_decompress(blob)  # .tar.gz et al.
-                    for name, payload in members(blob):
-                        if payload is None:  # declared size over cap
-                            if on_error == "raise":
-                                raise ValueError(
-                                    f"member {name!r} exceeds {member_cap}"
-                                )
-                            rows.append(
-                                (_id, name, None, None, None, None)
-                            )
+                with zipfile.ZipFile(io.BytesIO(blob)) as zf:
+                    for zi in zf.infolist()[:max_members]:
+                        if zi.is_dir() or zi.file_size == 0:
                             continue
-                        try:
-                            fmt, title, text, enc = _extract_document(
-                                payload, html_main_content
-                            )
-                            rows.append((_id, name, fmt, title, text, enc))
-                        except (*CORRUPT_ERRORS, UnicodeDecodeError):
-                            if on_error == "raise":
-                                raise
-                            rows.append(
-                                (_id, name, None, None, None, None)
-                            )
-                except (*CORRUPT_ERRORS, UnicodeDecodeError, OSError):
-                    if on_error == "raise":
-                        raise
-                    rows.append((_id, None, None, None, None, None))
-            yield pd.DataFrame(
-                {
-                    id_col: [r[0] for r in rows],
-                    "member": [r[1] for r in rows],
-                    "doc_format": [r[2] for r in rows],
-                    "title": [r[3] for r in rows],
-                    "text": [r[4] for r in rows],
-                    "n_chars": [
-                        len(r[4]) if r[4] is not None else None for r in rows
-                    ],
-                    "encoding": [r[5] for r in rows],
-                }
-            )
+                        if zi.file_size > member_cap:
+                            yield zi.filename, None
+                        else:
+                            yield zi.filename, zf.read(zi)
+            except zipfile.BadZipFile as exc:
+                raise ValueError(f"corrupt zip: {exc}") from exc
+            return
+        try:
+            tf = tarfile.open(fileobj=io.BytesIO(blob), mode="r:")
+        except tarfile.TarError as exc:
+            raise ValueError(f"not a zip/tar archive: {exc}") from exc
+        with tf:
+            count = 0
+            for ti in tf:
+                if count >= max_members:
+                    break
+                if not ti.isfile() or ti.size == 0:
+                    continue
+                count += 1
+                if ti.size > member_cap:
+                    yield ti.name, None
+                else:
+                    f = tf.extractfile(ti)
+                    yield ti.name, f.read() if f else b""
 
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_archive_text")
+    def blob_rows(blob: bytes):
+        """One row per member; a member that fails (or is over the
+        cap) gives a null row that keeps its name under "null"."""
+        blob, _ = maybe_decompress(blob)  # .tar.gz et al.
+        for name, payload in members(blob):
+            try:
+                if payload is None:  # declared size over cap
+                    raise ValueError(f"member {name!r} exceeds {member_cap}")
+                fmt, title, text, enc = _extract_document(
+                    payload, html_main_content
+                )
+            except CORRUPT_ERRORS:
+                if on_error == "raise":
+                    raise
+                yield (name, None, None, None, None, None)
+                continue
+            yield (name, fmt, title, text, len(text), enc)
+
+    return _blob_pass(
+        table, bin_col, id_col, cols, blob_rows, "archive_text", on_error
+    )
 
 
 def image_dup_pairs(
@@ -1012,9 +903,8 @@ def audio_hash(
     job to bound the Arrow feed partitions — see
     ``_bounded_blob_input``. The fake path is a pure projection.
     """
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"audio_hash: on_error must be raise|null, got {on_error!r}")
     if use_fake:
+        _check_on_error(on_error)
         h = F.conv(
             F.substring(
                 F.md5(F.concat(F.lit("aud:"), F.lower(F.hex(F.col(bin_col))))),
@@ -1027,28 +917,15 @@ def audio_hash(
         out = table._require_df().select(F.col(id_col), h.alias("audio_hash"))
         return Table.from_df(out, name=f"{table.table_name}_audiohash")
 
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = f"{id_col} {id_type}, audio_hash long"
+    from ..functions.audiocodec import audio_fingerprint
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.audiocodec import audio_fingerprint
+    def blob_rows(blob: bytes) -> list[tuple]:
+        return [(audio_fingerprint(blob),)]
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            hashes = []
-            for b in pdf[bin_col]:
-                try:
-                    hashes.append(audio_fingerprint(bytes(b or b"")))
-                except ValueError:
-                    if on_error == "raise":
-                        raise
-                    hashes.append(None)
-            yield pd.DataFrame({id_col: pdf[id_col], "audio_hash": hashes})
-
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_audiohash")
+    return _blob_pass(
+        table, bin_col, id_col, {"audio_hash": "long"}, blob_rows,
+        "audiohash", on_error,
+    )
 
 
 def audio_dup_pairs(
@@ -1090,41 +967,22 @@ def exif_report(table: Table, bin_col: str, id_col: str) -> Table:
     NOTE: constructing this operator runs the eager column-pruned
     per-partition probe to bound the Arrow feed — see
     ``_bounded_blob_input``."""
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = (
-        f"{id_col} {id_type}, has_exif boolean, orientation int, "
-        "make string, model string, exif_datetime string, "
-        "has_gps boolean, gps_lat double, gps_lon double"
-    )
+    from ..functions.exifmeta import parse_exif
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.exifmeta import parse_exif
+    cols = {
+        "has_exif": "boolean", "orientation": "int", "make": "string",
+        "model": "string", "exif_datetime": "string", "has_gps": "boolean",
+        "gps_lat": "double", "gps_lon": "double",
+    }
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[bin_col]):
-                m = parse_exif(bytes(blob or b""))
-                rows.append(
-                    (
-                        rid, m["has_exif"], m["orientation"], m["make"],
-                        m["model"], m["datetime"], m["has_gps"],
-                        m["gps_lat"], m["gps_lon"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "has_exif", "orientation", "make", "model",
-                    "exif_datetime", "has_gps", "gps_lat", "gps_lon",
-                ],
-            )
+    def blob_rows(blob: bytes) -> list[tuple]:
+        m = parse_exif(blob)
+        return [(
+            m["has_exif"], m["orientation"], m["make"], m["model"],
+            m["datetime"], m["has_gps"], m["gps_lat"], m["gps_lon"],
+        )]
 
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    return Table.from_df(
-        inp.mapInPandas(run, schema), name=f"{table.table_name}_exif"
-    )
+    return _blob_pass(table, bin_col, id_col, cols, blob_rows, "exif")
 
 
 def scrub_image_metadata(table: Table, bin_col: str, id_col: str) -> Table:
@@ -1137,27 +995,13 @@ def scrub_image_metadata(table: Table, bin_col: str, id_col: str) -> Table:
     Caveat (documented): the orientation tag is metadata too — scrub
     AFTER any decode that should honor display orientation, or rotate
     pixels physically first."""
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = f"{id_col} {id_type}, {bin_col} binary"
+    from ..functions.exifmeta import strip_exif
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.exifmeta import strip_exif
+    def blob_rows(blob: bytes) -> list[tuple]:
+        return [(strip_exif(blob),)]
 
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    bin_col: [
-                        strip_exif(bytes(b or b"")) for b in pdf[bin_col]
-                    ],
-                }
-            )
-
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    return Table.from_df(
-        inp.mapInPandas(run, schema), name=f"{table.table_name}_scrubbed"
+    return _blob_pass(
+        table, bin_col, id_col, {bin_col: "binary"}, blob_rows, "scrubbed"
     )
 
 
@@ -1212,54 +1056,31 @@ def frame_sample(
     the Arrow feed partitions (no shuffle if the input is already
     landed at ≤256 rows/partition) — see ``_bounded_blob_input``.
     """
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"frame_sample: on_error must be raise|null, got {on_error!r}")
+    if use_fake:
+        def blob_rows(blob: bytes) -> list[tuple]:
+            step = max(len(blob) // n_frames, 1)
+            return [
+                (i, blob[i * step : i * step + step]) for i in range(n_frames)
+            ]
 
-    id_type = dict(table._require_df().dtypes)[id_col]
-    schema = f"{id_col} {id_type}, frame_idx int, frame binary"
+    else:
+        from ..functions.mp4codec import sample_mp4_frames
+        from ..functions.videocodec import (
+            sample_avi_frames,
+            sample_gif_frames,
+            sample_webp_frames,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if not use_fake:
-            from ..functions.imagecodec import CORRUPT_ERRORS
-            from ..functions.videocodec import (
-                sample_avi_frames,
-                sample_gif_frames,
-                sample_webp_frames,
-            )
+        def blob_rows(blob: bytes) -> list[tuple]:
+            if blob[:6] in (b"GIF87a", b"GIF89a"):
+                return sample_gif_frames(blob, n_frames)
+            if blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
+                return sample_webp_frames(blob, n_frames)
+            if len(blob) >= 12 and blob[4:8] == b"ftyp":
+                return sample_mp4_frames(blob, n_frames)
+            return sample_avi_frames(blob, n_frames)
 
-        for pdf in batches:
-            rows = []
-            for _id, blob in zip(pdf[id_col], pdf[bin_col]):
-                blob = bytes(blob or b"")
-                if use_fake:
-                    step = max(len(blob) // n_frames, 1)
-                    for i in range(n_frames):
-                        rows.append(
-                            (_id, i, blob[i * step : i * step + step])
-                        )
-                    continue
-                try:
-                    if blob[:6] in (b"GIF87a", b"GIF89a"):
-                        sampler = sample_gif_frames
-                    elif blob[:4] == b"RIFF" and blob[8:12] == b"WEBP":
-                        sampler = sample_webp_frames
-                    elif len(blob) >= 12 and blob[4:8] == b"ftyp":
-                        from ..functions.mp4codec import sample_mp4_frames
-
-                        sampler = sample_mp4_frames
-                    else:
-                        sampler = sample_avi_frames
-                    rows.extend(
-                        (_id, idx, frame)
-                        for idx, frame in sampler(blob, n_frames)
-                    )
-                except CORRUPT_ERRORS:
-                    if on_error == "raise":
-                        raise
-                    rows.append((_id, None, None))
-            if rows:
-                yield pd.DataFrame(rows, columns=[id_col, "frame_idx", "frame"])
-
-    inp = _bounded_blob_input(table.df.select(id_col, bin_col))
-    out = inp.mapInPandas(run, schema)
-    return Table.from_df(out, name=f"{table.table_name}_frames")
+    cols = {"frame_idx": "int", "frame": "binary"}
+    return _blob_pass(
+        table, bin_col, id_col, cols, blob_rows, "frames", on_error
+    )

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import gzip
 import re
+import zlib
 from typing import Iterator
 from xml.etree import ElementTree
 
@@ -47,7 +48,7 @@ def parse_sitemap(blob: bytes) -> list[dict]:
     if blob[:2] == b"\x1f\x8b":
         try:
             blob = gzip.decompress(blob)
-        except OSError as exc:
+        except (OSError, EOFError, zlib.error) as exc:  # bad, truncated, flipped
             raise ValueError(f"corrupt gzip sitemap: {exc}") from None
     text = blob.decode("utf-8", errors="replace").strip()
     if not text:

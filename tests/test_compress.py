@@ -65,6 +65,22 @@ def test_trailing_garbage_tolerated():
     assert safe_decompress(gzip.compress(b"payload") + b"TRAILER") == b"payload"
 
 
+def test_concatenated_streams_all_decoded():
+    """Consecutive streams of one codec decode back to back, like
+    ``gzip.decompress`` and the command-line tools."""
+    for enc in (gzip.compress, bz2.compress, lzma.compress):
+        blob = enc(b"first part ") + enc(b"second part")
+        assert safe_decompress(blob) == b"first part second part"
+        assert safe_decompress(blob + b"TRAILER") == b"first part second part"
+
+
+def test_bomb_cap_counts_every_stream():
+    member = gzip.compress(b"\x00" * (600 << 10))
+    assert len(safe_decompress(member, cap=1 << 20)) == 600 << 10
+    with pytest.raises(ValueError, match="bomb guard"):
+        safe_decompress(member + member, cap=1 << 20)
+
+
 def test_nesting_bounded():
     nested = lzma.compress(gzip.compress(b"inner text"))
     assert maybe_decompress(nested) == (b"inner text", 2)
@@ -87,6 +103,8 @@ def test_extract_text_unwraps_compressed(spark):
             b"1\n00:00:01,000 --> 00:00:02,000\ncompressed cue\n"
         )},
         {"id": 4, "blob": gzip.compress(b"x" * (2 << 20))[:40]},  # truncated
+        # a two-member .txt.gz (concatenated gzip files)
+        {"id": 5, "blob": gzip.compress(b"hello there ") + gzip.compress(b"second member")},
     ]
     t = Table("gz", spark=spark)
     t.insert_many(rows)
@@ -100,3 +118,4 @@ def test_extract_text_unwraps_compressed(spark):
     assert got[3].doc_format == "srt"
     assert got[3].text == "compressed cue"
     assert got[4].doc_format is None and got[4].text is None
+    assert got[5].text == "hello there second member"

@@ -446,13 +446,15 @@ def test_audio_dup_pairs_real_path(spark):
             {"aid": 1, "blob": _flac_encode(x, bps=16)},       # same clip
             {"aid": 2, "blob": _wav_pcm16(y)},                 # different
             {"aid": 3, "blob": b"corrupt audio bytes"},
+            # truncated WAV: the codec raises struct.error, not ValueError
+            {"aid": 4, "blob": b"RIFF\x10\x00\x00\x00WAVEfmt \x02\x00\x00\x00AB"},
         ]
     )
     hashes = {
         r.aid: r.audio_hash
         for r in audio_hash(t, "blob", "aid", use_fake=False, on_error="null")
     }
-    assert hashes[0] == hashes[1] and hashes[3] is None
+    assert hashes[0] == hashes[1] and hashes[3] is None and hashes[4] is None
     pairs = audio_dup_pairs(
         t, "blob", "aid", max_hamming=3, use_fake=False, on_error="null"
     )

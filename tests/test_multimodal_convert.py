@@ -102,6 +102,66 @@ def test_frame_sample(blobs):
     assert sorted(by_id[3]) == [0, 1, 2, 3]  # empty blob still yields frames
 
 
+_BY_VALUE_CHILD = """
+import pickle, sys
+with open(sys.argv[1], "rb") as f:
+    fn, batch = pickle.load(f)
+out = list(fn(iter([batch])))
+with open(sys.argv[2], "wb") as f:
+    pickle.dump((out, "littletable_spark" in sys.modules), f)
+"""
+
+
+def test_fake_blob_passes_ship_by_value(spark, blobs, monkeypatch, tmp_path):
+    """The fake decode paths run on workers that cannot import this
+    package: the function each hands to ``mapInPandas`` pickles by
+    value and, in an isolated interpreter outside the repo, gives the
+    in-process rows without importing ``littletable_spark``."""
+    import pickle
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from littletable_spark.operators.multimodal import (
+        decode_audio,
+        decode_image,
+        frame_sample,
+    )
+
+    df_class = type(blobs.df)
+    captured = []
+    original = df_class.mapInPandas
+
+    def capture(self, func, *args, **kwargs):
+        captured.append(func)
+        return original(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "mapInPandas", capture)
+    decode_image(blobs, "blob", "id", width=4, height=3)
+    decode_audio(blobs, "blob", "id", n_points=5, use_fake=True)
+    frame_sample(blobs, "blob", "id", n_frames=3)
+    assert len(captured) == 3
+
+    batch = pd.DataFrame(
+        {"id": [0, 1, 2], "blob": [b"\x89PNG\r\n\x1a\nxyz", b"", None]}
+    )
+    for i, fn in enumerate(captured):
+        want = [f.to_dict("list") for f in fn(iter([batch]))]
+        assert want and sum(len(f["id"]) for f in want) >= 3
+        inp, outp = tmp_path / f"in{i}.pkl", tmp_path / f"out{i}.pkl"
+        inp.write_bytes(cloudpickle.dumps((fn, batch)))
+        subprocess.run(
+            [sys.executable, "-I", "-c", _BY_VALUE_CHILD, str(inp), str(outp)],
+            cwd=tmp_path,
+            check=True,
+        )
+        got, imported = pickle.loads(outp.read_bytes())
+        assert [f.to_dict("list") for f in got] == want
+        assert not imported
+
+
 def test_media_repartition_by_bytes(blobs, spark):
     from littletable_spark.operators.multimodal import media_repartition
 

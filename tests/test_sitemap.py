@@ -27,6 +27,15 @@ _INDEX = b"""<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
 </sitemapindex>"""
 
 
+def _corrupt_gzips() -> tuple[bytes, bytes]:
+    """A half-truncated ``.xml.gz`` (``EOFError`` out of ``gzip``) and
+    one with a flipped deflate byte (``zlib.error``)."""
+    good = gzip.compress(_INDEX)
+    flipped = bytearray(good)
+    flipped[12] ^= 0xFF
+    return good[: len(good) // 2], bytes(flipped)
+
+
 def test_parse_urlset():
     got = parse_sitemap(_URLSET)
     assert len(got) == 2
@@ -57,8 +66,9 @@ def test_parse_rejections():
         parse_sitemap(b"<urlset><url></urlset>")
     with pytest.raises(ValueError, match="not a sitemap"):
         parse_sitemap(b"<html><body>nope</body></html>")
-    with pytest.raises(ValueError, match="gzip"):
-        parse_sitemap(b"\x1f\x8b" + b"\x00" * 10)
+    for blob in (b"\x1f\x8b" + b"\x00" * 10, *_corrupt_gzips()):
+        with pytest.raises(ValueError, match="gzip"):
+            parse_sitemap(blob)
     assert parse_sitemap(b"") == []
 
 
@@ -73,11 +83,12 @@ def test_sitemap_entries_to_frontier(spark):
             {"id": 0, "blob": _URLSET},
             {"id": 1, "blob": gzip.compress(_INDEX)},
             {"id": 2, "blob": b"totally not xml <"},
+            {"id": 3, "blob": _corrupt_gzips()[0]},
         ]
     )
     entries = sitemap_entries(t, "blob", "id", on_error="null")
     rows = sorted((r.id, r.kind, r.loc) for r in entries)
-    assert len(rows) == 4 and not any(i == 2 for i, _, _ in rows)
+    assert len(rows) == 4 and not any(i in (2, 3) for i, _, _ in rows)
     with pytest.raises(Exception):
         sitemap_entries(t, "blob", "id").df.collect()
 
