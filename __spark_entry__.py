@@ -3359,10 +3359,10 @@ def _hash_bucket_sql(key: str, salt: str) -> str:
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Query registry. ORDER MATTERS: the driver's correctness gate takes
     the first 50 entries, so those are the highest-signal queries, all
-    oracle-checked. A new query enters the gate
-    first and parks a gated query with an in-gate sibling on the same
-    code path. Why a query is shaped as it is sits in its ``q_``
-    docstring; the rotation history is in git.
+    oracle-checked. A new query enters the gate first and parks a gated
+    query with an in-gate sibling on the same code path. Why a query is
+    shaped as it is sits in its ``q_`` docstring; the rotation history
+    is in git.
 
     The local mirror (scripts/verify_oracle.py) runs every query every
     round, rows-only where no oracle exists."""
