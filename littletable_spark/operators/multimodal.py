@@ -230,9 +230,14 @@ def _blob_pass(
     names = [id_col, *cols]
     null = (None,) * len(cols) if null_row is None else null_row
     id_type = dict(table._require_df().dtypes)[id_col]
-    schema = ", ".join(
-        [f"{id_col} {id_type}", *(f"{c} {t}" for c, t in cols.items())]
-    )
+    types = [id_type, *cols.values()]
+    schema = ", ".join(f"{c} {t}" for c, t in zip(names, types))
+    # pandas turns an integer column holding a None into float64, which
+    # rounds a 64-bit hash; these columns go out as Python ints instead
+    exact = [
+        k for k, t in enumerate(types)
+        if t in ("tinyint", "smallint", "int", "bigint", "long")
+    ]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -246,7 +251,12 @@ def _blob_pass(
                         raise
                     rows.append((_id, *null))
             if rows:
-                yield pd.DataFrame(rows, columns=names)
+                pdf_out = pd.DataFrame(rows, columns=names)
+                for k in exact:
+                    pdf_out[names[k]] = pd.Series(
+                        [r[k] for r in rows], dtype=object
+                    )
+                yield pdf_out
 
     inp = _bounded_blob_input(table.df.select(id_col, bin_col))
     out = inp.mapInPandas(run, schema)

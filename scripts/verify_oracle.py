@@ -7,12 +7,13 @@ multiset. Usage: python scripts/verify_oracle.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None

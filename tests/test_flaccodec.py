@@ -10,6 +10,7 @@ import pytest
 from littletable_spark.functions.audiocodec import (
     _crc8,
     _crc16,
+    audio_fingerprint,
     decode_audio_blob,
     decode_flac,
 )
@@ -439,22 +440,27 @@ def test_audio_dup_pairs_real_path(spark):
 
     x = _tone(seed=6)
     y = _tone(seed=8)[::-1].copy()
-    t = Table("aud", spark=spark)
-    t.insert_many(
-        [
-            {"aid": 0, "blob": _wav_pcm16(x)},
-            {"aid": 1, "blob": _flac_encode(x, bps=16)},       # same clip
-            {"aid": 2, "blob": _wav_pcm16(y)},                 # different
-            {"aid": 3, "blob": b"corrupt audio bytes"},
-            # truncated WAV: the codec raises struct.error, not ValueError
-            {"aid": 4, "blob": b"RIFF\x10\x00\x00\x00WAVEfmt \x02\x00\x00\x00AB"},
-        ]
+    good = [_wav_pcm16(x), _flac_encode(x, bps=16), _wav_pcm16(y)]  # 0, 1 same clip
+    # one partition: the corrupt blobs share the good blobs' Arrow batch
+    t = Table.from_df(
+        spark.createDataFrame(
+            [
+                *({"aid": i, "blob": b} for i, b in enumerate(good)),
+                {"aid": 3, "blob": b"corrupt audio bytes"},
+                # truncated WAV: the codec raises struct.error, not ValueError
+                {"aid": 4, "blob": b"RIFF\x10\x00\x00\x00WAVEfmt \x02\x00\x00\x00AB"},
+            ]
+        ).coalesce(1),
+        name="aud",
     )
     hashes = {
         r.aid: r.audio_hash
         for r in audio_hash(t, "blob", "aid", use_fake=False, on_error="null")
     }
     assert hashes[0] == hashes[1] and hashes[3] is None and hashes[4] is None
+    # the corrupt blobs must not round the good blobs' 64-bit hashes:
+    # each equals the fingerprint of its blob alone
+    assert [hashes[i] for i in range(3)] == [audio_fingerprint(b) for b in good]
     pairs = audio_dup_pairs(
         t, "blob", "aid", max_hamming=3, use_fake=False, on_error="null"
     )

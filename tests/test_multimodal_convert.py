@@ -340,19 +340,29 @@ def test_image_hash_real_dhash_invariances(spark):
     base = rng.randint(10, 180, (16, 18, 3)).astype(np.uint8)
     shifted = (base.astype(int) + 40).clip(0, 255).astype(np.uint8)
     other = rng.randint(0, 256, (16, 18, 3)).astype(np.uint8)
-    t = Table("imgs", spark=spark)
-    t.insert_many(
-        [
-            {"id": 0, "blob": _png_encode(base, filters=[0] * 16)},
-            {"id": 1, "blob": _bmp_encode(base)},
-            {"id": 2, "blob": _png_encode(shifted, filters=[2] * 16)},
-            {"id": 3, "blob": _png_encode(other, filters=[0] * 16)},
-            {"id": 4, "blob": b"not an image"},
-        ]
+    good = [
+        {"id": 0, "blob": _png_encode(base, filters=[0] * 16)},
+        {"id": 1, "blob": _bmp_encode(base)},
+        {"id": 2, "blob": _png_encode(shifted, filters=[2] * 16)},
+        {"id": 3, "blob": _png_encode(other, filters=[0] * 16)},
+    ]
+    # one partition: the corrupt blob shares the good blobs' Arrow batch
+    t = Table.from_df(
+        spark.createDataFrame([*good, {"id": 4, "blob": b"not an image"}])
+        .coalesce(1),
+        name="imgs",
     )
     got = {
         r.id: r.img_hash
         for r in image_hash(t, "blob", "id", use_fake=False, on_error="null")
+    }
+    # the corrupt blob must not round its neighbours' 64-bit hashes:
+    # each equals its hash without the corrupt blob
+    clean = Table("imgs_ok", spark=spark)
+    clean.insert_many(good)
+    assert got == {
+        **{r.id: r.img_hash for r in image_hash(clean, "blob", "id", use_fake=False)},
+        4: None,
     }
     assert got[0] == got[1]  # container-invariant
     assert got[0] == got[2]  # brightness-invariant
